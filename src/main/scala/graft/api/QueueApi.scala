@@ -140,10 +140,10 @@ class DefaultQueueApi(
   // distinct: merge-style compaction recovery may leave duplicate rows
   // for the same claim, which must not inflate the in-flight gauge
   def pendingJobsCount(): Long =
-    store.liveProcessing.select("claim_id").distinct().count()
+    store.liveProcessing().select("claim_id").distinct().count()
 
   def pendingJobsCount(queues: Seq[String]): Long =
-    store.liveProcessing
+    store.liveProcessing()
       .where(org.apache.spark.sql.functions.col("queue").isin(queues: _*))
       .select("claim_id").distinct().count()
 

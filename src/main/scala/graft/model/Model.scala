@@ -28,8 +28,9 @@ case class GraftEvent(
     context: Map[String, String] = Map.empty)
 
 /** Result of dispatching one job to its worker. Carries the envelope
-  * forward so the outcome writer can build retry/dead rows without a
-  * join back to the batch. */
+  * and the claimed copy's source file forward, so the outcome writer
+  * builds the ack tombstone and the retry/dead rows without a join back
+  * to the batch. */
 case class Outcome(
     clazz: String,
     function: String,
@@ -40,6 +41,7 @@ case class Outcome(
     enqueued_at: Timestamp,
     context: Map[String, String],
     claim_id: String,
+    src_file: Option[String],
     success: Boolean,
     error_message: Option[String],
     error_backtrace: Option[String],

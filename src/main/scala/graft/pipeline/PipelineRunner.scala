@@ -35,6 +35,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *      offsets + idempotent writes give the reference's at-least-once
   *      contract.
   *
+  * Job budget (without a rate limit, per-job telemetry or batchSize
+  * grouping): every Spark job of a micro-batch is a table write. The
+  * stamped batch is persisted, so the claim write is the only job that
+  * reads the source files; its observed row count replaces an
+  * emptiness probe. Dispatch runs inside the ack write, which observes
+  * the retry and dead counts, and the src_file the tombstone needs rides
+  * through the typed dispatch instead of a join back to the claim. So an
+  * all-success batch costs 2 jobs (claim, ack), a batch with retries or
+  * dead letters 3, and one with both 4.
+  *
   * Pause (D1, pipeline/event.ex:41-55): durable flag; `pause()` stops
   * the query after the in-flight micro-batch drains — exactly the
   * reference's "stop fetching, let in-flight work finish". `start()`
@@ -222,23 +232,29 @@ class PipelineRunner(
 
   /** Visible for tests: run one micro-batch worth of the dataflow. */
   private[graft] def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val nowMs = System.currentTimeMillis()
     // stamp each row with the basename of the queue file it was read
     // from: claims carry it, acks inherit it, and the archiver uses it
     // as exact per-copy consumption evidence (null for rows without
     // file context, e.g. tests driving processBatch with in-memory
-    // frames — such copies are simply never archived)
+    // frames — such copies are simply never archived). Persisted once:
+    // the claim write fills the cache and dispatch reads from it, so
+    // the source files are read by one job per batch.
     val stamped = batch.withColumn("src_file",
       when(length(input_file_name()) > 0,
         regexp_extract(input_file_name(), "[^/]+$", 0))
         .otherwise(lit(null).cast("string")))
-    val admitted = admit(stamped, batchId, nowMs)
+      .persist()
+    var admitted = stamped
     try {
-      val claimed = claim(admitted, batchId, nowMs)
-      val outcomes = dispatch(claimed)
-      writeOutcomes(outcomes, claimed, nowMs)
-    } finally admitted.unpersist() // no-op when admit didn't cache
+      admitted = admit(stamped, batchId, nowMs)
+      val (claimed, n) = claim(admitted, batchId, nowMs)
+      if (n > 0) writeOutcomes(dispatch(claimed), nowMs)
+    } finally {
+      // admit caches its own frame only when the rate limit defers rows
+      if (admitted ne stamped) admitted.unpersist()
+      stamped.unpersist()
+    }
   }
 
   /** B2: sliding-window admission.
@@ -267,8 +283,10 @@ class PipelineRunner(
         def allowedNow(): Long = math.max(0L,
           limit - store.limitCountSince(cfg.limitKey,
             System.currentTimeMillis() - scale, ownSuffix))
-        var allowed = allowedNow()
         val total = batch.count()
+        // nothing to admit: never block on a closed window for it
+        if (total == 0) return batch
+        var allowed = allowedNow()
         // Two admission regimes:
         //  - SHORT windows (≤ 4 trigger intervals): a closed window
         //    BLOCKS in place — entries expire within one trigger's
@@ -360,13 +378,14 @@ class PipelineRunner(
       case _ => batch
     }
 
-  /** B1: move the batch into the processing (in-flight) set. */
-  private def claim(admitted: DataFrame, batchId: Long, nowMs: Long): DataFrame = {
+  /** B1: move the batch into the processing (in-flight) set. Returns
+    * the claimed frame and its row count, observed on the claim write
+    * (no separate emptiness probe; an empty batch publishes no file). */
+  private def claim(admitted: DataFrame, batchId: Long, nowMs: Long): (DataFrame, Long) = {
     val claimed = admitted
       .withColumn("claim_id", concat_ws(":", col("jid"), lit(batchId)))
       .withColumn("claimed_at", lit(new Timestamp(nowMs)))
-    store.append(store.processingDir, claimed, store.processingSchema)
-    claimed
+    (claimed, store.append(store.processingDir, claimed, store.processingSchema))
   }
 
   /** B5/B6 worker dispatch on executors; B3 grouping when batchSize set. */
@@ -374,7 +393,7 @@ class PipelineRunner(
     import spark.implicits._
     val timeoutMs = engine.dispatchTimeoutMs
     val events = claimed.select(
-      (Schemas.event.fieldNames :+ "claim_id").map(col).toSeq: _*)
+      (Schemas.event.fieldNames :+ "claim_id" :+ "src_file").map(col).toSeq: _*)
     // local val so the task closures capture the broadcast handle and
     // the timeout, never `this` (the runner holds the SparkSession)
     val bc = workerBc
@@ -395,23 +414,25 @@ class PipelineRunner(
     }
   }
 
-  /** B7/B8: acks, retries, dead letters — one shot of table writes. */
-  private def writeOutcomes(outcomes: Dataset[Outcome], claimed: DataFrame,
-      nowMs: Long): Unit = {
+  /** B7/B8: acks, retries, dead letters. The ack write materializes the
+    * dispatch into the cache and observes the retry and dead-letter
+    * counts on the way, so each failure write runs only when it has
+    * rows. */
+  private def writeOutcomes(outcomes: Dataset[Outcome], nowMs: Long): Unit = {
     val out = outcomes.toDF().cache()
     try {
       val now = new Timestamp(nowMs)
-      // every dispatched job leaves the in-flight set (this write also
-      // materializes the dispatch into the cache); the (id, queue,
+      val isRetry = !col("success") && col("retry_count") < engine.maxRetries
+      val isDead = !col("success") && col("retry_count") >= engine.maxRetries
+      val obs = org.apache.spark.sql.Observation()
+      // every dispatched job leaves the in-flight set; the (id, queue,
       // src_file) tombstone is the durable acked-claim record for
       // job_counts AND the archiver's per-copy consumption evidence
-      // (src_file joined back from the claim — Outcome doesn't carry it
-      // through the typed dispatch)
       store.tombstone("processing",
-        out.select(col("claim_id").as("id"), col("queue"))
-          .join(claimed.select(col("claim_id").as("id"), col("src_file")),
-            Seq("id"), "left")
-          .select(col("id"), col("queue"), col("src_file")))
+        out.observe(obs, count(when(isRetry, 1)).as("retry"), count(when(isDead, 1)).as("dead"))
+          .select(col("claim_id").as("id"), col("queue"), col("src_file")))
+      val nRetry = obs.get("retry").asInstanceOf[Long]
+      val nDead = obs.get("dead").asInstanceOf[Long]
 
       // per-job worker telemetry ([pipeline,:worker,:job],
       // event/worker.ex:57-67): the collect is metadata only — (jid,
@@ -421,35 +442,27 @@ class PipelineRunner(
           jobHandler.handleJob(cfg.name, r.getString(0), r.getDouble(1), r.getBoolean(2))
         }
 
-      // one action decides the failure path; the happy path does no
-      // further Spark jobs per micro-batch
-      val nFail = out.where(!col("success")).count()
-      if (nFail > 0)
+      if (nRetry + nDead > 0)
         graft.GraftLog.current.warn("worker failures in micro-batch",
-          Map("pipeline" -> cfg.name, "failed" -> nFail.toString))
-      if (nFail == 0) return
+          Map("pipeline" -> cfg.name, "failed" -> (nRetry + nDead).toString))
 
-      val failures = out.where(!col("success"))
-      val retries = failures.where(col("retry_count") < engine.maxRetries)
-      val dead = failures.where(col("retry_count") >= engine.maxRetries)
+      if (nRetry > 0)
+        store.appendScheduled(out.where(isRetry)
+          .withColumn("retry_count", col("retry_count") + 1)
+          .withColumn("failed_at", lit(now))
+          .withColumn("retried_at", lit(now))
+          .withColumn("finished_at", lit(null).cast("timestamp"))
+          .withColumn("sched_id", concat_ws(":", col("jid"), col("retry_count")))
+          .withColumn("not_before", timestamp_millis(lit(nowMs) +
+            Backoff.delayMsCol(col("retry_count"), engine.backoffInitialMs, engine.backoffMaxMs)))
+          .withColumn("kind", lit("retry")))
 
-      val retryRows = retries
-        .withColumn("retry_count", col("retry_count") + 1)
-        .withColumn("failed_at", lit(now))
-        .withColumn("retried_at", lit(now))
-        .withColumn("error_message", col("error_message"))
-        .withColumn("finished_at", lit(null).cast("timestamp"))
-        .withColumn("sched_id", concat_ws(":", col("jid"), col("retry_count")))
-        .withColumn("not_before", timestamp_millis(lit(nowMs) +
-          Backoff.delayMsCol(col("retry_count"), engine.backoffInitialMs, engine.backoffMaxMs)))
-        .withColumn("kind", lit("retry"))
-      store.appendScheduled(retryRows)
-
-      val deadRows = dead
-        .withColumn("failed_at", lit(now))
-        .withColumn("finished_at", lit(null).cast("timestamp"))
-        .withColumn("retried_at", lit(null).cast("timestamp"))
-      store.append(store.deadDir, deadRows, store.deadSchema)
+      if (nDead > 0)
+        store.append(store.deadDir, out.where(isDead)
+          .withColumn("failed_at", lit(now))
+          .withColumn("finished_at", lit(null).cast("timestamp"))
+          .withColumn("retried_at", lit(null).cast("timestamp")),
+          store.deadSchema)
     } finally out.unpersist()
   }
 }
@@ -554,16 +567,16 @@ object PipelineRunner extends Serializable {
   }
 }
 
-/** GraftEvent + its claim id, as dispatched. */
+/** GraftEvent + its claim id and source file, as dispatched. */
 case class ClaimedEvent(
     clazz: String, function: String, queue: String, jid: String,
     args: String, retry_count: Int, enqueued_at: Timestamp,
     finished_at: Option[Timestamp], failed_at: Option[Timestamp],
     retried_at: Option[Timestamp], error_message: Option[String],
     error_backtrace: Option[String], context: Map[String, String],
-    claim_id: String) {
+    claim_id: String, src_file: Option[String]) {
   def toOutcome(success: Boolean, error: Option[String],
       backtrace: Option[String] = None, durationMs: Double = 0.0): Outcome =
     Outcome(clazz, function, queue, jid, args, retry_count, enqueued_at,
-      context, claim_id, success, error, backtrace, durationMs)
+      context, claim_id, src_file, success, error, backtrace, durationMs)
 }

@@ -63,21 +63,28 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** Layout fingerprint of the table: every plain file under the path
-    * (recursive — partition subdirs included), by name, size and mtime.
-    * A rewrite that swaps files in place without bumping the DIRECTORY
-    * mtime still changes this stamp, so the decision re-probes; keying
-    * on the dir mtime alone missed exactly that case. */
+    * (recursive — partition subdirs included), by path relative to the
+    * table root, size and mtime. A rewrite that swaps files in place
+    * without bumping the DIRECTORY mtime still changes this stamp, so
+    * the decision re-probes (keying on the dir mtime alone missed that
+    * case), and so does a file moved between partition subdirs under
+    * the same name, size and mtime. The entries are sorted, so OS
+    * listing order cannot move the key, and the whole listing is hashed
+    * into 64 bits (two seeded 32-bit hashes): unlike a sum of per-file
+    * hashes, no two entries can cancel each other out. */
   private[graft] def layoutStamp(root: java.io.File): Long = {
     def walk(d: java.io.File): Iterator[java.io.File] = {
       val cs = Option(d.listFiles()).map(_.iterator).getOrElse(Iterator.empty)
       cs.flatMap(c => if (c.isDirectory) walk(c) else Iterator.single(c))
     }
     val files = if (root.isDirectory) walk(root) else Iterator.single(root)
-    // order-insensitive combine so OS listing order cannot move the key
-    files.map { c =>
-      scala.util.hashing.MurmurHash3
-        .stringHash(s"${c.getName}@${c.length}@${c.lastModified}").toLong
-    }.sum
+    val base = root.toPath
+    val listing = files.map { c =>
+      s"${base.relativize(c.toPath)}@${c.length}@${c.lastModified}"
+    }.toVector.sorted.mkString("\n")
+    val hi = scala.util.hashing.MurmurHash3.stringHash(listing, 0x3c074a61)
+    val lo = scala.util.hashing.MurmurHash3.stringHash(listing, 0x1b873593)
+    (hi.toLong << 32) | (lo & 0xffffffffL)
   }
 
   private def needsFloor(df: DataFrame, path: String, target: Int): Boolean = {

@@ -21,9 +21,32 @@ import org.apache.spark.sql.functions._
   * (manager.ex:218-220). Deterministic ids keep replays idempotent.
   *
   * `tick()` is the unit of work (tests call it directly); `start()`
-  * runs it on the reference's 10 s cadence. At scale this is a tiny
-  * job: the scheduled table is partition-pruned on not_before and the
-  * moves touch only due rows.
+  * runs it on the reference's 10 s cadence.
+  *
+  * Skip rule. Each move first lists its table's live files
+  * (`QueueStore.dataFiles`, driver-side) and skips the scan — zero
+  * Spark jobs — when the listing equals the one the last completed
+  * scan read AND `now` is before the bound that scan observed:
+  *
+  *   - promotion: the earliest `not_before` still in the future, capped
+  *     at the start of the next `nb_day` (later days are pruned away,
+  *     unseen);
+  *   - requeue: the oldest live `claimed_at` + the visibility timeout.
+  *
+  * The skip is exact: rows only arrive as new files and a compaction
+  * commits a new listing, while tombstones only remove rows, so a
+  * stored bound stays conservative. An empty listing costs nothing.
+  * Only a scan that completes updates the state, and a requeue (which
+  * includes hitting the batch cap) clears it, so the next tick scans.
+  * The bound is absolute: a tick at a later `now` past it scans.
+  *
+  * A tick renews the store's ownership lease before either move, so an
+  * idle engine keeps its lease although its ticks read nothing.
+  *
+  * Job budget: an idle tick costs 0 Spark jobs; a promoting tick 5 (the
+  * snapshot write — its tombstone broadcast and dedup shuffle — then
+  * the queue append and the tombstone), plus the requeue scan when the
+  * processing table changed since its last scan.
   */
 class Housekeeper(
     store: QueueStore,
@@ -34,8 +57,17 @@ class Housekeeper(
 
   private var exec: Option[ScheduledExecutorService] = None
 
-  def tick(nowMs: Long = System.currentTimeMillis()): (Long, Long) =
+  import Housekeeper.Scanned
+  @volatile private var promoteScan: Option[Scanned] = None
+  @volatile private var requeueScan: Option[Scanned] = None
+
+  /** Both moves. The ownership lease is renewed first: a skipped scan
+    * reads no table, and the lease must not lapse while the engine is
+    * idle (renewal is throttled in the store and runs no Spark job). */
+  def tick(nowMs: Long = System.currentTimeMillis()): (Long, Long) = {
+    store.maybeRenewLease()
     (promoteDue(nowMs), requeueStuck(nowMs))
+  }
 
   /** C1: scheduled/retry rows with not_before <= now → queue dirs.
     *
@@ -44,21 +76,31 @@ class Housekeeper(
     * the selection is snapshotted so the enqueue and the tombstone act
     * on ONE set, and the enqueue is a SINGLE dynamic-partition job
     * fanning out to all destination queues (grouped RPUSH,
-    * redis/job.ex:70-87) instead of one Spark job per queue. */
+    * redis/job.ex:70-87) instead of one Spark job per queue. The due
+    * count and the next due instant are observed on the snapshot
+    * write. */
   def promoteDue(nowMs: Long): Long = {
+    val files = store.dataFiles(store.scheduledDir)
+    if (files.isEmpty || promoteScan.exists(_.covers(files, nowMs))) return 0L
     val tz = java.time.ZoneId.of(store.spark.sessionState.conf.sessionLocalTimeZone)
-    val dayCutoff = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd")
-      .withZone(tz).format(java.time.Instant.ofEpochMilli(nowMs))
-    val due = store.liveScheduled
-      .where(col("nb_day") <= dayCutoff && // partition pruning
-        col("not_before") <= lit(new Timestamp(nowMs)))
+    val today = java.time.Instant.ofEpochMilli(nowMs).atZone(tz).toLocalDate
+    val nextDayMs = today.plusDays(1).atStartOfDay(tz).toInstant.toEpochMilli
+    val isDue = col("not_before") <= lit(new Timestamp(nowMs))
+    val obs = org.apache.spark.sql.Observation()
+    val due = store.liveScheduled(files)
+      .where(col("nb_day") <= today.toString) // partition pruning
+      .observe(obs, count(when(isDue, 1)).as("n"),
+        min(when(!isDue, col("not_before"))).as("next"))
+      .where(isDue)
     val (snap, cleanup) = store.snapshot(due)
     try {
-      val n = snap.count()
+      val n = obs.get("n").asInstanceOf[Long]
       if (n > 0) {
         store.appendToQueues(snap)
         store.tombstone("scheduled", snap.select(col("sched_id")))
       }
+      val next = Option(obs.get("next")).fold(Long.MaxValue)(_.asInstanceOf[Timestamp].getTime)
+      promoteScan = Some(Scanned(files.toSet, math.min(next, nextDayMs)))
       n
     } finally cleanup()
   }
@@ -72,14 +114,24 @@ class Housekeeper(
     * micro-batch share an identical claimed_at, so without both, a
     * recomputed plan between the queue append and the claim tombstone
     * could pick a different subset — a claim tombstoned without being
-    * requeued is a lost job. */
+    * requeued is a lost job. The oldest live claim is observed on the
+    * same collect. */
   def requeueStuck(nowMs: Long): Long = {
+    val files = store.dataFiles(store.processingDir)
+    if (files.isEmpty || requeueScan.exists(_.covers(files, nowMs))) return 0L
     val cutoff = new Timestamp(nowMs - visibilityTimeoutMs)
-    val selected = store.liveProcessing
+    val obs = org.apache.spark.sql.Observation()
+    val selected = store.liveProcessing(files)
+      .observe(obs, min(col("claimed_at")).as("oldest"))
       .where(col("claimed_at") < lit(cutoff))
       .orderBy(col("claimed_at"), col("claim_id"))
       .limit(requeueBatchLimit)
       .collect()
+    // a requeue (or a full batch cap) leaves the state clear: scan again
+    requeueScan =
+      if (selected.nonEmpty) None
+      else Some(Scanned(files.toSet, Option(obs.get("oldest"))
+        .fold(Long.MaxValue)(_.asInstanceOf[Timestamp].getTime + visibilityTimeoutMs)))
     if (selected.isEmpty) return 0L
     val spark = store.spark
     val stuck = spark.createDataFrame(
@@ -165,4 +217,13 @@ class Housekeeper(
   def maybeCompact(): Boolean =
     autoCompact &&
       store.tryMaintenance(compactStateTables(autoCompactMinTombstones)).isDefined
+}
+
+object Housekeeper {
+  /** The listing the last completed scan of a table read, and the
+    * instant before which re-scanning it can find nothing to move. */
+  private final case class Scanned(files: Set[String], quietUntilMs: Long) {
+    def covers(listing: Seq[String], nowMs: Long): Boolean =
+      nowMs < quietUntilMs && listing.toSet == files
+  }
 }

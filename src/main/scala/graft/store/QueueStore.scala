@@ -202,8 +202,11 @@ class QueueStore(val spark: SparkSession, val root: String,
   }
 
   /** The live data files of a state-table dir: everything listed minus
-    * what the manifest marks replaced. Absolute paths. */
-  private def resolveDataFiles(dir: String): Seq[String] = {
+    * what the manifest marks replaced. Absolute paths. Driver-side
+    * listing only, no Spark job: an append (a new file) or a committed
+    * compaction changes it, a tombstone does not — which is what lets
+    * the housekeeper skip re-scanning an unchanged table. */
+  def dataFiles(dir: String): Seq[String] = {
     val replaced = readManifest(dir).map(_.replaced).getOrElse(Set.empty)
     listPartFilesRec(dir).collect {
       case (rel, st) if !replaced(rel) => st.getPath.toString
@@ -272,9 +275,12 @@ class QueueStore(val spark: SparkSession, val root: String,
     * committed snapshot (also in this listing), so dropping it is
     * correct, and for pre-compaction plans at worst a transient
     * undercount on a periodic pass. */
-  def readOrEmpty(dir: String, schema: StructType): DataFrame = {
+  def readOrEmpty(dir: String, schema: StructType): DataFrame =
+    readFiles(dataFiles(dir), schema)
+
+  /** readOrEmpty over exactly `files` (a [[dataFiles]] listing). */
+  private def readFiles(files: Seq[String], schema: StructType): DataFrame = {
     maybeRenewLease()
-    val files = resolveDataFiles(dir)
     if (files.nonEmpty)
       spark.read.schema(schema).option("ignoreMissingFiles", "true").parquet(files: _*)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -308,14 +314,22 @@ class QueueStore(val spark: SparkSession, val root: String,
     * engine has concurrent writers per directory (multiple pipelines
     * claiming into `processing/`, enqueuers + housekeeper on a queue
     * dir) and they would share one `_temporary/0` committer dir, where
-    * one job's cleanup deletes the other's in-flight task files. */
-  def append(dir: String, df: DataFrame, schema: StructType): Unit = {
+    * one job's cleanup deletes the other's in-flight task files.
+    *
+    * Returns the number of rows written, counted by an observe() on the
+    * write itself (no extra Spark job). A write of no rows publishes no
+    * file, so an empty append leaves the table's listing untouched. */
+  def append(dir: String, df: DataFrame, schema: StructType): Long = {
     maybeRenewLease()
+    val obs = org.apache.spark.sql.Observation()
     val staging = s"$root/.staging/${java.util.UUID.randomUUID()}"
     df.select(schema.fieldNames.map(col).toSeq: _*)
+      .observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(staging)
-    moveStagedPartsIn(staging, new Path(dir))
+    val n = obs.get("n").asInstanceOf[Long]
+    if (n > 0) moveStagedPartsIn(staging, new Path(dir))
     fs.delete(new Path(staging), true)
+    n
   }
 
   /** Move every staged part file into `target` under fresh stamped
@@ -454,10 +468,10 @@ class QueueStore(val spark: SparkSession, val root: String,
   /** Partition-discovering read of the scheduled table (nb_day comes
     * from the dir names; filters on it show as PartitionFilters).
     * Manifest-aware: live files only, resolved against basePath so the
-    * partition column still derives from the paths. */
-  def readScheduled: DataFrame = {
+    * partition column still derives from the paths. Reads exactly
+    * `files` (a [[dataFiles]] listing). */
+  private def readScheduled(files: Seq[String]): DataFrame = {
     maybeRenewLease()
-    val files = resolveDataFiles(scheduledDir)
     if (files.nonEmpty)
       spark.read.option("basePath", scheduledDir)
         .option("ignoreMissingFiles", "true")
@@ -510,8 +524,7 @@ class QueueStore(val spark: SparkSession, val root: String,
   }
 
   /** rows minus tombstones; idCol names the row's tombstone key. */
-  def live(dir: String, table: String, schema: StructType, idCol: String): DataFrame = {
-    val rows = readOrEmpty(dir, schema)
+  private def minusTombs(rows: DataFrame, dir: String, table: String, idCol: String): DataFrame = {
     val tombs = readTombsInForce(dir, table)
     rows.join(broadcast(tombs), rows(idCol) === tombs("id"), "left_anti")
   }
@@ -624,7 +637,7 @@ class QueueStore(val spark: SparkSession, val root: String,
     * (PartitionFilters) instead of footer-scanning years of history.
     * The analytics/audit path; the pipeline itself streams the glob. */
   def queueHistory(q: String): DataFrame = {
-    val files = resolveDataFiles(queueDir(q))
+    val files = dataFiles(queueDir(q))
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], eventSchemaP)
     else spark.read.option("basePath", queueDir(q))
@@ -635,22 +648,22 @@ class QueueStore(val spark: SparkSession, val root: String,
     * scheduled-table append replays and re-appends the same
     * deterministic sched_id; without the dedupe, promoteDue would
     * enqueue both copies — double execution of the retry. Carries the
-    * nb_day partition column so callers' date predicates prune. */
-  def liveScheduled: DataFrame = {
-    val rows = readScheduled
-    val tombs = readTombsInForce(scheduledDir, "scheduled")
-    rows.join(broadcast(tombs), rows("sched_id") === tombs("id"), "left_anti")
+    * nb_day partition column so callers' date predicates prune.
+    * Reads exactly `files` (a [[dataFiles]] listing, the live one by
+    * default): the housekeeper scans the listing it compares against
+    * next tick. */
+  def liveScheduled(files: Seq[String] = dataFiles(scheduledDir)): DataFrame =
+    minusTombs(readScheduled(files), scheduledDir, "scheduled", "sched_id")
       .dropDuplicates("sched_id")
-  }
   /** Deduped on claim_id: a replayed micro-batch re-appends the same
     * deterministic claim ids (duplicate rows differ only in
     * claimed_at), and a compaction interrupted between snapshot move-in
     * and manifest commit leaves the snapshot's copies beside the
     * originals — in both cases one copy per claim is the truth, and
     * without the dedupe requeueStuck would requeue a stuck claim once
-    * per copy. */
-  def liveProcessing: DataFrame =
-    live(processingDir, "processing", processingSchema, "claim_id")
+    * per copy. Reads exactly `files`, as liveScheduled. */
+  def liveProcessing(files: Seq[String] = dataFiles(processingDir)): DataFrame =
+    minusTombs(readFiles(files, processingSchema), processingDir, "processing", "claim_id")
       .dropDuplicates("claim_id")
   /** Deduped on jid for the same replayed-append reason as
     * liveScheduled (jid is the dead row's natural identity). */
@@ -1376,7 +1389,7 @@ class QueueStore(val spark: SparkSession, val root: String,
   // Cross host (shared filesystem, where pid liveness means nothing):
   // the lock doubles as an MTIME LEASE. Every data-touching operation
   // re-stamps it at most once per leaseTimeoutMs/3 (the engine's
-  // housekeeper due-scan renews it every tick even when idle); a
+  // housekeeper tick renews it even when it skips its scans); a
   // foreign-host lock younger than leaseTimeoutMs is refused, an older
   // one is a crashed/partitioned owner and is taken over. The renewal
   // itself re-reads the lock first: if another host (or another live

@@ -58,26 +58,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     api.bulkEnqueue("rq", (1 to 3).map(i => JobSpec("FailWorker", args = s"[$i]")))
 
     runner.processBatch(store.queueRows("rq"), 0)
-    val retry1 = store.liveScheduled
+    val retry1 = store.liveScheduled()
     assert(retry1.count() === 3)
     assert(retry1.where(col("kind") === "retry").count() === 3)
     assert(retry1.where(col("retry_count") === 1).count() === 3)
     assert(retry1.where(col("error_message").contains("boom")).count() === 3)
-    assert(store.liveProcessing.count() === 0) // claims tombstoned
+    assert(store.liveProcessing().count() === 0) // claims tombstoned
     assert(store.deadRows.count() === 0)
 
     // C1: promote due retries (backoff is 1-2ms; move clock forward)
     assert(hk.promoteDue(System.currentTimeMillis() + 1000) === 3)
-    assert(store.liveScheduled.count() === 0)
+    assert(store.liveScheduled().count() === 0)
     runner.processBatch(store.queueRows("rq").where(col("retry_count") === 1), 1)
-    assert(store.liveScheduled.where(col("retry_count") === 2).count() === 3)
+    assert(store.liveScheduled().where(col("retry_count") === 2).count() === 3)
 
     assert(hk.promoteDue(System.currentTimeMillis() + 2000) === 3)
     runner.processBatch(store.queueRows("rq").where(col("retry_count") === 2), 2)
     // retry_count 2 >= maxRetries 2 → dead letter
     assert(store.deadRows.count() === 3)
-    assert(store.liveScheduled.count() === 0)
-    assert(store.liveProcessing.count() === 0)
+    assert(store.liveScheduled().count() === 0)
+    assert(store.liveProcessing().count() === 0)
   }
 
   test("rate-limited admission defers overflow and rebuilds window from disk (B2)") {
@@ -98,7 +98,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     // trigger returns without sleeping out the window
     assert(elapsed < 30000, s"long-window admission blocked ${elapsed} ms")
     assert(store.queueRows("lim").count() === 25)
-    val parked = store.liveScheduled.where(col("kind") === "deferred")
+    val parked = store.liveScheduled().where(col("kind") === "deferred")
     assert(parked.count() === 15)
     // parked jobs count like scheduled jobs (not queued) until promoted
     assert(api.jobCounts(Seq("lim"))("lim") === 0)
@@ -129,7 +129,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(System.currentTimeMillis() - t1 < 20000,
       "closed long window must not block the trigger")
     assert(Buffers.echo.size === 10) // nothing admitted through the closed window
-    assert(store.liveScheduled
+    assert(store.liveScheduled()
       .where(col("kind") === "deferred" && col("queue") === "lim2").count() === 5)
   }
 
@@ -254,7 +254,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(chunks.length === 2) // producer_consumer_test.exs:57-61 shape
     assert(chunks.forall(_.size === 2))
     assert(chunks.flatten.toSet === Set("[1]", "[2]", "[3]", "[4]"))
-    assert(store.liveProcessing.count() === 0)
+    assert(store.liveProcessing().count() === 0)
   }
 
   test("rapid enqueue batches drain FIFO: monotonic names + forced mtime stamps (E1)") {
@@ -307,7 +307,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
       PipelineConfig("bp2", "bq2", batchSize = Some(3)))
     api.bulkEnqueue("bq2", (1 to 3).map(i => JobSpec("BadBulk", args = s"[$i]")))
     runner.processBatch(store.queueRows("bq2"), 0)
-    assert(store.liveScheduled.where(col("kind") === "retry").count() === 3)
+    assert(store.liveScheduled().where(col("kind") === "retry").count() === 3)
   }
 
   test("durable pause persists and blocks start; resume restarts (D1)") {
@@ -391,7 +391,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(distinctSeen.size === 20) // no loss
     assert(seen.size >= 20) // replays allowed, loss is not
     assert(api.jobCounts(Seq("rcq"))("rcq") === 0) // distinct-claim arithmetic
-    assert(store.liveProcessing.count() === 0)
+    assert(store.liveProcessing().count() === 0)
     assert(store.deadRows.count() === 0)
   }
 
@@ -407,7 +407,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
       PipelineConfig("bt_p", "btq", batchSize = Some(3)),
       EngineConfig(dispatchTimeoutMs = 150, backoffInitialMs = 1, backoffMaxMs = 2))
     runner.processBatch(store.queueRows("btq"), 0)
-    assert(store.liveScheduled.count() === 0) // no retry rows — no timeout
+    assert(store.liveScheduled().count() === 0) // no retry rows — no timeout
     assert(api.jobCounts(Seq("btq"))("btq") === 0)
   }
 
@@ -427,10 +427,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     runner.processBatch(store.queueRows("hq2"), 0)
     // the live jobs all ran — the hung one did not wedge the batch
     assert(Buffers.echo.size === 3)
-    val retry = store.liveScheduled
+    val retry = store.liveScheduled()
     assert(retry.count() === 1)
     assert(retry.collect().head.getAs[String]("error_message").contains("timed out"))
-    assert(store.liveProcessing.count() === 0) // every claim tombstoned
+    assert(store.liveProcessing().count() === 0) // every claim tombstoned
   }
 
   test("failed jobs carry error backtrace into the retry table (B8)") {
@@ -440,7 +440,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     val runner = new PipelineRunner(store, PipelineConfig("tp", "tq"))
     api.enqueue("tq", JobSpec("TraceWorker"))
     runner.processBatch(store.queueRows("tq"), 0)
-    val row = store.liveScheduled.collect().head
+    val row = store.liveScheduled().collect().head
     assert(row.getAs[String]("error_message").contains("trace me"))
     assert(row.getAs[String]("error_backtrace") != null)
     assert(row.getAs[String]("error_backtrace").contains("graft"))
@@ -473,10 +473,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     try {
       val deadline = System.currentTimeMillis() + 20000
       // promotion is enqueue-then-tombstone (two writes): wait for both
-      while ((store.queueRows("hq").count() == 0 || store.liveScheduled.count() > 0) &&
+      while ((store.queueRows("hq").count() == 0 || store.liveScheduled().count() > 0) &&
         System.currentTimeMillis() < deadline) Thread.sleep(100)
       assert(store.queueRows("hq").count() === 1)
-      assert(store.liveScheduled.count() === 0)
+      assert(store.liveScheduled().count() === 0)
     } finally hk.stop()
   }
 
@@ -711,7 +711,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     val tz = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
     val day = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd")
       .withZone(tz).format(java.time.Instant.ofEpochMilli(now))
-    val due = store.liveScheduled.where(col("nb_day") <= day &&
+    val due = store.liveScheduled().where(col("nb_day") <= day &&
       col("not_before") <= lit(new java.sql.Timestamp(now)))
     val plan = due.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("nb_day"))
@@ -720,7 +720,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     val hk = new Housekeeper(store)
     assert(hk.promoteDue(System.currentTimeMillis()) === 1)
     assert(store.queueRows("spq").count() === 1)
-    assert(store.liveScheduled.count() === 1) // far-future row untouched
+    assert(store.liveScheduled().count() === 1) // far-future row untouched
   }
 
   test("visibility timeout requeues stuck claims (C2)") {
@@ -739,7 +739,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     val (_, requeued) = hk.tick()
     assert(requeued === 5)
     assert(store.queueRows("vq").count() === 10) // 5 original + 5 requeued
-    assert(store.liveProcessing.count() === 0)
+    assert(store.liveProcessing().count() === 0)
     // D2 arithmetic stays consistent: 10 enqueued - 5 claims = 5 pending
     assert(api.jobCounts(Seq("vq"))("vq") === 5)
   }

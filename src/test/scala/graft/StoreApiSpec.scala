@@ -27,7 +27,7 @@ class StoreApiSpec extends AnyFunSuite {
     val api = new DefaultQueueApi(store)
     val t0 = System.currentTimeMillis()
     api.enqueueIn("later", 60000, JobSpec("EchoWorker"))
-    val row = store.liveScheduled.collect().head
+    val row = store.liveScheduled().collect().head
     assert(row.getAs[String]("queue") === "later")
     assert(row.getAs[String]("kind") === "scheduled")
     val nb = row.getAs[java.sql.Timestamp]("not_before").getTime
@@ -45,15 +45,15 @@ class StoreApiSpec extends AnyFunSuite {
       .withColumn("claimed_at", current_timestamp())
       .withColumn("src_file", lit(null).cast("string"))
     store.append(store.processingDir, two, store.processingSchema)
-    assert(store.liveProcessing.count() === 2)
-    val victim = store.liveProcessing.select("claim_id").orderBy("claim_id").limit(1)
+    assert(store.liveProcessing().count() === 2)
+    val victim = store.liveProcessing().select("claim_id").orderBy("claim_id").limit(1)
     store.tombstone("processing", victim)
-    assert(store.liveProcessing.count() === 1)
+    assert(store.liveProcessing().count() === 1)
     // idempotent re-apply: same tombstone again changes nothing
     store.tombstone("processing", victim)
-    assert(store.liveProcessing.count() === 1)
+    assert(store.liveProcessing().count() === 1)
     store.compact(store.processingDir, "processing", store.processingSchema, "claim_id")
-    assert(store.liveProcessing.count() === 1)
+    assert(store.liveProcessing().count() === 1)
     assert(spark.read.parquet(store.processingDir).count() === 1)
   }
 
@@ -114,16 +114,16 @@ class StoreApiSpec extends AnyFunSuite {
     // ack 15 of 20 — processing tombstones must carry the queue (they
     // are the durable acked-claim record job_counts reads post-compaction)
     store.tombstone("processing",
-      store.liveProcessing.select(col("claim_id"), col("queue"))
+      store.liveProcessing().select(col("claim_id"), col("queue"))
         .orderBy("claim_id").limit(15))
-    assert(store.liveProcessing.count() === 5)
+    assert(store.liveProcessing().count() === 5)
     assert(api.jobCounts(Seq("cq"))("cq") === 0) // all 20 claimed
     val hk = new graft.scheduler.Housekeeper(store)
     hk.compactStateTables(minTombstones = 100) // below threshold: no-op
     assert(spark.read.parquet(store.processingDir).count() === 20)
     hk.compactStateTables(minTombstones = 10) // above: folds
     assert(spark.read.parquet(store.processingDir).count() === 5)
-    assert(store.liveProcessing.count() === 5)
+    assert(store.liveProcessing().count() === 5)
     // the folded claim history must survive compaction: backlog stays 0
     assert(api.jobCounts(Seq("cq"))("cq") === 0)
   }
@@ -139,7 +139,7 @@ class StoreApiSpec extends AnyFunSuite {
       .withColumn("src_file", lit(null).cast("string"))
     store.append(store.processingDir, claimed, store.processingSchema)
     store.tombstone("processing",
-      store.liveProcessing.select(col("claim_id"), col("queue"))
+      store.liveProcessing().select(col("claim_id"), col("queue"))
         .orderBy("claim_id").limit(15))
     assert(spark.read.parquet(store.processingDir).count() === 20)
 
@@ -154,12 +154,12 @@ class StoreApiSpec extends AnyFunSuite {
     try {
       assert(hk.maybeCompact(), "tick-path compaction deferred under a live query")
       assert(spark.read.parquet(store.processingDir).count() === 5)
-      assert(store.liveProcessing.count() === 5)
+      assert(store.liveProcessing().count() === 5)
       assert(api.jobCounts(Seq("acq"))("acq") === 0) // folded history preserved
     } finally { runner.stop(); q.awaitTermination(30000) }
     // the off switch: autoCompact = false skips the tick path entirely
     store.tombstone("processing",
-      store.liveProcessing.select(col("claim_id"), col("queue"))
+      store.liveProcessing().select(col("claim_id"), col("queue"))
         .orderBy("claim_id").limit(3))
     val hkOff = new graft.scheduler.Housekeeper(store,
       autoCompactMinTombstones = 0, autoCompact = false)
@@ -167,7 +167,7 @@ class StoreApiSpec extends AnyFunSuite {
     assert(spark.read.parquet(store.processingDir).count() === 5, "off switch ignored")
     // ...while manual compaction stays available
     hkOff.compactStateTables(minTombstones = 0)
-    assert(store.liveProcessing.count() === 2)
+    assert(store.liveProcessing().count() === 2)
   }
 
   test("compaction commit is invisible mid-protocol: duplicates dedup, grace-window reads exclude replaced") {
@@ -184,7 +184,7 @@ class StoreApiSpec extends AnyFunSuite {
       .withColumn("src_file", lit(null).cast("string"))
     store.append(store.processingDir, claimed, store.processingSchema)
     store.tombstone("processing",
-      store.liveProcessing.select(col("claim_id"), col("queue"))
+      store.liveProcessing().select(col("claim_id"), col("queue"))
         .orderBy("claim_id").limit(6))
     // crash-state A: snapshot files moved in but no manifest committed
     // (simulated by copying a live part file under a fresh part- name):
@@ -195,11 +195,11 @@ class StoreApiSpec extends AnyFunSuite {
     org.apache.hadoop.fs.FileUtil.copy(fs, aPart, fs,
       new org.apache.hadoop.fs.Path(store.processingDir, "part-9999999999999-dup-0.parquet"),
       false, spark.sparkContext.hadoopConfiguration)
-    assert(store.liveProcessing.count() === 4, "pre-commit duplicate copies leaked into reads")
+    assert(store.liveProcessing().count() === 4, "pre-commit duplicate copies leaked into reads")
     // a real commit now: physical files KEEP the old copies (grace) but
     // manifest-aware reads see exactly the folded table
     store.compactProcessing()
-    assert(store.liveProcessing.count() === 4)
+    assert(store.liveProcessing().count() === 4)
     assert(spark.read.parquet(store.processingDir).count() > 4,
       "superseded files deleted before the grace period")
     assert(store.readOrEmpty(store.processingDir, store.processingSchema).count() === 4,
@@ -208,7 +208,7 @@ class StoreApiSpec extends AnyFunSuite {
     // GC at boot — only the committed snapshot remains on disk
     val store2 = new QueueStore(spark, root, compactionGraceMs = 0)
     assert(spark.read.parquet(store2.processingDir).count() === 4)
-    assert(store2.liveProcessing.count() === 4)
+    assert(store2.liveProcessing().count() === 4)
   }
 
   test("second live driver on the same root is refused; stale locks are taken over (E3)") {
@@ -288,9 +288,9 @@ class StoreApiSpec extends AnyFunSuite {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(store.processingDir),
       new org.apache.hadoop.fs.Path(store.processingDir + ".compact.old"))
-    assert(store.liveProcessing.count() === 0) // table looks gone...
+    assert(store.liveProcessing().count() === 0) // table looks gone...
     store.recoverCompaction(store.processingDir)
-    assert(store.liveProcessing.count() === 5) // ...but nothing was lost
+    assert(store.liveProcessing().count() === 5) // ...but nothing was lost
   }
 
   test("claim fold: counts unchanged across compaction + fold + repeat folds") {
@@ -488,7 +488,7 @@ class StoreApiSpec extends AnyFunSuite {
       .withColumn("src_file", lit(null).cast("string"))
     store.append(store.processingDir, claimed, store.processingSchema)
     store.tombstone("processing",
-      store.liveProcessing.select(col("claim_id"), col("queue")).orderBy("claim_id").limit(5))
+      store.liveProcessing().select(col("claim_id"), col("queue")).orderBy("claim_id").limit(5))
     // age every processing part file far past the grace period —
     // simulating a table that accumulated for hours before compacting
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -502,7 +502,7 @@ class StoreApiSpec extends AnyFunSuite {
       .map(_.getPath.getName).toSet
     assert(preFiles.map(_.getPath.getName).forall(post),
       "superseded files GC'd immediately despite the grace period (grace ran from file age)")
-    assert(store.liveProcessing.count() === 3)
+    assert(store.liveProcessing().count() === 3)
   }
 
   test("applied tombstones do not re-trigger or re-run processing compaction") {
@@ -517,11 +517,11 @@ class StoreApiSpec extends AnyFunSuite {
       .withColumn("src_file", lit(null).cast("string"))
     store.append(store.processingDir, claimed, store.processingSchema)
     store.tombstone("processing",
-      store.liveProcessing.select(col("claim_id"), col("queue")).orderBy("claim_id").limit(6))
+      store.liveProcessing().select(col("claim_id"), col("queue")).orderBy("claim_id").limit(6))
     val hk = new graft.scheduler.Housekeeper(store)
     assert(store.tombstoneRowCountUnabsorbed(store.processingDir, "processing") === 6)
     hk.compactStateTables(minTombstones = 5) // folds: 6 unabsorbed >= 5
-    assert(store.liveProcessing.count() === 4)
+    assert(store.liveProcessing().count() === 4)
     // the kept (applied) tombstones remain in force for reads but no
     // longer count toward the trigger...
     assert(store.tombstoneRowCountUnabsorbed(store.processingDir, "processing") === 0)
@@ -536,10 +536,10 @@ class StoreApiSpec extends AnyFunSuite {
     // new acks re-arm the trigger and the fold applies ALL in-force
     // tombstones (old applied + new) to the fresh snapshot
     store.tombstone("processing",
-      store.liveProcessing.select(col("claim_id"), col("queue")).orderBy("claim_id").limit(2))
+      store.liveProcessing().select(col("claim_id"), col("queue")).orderBy("claim_id").limit(2))
     assert(store.tombstoneRowCountUnabsorbed(store.processingDir, "processing") === 2)
     hk.compactStateTables(minTombstones = 1)
-    assert(store.liveProcessing.count() === 2)
+    assert(store.liveProcessing().count() === 2)
     assert(store.tombstoneRowCountUnabsorbed(store.processingDir, "processing") === 0)
   }
 

@@ -56,4 +56,24 @@ class TablesFloorSpec extends AnyFunSuite {
     val b = Tables.t(spark, root.getAbsolutePath, "t2").rdd.getNumPartitions
     assert(a == b)
   }
+
+  test("a file moved between partition subdirs under the same name, size and mtime changes the stamp") {
+    val root = new java.io.File(TestSpark.tmpRoot("tfloor3"))
+    val tbl = new java.io.File(root, "t3.parquet")
+    (1 to 40).map(i => (i.toLong, i % 2)).toDF("id", "p")
+      .repartition(1).write.partitionBy("p").parquet(tbl.getAbsolutePath)
+    // one write names its files alike in every partition, so the file
+    // moves into a partition dir of its own
+    val f = new java.io.File(tbl, "p=0").listFiles().filter(_.getName.endsWith(".parquet")).head
+    val (size, mtime) = (f.length, f.lastModified)
+    val before = Tables.layoutStamp(tbl)
+    val to = new java.io.File(tbl, "p=2")
+    assert(to.mkdir())
+    val moved = new java.io.File(to, f.getName)
+    java.nio.file.Files.move(f.toPath, moved.toPath)
+    assert(moved.setLastModified(mtime), "mtime pin must succeed")
+    assert(moved.length == size && moved.lastModified == mtime)
+    assert(Tables.layoutStamp(tbl) != before,
+      "same name/size/mtime in another partition is a different layout")
+  }
 }
