@@ -475,7 +475,6 @@ object Multimodal {
   }
 
   def decodeMeta(withPayloads: DataFrame, codec: Codec = StubCodec): DataFrame = {
-    val spark = withPayloads.sparkSession
     val rows: Dataset[Row] = withPayloads.select(
       col("doc_id"), col("media_type"), col("payload"))
     implicit val enc: org.apache.spark.sql.Encoder[Row] =

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.queries.DedupQueries
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.operators.SegmentLog.{fs, presentSegs}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -119,9 +120,6 @@ object DeltaIngest {
     Seq("bands", "members", "keepers", "train_meta", "train_grams",
       "holdout_grams", "clean_delta")
 
-  private def fs(s: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
   /** True once [[buildIndex]] has completed for this run dir. */
   def indexed(s: SparkSession, outDir: String): Boolean =
     CurationRun.exists(s, s"${idxDir(outDir)}/index_meta.parquet/_SUCCESS")
@@ -205,12 +203,8 @@ object DeltaIngest {
       .filterNot { st =>
         val n = st.getPath.getName; n.startsWith("_") || n.startsWith(".")
       }
-      .flatMap { st =>
-        val in = f.open(st.getPath)
-        val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-        txt.toLongOption.map(st.getPath -> _)
-      }
+      .flatMap(st =>
+        SegmentLog.readSmallFile(s, st.getPath.toString).toLongOption.map(st.getPath -> _))
   }
 
   /** Segment numbers of COMMITTED batches (consolidated map + any
@@ -220,15 +214,6 @@ object DeltaIngest {
     val segs = (readKeysMap(s, outDir).valuesIterator ++
       singleMarkers(s, outDir).iterator.map(_._2)).filter(_ > 0).toSet
     segs + 0L
-  }
-
-  private def presentSegs(s: SparkSession, root: String): Seq[Long] = {
-    val p = new Path(root)
-    val f = fs(s, p)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg="))
-      .flatMap(st => st.getPath.getName.stripPrefix("seg=").toLongOption)
   }
 
   /** All committed rows of a log table (with their `seg`), empty-safe.
@@ -285,10 +270,6 @@ object DeltaIngest {
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
-  private val ManifestLogSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("split", StringType),
-    StructField("source", StringType), StructField("n_chars", LongType),
-    StructField("shard", IntegerType), StructField("dead", BooleanType)))
 
   /** The UNFOLDED manifest union (base run rows as seg 0 + the
     * committed increment log) — the one definition both [[readManifest]]
@@ -799,13 +780,8 @@ object DeltaIngest {
   private[graft] def committedSegOf(
       s: SparkSession, outDir: String, key: String): Option[Long] = {
     val p = markerPath(outDir, key)
-    val f = fs(s, p)
-    if (f.exists(p)) {
-      val in = f.open(p)
-      val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-      finally in.close()
-      txt.toLongOption
-    } else readKeysMap(s, outDir).get(key) // consolidated by a compact
+    if (fs(s, p).exists(p)) SegmentLog.readSmallFile(s, p.toString).toLongOption
+    else readKeysMap(s, outDir).get(key) // consolidated by a compact
   }
 
   /** The key becomes a marker FILENAME and a line in the consolidated
@@ -818,13 +794,11 @@ object DeltaIngest {
       !key.exists(c => c == '/' || c == '\t' || c == '\n' || c == '\r'),
       s"batch key '$key' is not marker-safe (no leading _/. and no / tab newline)")
 
+  /** Published atomically ([[SegmentLog.writeSmallFile]]): a crash
+    * mid-write never leaves a marker with a truncated segment number. */
   private def commitMarker(s: SparkSession, outDir: String, key: String, seg: Long): Unit = {
     validateKey(key)
-    val p = markerPath(outDir, key)
-    val f = fs(s, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, true)
-    try out.write(seg.toString.getBytes("UTF-8")) finally out.close()
+    SegmentLog.writeSmallFile(s, markerPath(outDir, key).toString, seg.toString)
   }
 
   // ---------------------------------------------------------------
@@ -834,7 +808,6 @@ object DeltaIngest {
   private[graft] def computeAndStage(
       s: SparkSession, delta: DataFrame, outDir: String, key: String,
       seg: Long): DeltaReport = {
-    val idx = idxDir(outDir)
     val staging = stagingDir(outDir, key)
     val stagingP = new Path(staging)
     val f = fs(s, stagingP)
@@ -1239,7 +1212,7 @@ object DeltaIngest {
     def rewrite(root: String, df: DataFrame): Unit = {
       val staged = s"${root}_compacted"
       df.write.mode("overwrite").parquet(s"$staged/seg=0")
-      swapDir(s, staged, root)
+      SegmentLog.swapDir(s, staged, root)
     }
     // folded tables: latest row per key survives (and drops its seg)
     rewrite(s"$idx/keepers",
@@ -1258,7 +1231,7 @@ object DeltaIngest {
     val manifest = readManifest(s, outDir).localCheckpoint(true)
     val staged = s"$outDir/manifest.parquet_compacted"
     manifest.write.mode("overwrite").parquet(staged)
-    swapDir(s, staged, s"$outDir/manifest.parquet")
+    SegmentLog.swapDir(s, staged, s"$outDir/manifest.parquet")
     val mlog = new Path(s"$outDir/manifest_log")
     fs(s, mlog).delete(mlog, true)
     // final layout: fold the edit log into a fresh IMMUTABLE base —
@@ -1288,7 +1261,7 @@ object DeltaIngest {
       .parquet(finalStaged)
     SegmentLog.writeSmallFile(s, s"$finalStaged/_folded_max_seg",
       foldedMax.toString)
-    swapDir(s, finalStaged, s"$outDir/final")
+    SegmentLog.swapDir(s, finalStaged, s"$outDir/final")
     val flog = new Path(s"$outDir/final_log")
     fs(s, flog).delete(flog, true)
     // marker consolidation: fold every single-file marker into the
@@ -1315,12 +1288,4 @@ object DeltaIngest {
       singles.foreach { case (p, _) => f.delete(p, false) }
     }
   }
-
-  /** The rename-aside swap — one definition for all three index
-    * operators ([[SegmentLog.swapDir]]). Unlike the segment-log twins,
-    * this compact stages everything at seg=0, so a crashed prior
-    * compaction's staging is fully replaced by the next overwrite (no
-    * stale-seg hazard to clear). */
-  private def swapDir(s: SparkSession, staged: String, path: String): Unit =
-    SegmentLog.swapDir(s, staged, path)
 }

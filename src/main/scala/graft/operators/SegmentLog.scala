@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * key) admits segment n atomically; `skip-<key>` markers record
   * replay identity without consuming a segment; compaction folds to
   * the top segment, swaps via rename-aside, and consolidates every
-  * marker's keys into one `keys-<top>` file. */
+  * marker's keys into one `keys-<top>-<v>` file. */
 private[graft] object SegmentLog {
 
   def fs(s: SparkSession, p: Path): FileSystem =
@@ -30,7 +30,7 @@ private[graft] object SegmentLog {
 
   /** Replay keys of every committed batch — O(files since last
     * compaction): [[consolidateKeys]] folds old markers into ONE
-    * `keys-<n>` file before dropping them. */
+    * `keys-<top>-<v>` file before dropping them. */
   def committedKeys(s: SparkSession, markerDir: String): Set[String] = {
     val root = new Path(markerDir)
     val f = fs(s, root)
@@ -166,24 +166,26 @@ private[graft] object SegmentLog {
     s.catalog.refreshByPath(path) // bare renames bypass the FileStatusCache
   }
 
-  /** Compaction tail: fold every marker's keys into one `keys-<top>`
-    * file (temp + checked rename — a crash leaves duplicate keys, set
-    * semantics) and drop everything except it and seg-<top>. */
+  /** Compaction tail: fold every marker's keys into one key file and
+    * drop everything except it and seg-<top>. The file is published
+    * ([[writeSmallFile]]) under a name that does not exist yet,
+    * `keys-<top>-<v>` with v past every present version, and the
+    * superseded key files go only after it lands: a compaction that
+    * re-runs at the same top (a second compact, or one after skip
+    * markers, which consume no segment) must never delete the live key
+    * file before its replacement exists — a crash between the two would
+    * lose every replay key earlier compactions folded in, and a
+    * redelivered old batch would re-ingest. A crash after the publish
+    * leaves duplicate keys (set semantics). */
   def consolidateKeys(s: SparkSession, markerDir: String, top: Long): Unit = {
     val mDir = new Path(markerDir)
     val f = fs(s, mDir)
     val allKeys = committedKeys(s, markerDir)
-    val tmp = new Path(mDir, s".keys-$top.tmp")
-    val out = f.create(tmp, true)
-    try out.write(allKeys.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val consolidated = new Path(mDir, s"keys-$top")
-    if (f.exists(consolidated)) f.delete(consolidated, false)
-    if (!f.rename(tmp, consolidated))
-      throw new java.io.IOException(
-        s"consolidateKeys: rename $tmp -> $consolidated failed")
-    f.listStatus(mDir).map(_.getPath.getName)
-      .filterNot(n => n == s"seg-$top" || n == s"keys-$top")
+    val names = f.listStatus(mDir).map(_.getPath.getName)
+    val v = (names.flatMap(_.stripPrefix(s"keys-$top-").toLongOption) :+ 0L).max + 1
+    val consolidated = s"keys-$top-$v"
+    writeSmallFile(s, s"$markerDir/$consolidated", allKeys.toSeq.sorted.mkString("\n"))
+    names.filterNot(n => n == s"seg-$top" || n == consolidated)
       .foreach(n => f.delete(new Path(mDir, n), false))
   }
 }

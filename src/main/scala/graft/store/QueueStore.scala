@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import graft.model.Schemas
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -24,21 +24,33 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Mutation model: append-only row files + append-only tombstone files
   * keyed by a deterministic per-row id; a "live" read is
   * rows ANTI-JOIN tombstones (broadcast — tombstones are tiny relative
-  * to data). `compact()` folds tombstones in UNDER LIVE WRITERS via a
-  * minimal Delta-style commit log: the folded snapshot is written
-  * BESIDE the old files, a `_manifest-<epoch>` file (atomically
-  * published) marks the old row/tombstone files as replaced, readers
-  * resolve listing-minus-replaced, and the superseded files are GC'd
-  * after `compactionGraceMs` so in-flight read plans never lose a file
-  * from under them. Appends need no log entry (a new file is live by
+  * to data).
+  *
+  * ONE publish path (`publish`): every write — queue, processing,
+  * scheduled, dead, tombstone, limit-log appends and compaction
+  * snapshots — is one staged Spark write whose row count is observed on
+  * the write, then a stamp-fence-rename move of each part file into its
+  * live (possibly partitioned) dir. ONE reader (`readParquet`) turns a
+  * file listing into a frame.
+  *
+  * ONE compaction protocol (`compact`, with `compactProcessing`,
+  * `compactScheduled` and `compactDead` naming each table's id column
+  * and tombstone policy) folds tombstones in UNDER LIVE WRITERS via a
+  * minimal Delta-style commit log: the folded snapshot is appended
+  * BESIDE the old files through the table's own append path, a
+  * `_manifest-<epoch>` file (atomically published) marks the old
+  * row/tombstone files as replaced, readers resolve
+  * listing-minus-replaced, and the superseded files are GC'd after
+  * `compactionGraceMs` so in-flight read plans never lose a file from
+  * under them. Appends need no log entry (a new file is live by
   * default), so the hot claim/ack path stays log-free; ids make
   * re-applied writes idempotent (at-least-once, exactly like the
   * reference's two-phase promotions, manager.ex:218-220).
   *
-  * At 100 TB: queue dirs are date/hour-partitioned so the streaming
-  * source lists incrementally; tombstone anti-joins stay broadcast
-  * (ids only); compaction runs as a background job per partition and
-  * never blocks the pipelines.
+  * At 100 TB: queue dirs are day-partitioned so the streaming source
+  * lists incrementally; tombstone anti-joins stay broadcast (ids only);
+  * compaction runs as a background pass and never blocks the
+  * pipelines.
   */
 class QueueStore(val spark: SparkSession, val root: String,
     val compactionGraceMs: Long = 600000,
@@ -260,30 +272,30 @@ class QueueStore(val spark: SparkSession, val root: String,
     }
   }
 
-  private def hasData(dir: String): Boolean = {
-    val p = new Path(dir)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".") // dot-dirs: .archive etc.
-    }
-  }
-
   /** Manifest-aware table read: live files only (a committed
-    * compaction's superseded files are excluded until GC'd).
-    * ignoreMissingFiles because GC may delete a superseded file between
-    * this listing and the job that reads it — its rows are in the
-    * committed snapshot (also in this listing), so dropping it is
-    * correct, and for pre-compaction plans at worst a transient
-    * undercount on a periodic pass. */
+    * compaction's superseded files are excluded until GC'd). */
   def readOrEmpty(dir: String, schema: StructType): DataFrame =
-    readFiles(dataFiles(dir), schema)
+    readParquet(dataFiles(dir), schema)
 
-  /** readOrEmpty over exactly `files` (a [[dataFiles]] listing). */
-  private def readFiles(files: Seq[String], schema: StructType): DataFrame = {
+  /** The store's one parquet reader: exactly `files` as `schema`, or an
+    * empty frame when there are none; `basePath` derives partition
+    * columns from the paths. Lenient by default (ignoreMissingFiles):
+    * GC may delete a superseded file between a listing and the job that
+    * reads it — its rows are in the committed snapshot (also in that
+    * listing), so dropping it is correct, and for pre-compaction plans
+    * at worst a transient undercount on a periodic pass. Passes that
+    * hold the maintenance lock read `strict`: nothing can delete under
+    * them, and a dropped file would fold wrong rows into a durable
+    * result. */
+  private def readParquet(files: Seq[String], schema: StructType,
+      basePath: Option[String] = None, strict: Boolean = false): DataFrame = {
     maybeRenewLease()
-    if (files.nonEmpty)
-      spark.read.schema(schema).option("ignoreMissingFiles", "true").parquet(files: _*)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else {
+      val r = spark.read.schema(schema).option("ignoreMissingFiles", !strict)
+      basePath.fold(r)(r.option("basePath", _)).parquet(files: _*)
+    }
   }
 
   /** Monotonic part-file FIFO discipline (SURVEY §7). ONE strictly
@@ -308,58 +320,68 @@ class QueueStore(val spark: SparkSession, val root: String,
   private def nextPartStampMs(): Long =
     partClock.updateAndGet(prev => math.max(System.currentTimeMillis(), prev + 1))
 
-  /** Collision-free append: write to a private staging dir, then move
-    * the part files into the target under fresh unique names (rename is
-    * atomic per file). A direct `mode("append")` is UNSAFE here — the
-    * engine has concurrent writers per directory (multiple pipelines
-    * claiming into `processing/`, enqueuers + housekeeper on a queue
-    * dir) and they would share one `_temporary/0` committer dir, where
-    * one job's cleanup deletes the other's in-flight task files.
+  /** The store's one publish path. A direct `mode("append")` is UNSAFE
+    * here — the engine has concurrent writers per directory (multiple
+    * pipelines claiming into `processing/`, enqueuers + housekeeper on a
+    * queue dir) and they would share one `_temporary/0` committer dir,
+    * where one job's cleanup deletes the other's in-flight task files.
+    * So every write is ONE staged Spark write to a private dir, with its
+    * row count observed on the write itself (no extra Spark job), and
+    * then each staged part file moves into its live dir under a fresh
+    * FIFO stamp (name + mtime), behind the ownership fence, by a checked
+    * rename (atomic per file).
     *
-    * Returns the number of rows written, counted by an observe() on the
-    * write itself (no extra Spark job). A write of no rows publishes no
-    * file, so an empty append leaves the table's listing untouched. */
-  def append(dir: String, df: DataFrame, schema: StructType): Long = {
+    * `parts` are partition expressions: the staged write partitions on
+    * them and `target` maps a file's partition values (unescaped, in
+    * order) to its live dir. Partition dirs are visited in name order;
+    * within one, files go in part-index order, or a multi-part write's
+    * FIFO would ride on listing order — by the PARSED index, because
+    * Spark's %05d padding overflows at 100k parts, where "part-100000"
+    * sorts before "part-99999". A write of no rows publishes no file.
+    * Returns the rows written. */
+  private def publish(df: DataFrame, parts: Column*)(target: Seq[String] => Path): Long = {
     maybeRenewLease()
     val obs = org.apache.spark.sql.Observation()
-    val staging = s"$root/.staging/${java.util.UUID.randomUUID()}"
-    df.select(schema.fieldNames.map(col).toSeq: _*)
+    val staging = new Path(s"$root/.staging/${java.util.UUID.randomUUID()}")
+    val names = parts.indices.map(i => s"__p$i")
+    df.select(col("*") +: parts.zip(names).map { case (c, n) => c.as(n) }: _*)
       .observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(staging)
+      .write.mode("overwrite").partitionBy(names: _*).parquet(staging.toString)
     val n = obs.get("n").asInstanceOf[Long]
-    if (n > 0) moveStagedPartsIn(staging, new Path(dir))
-    fs.delete(new Path(staging), true)
+    val id = java.util.UUID.randomUUID().toString
+    val partIdx = "part-(\\d+)".r
+    var i = 0
+    def moveIn(dir: Path, values: Vector[String]): Unit =
+      if (values.length < names.length)
+        fs.listStatus(dir).map(_.getPath.getName)
+          .filter(_.startsWith(s"${names(values.length)}=")).sorted
+          .foreach(d => moveIn(new Path(dir, d), values :+ unescapePath(d.split("=", 2)(1))))
+      else {
+        val to = target(values)
+        fs.mkdirs(to)
+        fs.listStatus(dir).filter(_.getPath.getName.startsWith("part-"))
+          .sortBy(f => partIdx.findFirstMatchIn(f.getPath.getName)
+            .map(_.group(1).toLong).getOrElse(Long.MaxValue))
+          .foreach { f =>
+            fenceCheck() // die before publishing if ownership was taken over
+            val stamp = nextPartStampMs()
+            val dest = new Path(to, f"part-$stamp%013d-$id-$i.parquet")
+            i += 1
+            // a silently failed rename (quota, concurrent delete,
+            // cross-FS) would drop this file's rows — surface it
+            if (!fs.rename(f.getPath, dest))
+              throw new java.io.IOException(s"publish: rename ${f.getPath} -> $dest failed")
+            fs.setTimes(dest, stamp, -1)
+          }
+      }
+    if (n > 0) moveIn(staging, Vector.empty)
+    fs.delete(staging, true)
     n
   }
 
-  /** Move every staged part file into `target` under fresh stamped
-    * names (rename is atomic per file; a failed rename is surfaced —
-    * silently dropping it would lose the file's rows).
-    *
-    * listStatus order is not contractually sorted: stamp in part-index
-    * order or a multi-part append's within-append FIFO would ride on
-    * listing order. Sort by the PARSED numeric index, not the name —
-    * Spark's %05d padding overflows at 100k parts in one write, where
-    * "part-100000" sorts lexicographically before "part-99999". */
-  private def moveStagedPartsIn(staging: String, target: Path): Unit = {
-    val id = java.util.UUID.randomUUID().toString
-    fs.mkdirs(target)
-    val partIdx = "part-(\\d+)".r
-    val parts = fs.listStatus(new Path(staging))
-      .filter(f => f.getPath.getName.startsWith("part-"))
-      .sortBy(f => partIdx.findFirstMatchIn(f.getPath.getName)
-        .map(_.group(1).toLong).getOrElse(Long.MaxValue))
-    parts.zipWithIndex.foreach { case (f, i) =>
-      fenceCheck() // die before publishing if ownership was taken over
-      val stamp = nextPartStampMs()
-      val dest = new Path(target, f"part-$stamp%013d-$id-$i.parquet")
-      // a silently failed rename (quota, concurrent delete, cross-FS)
-      // would drop this file's rows from the table — surface it
-      if (!fs.rename(f.getPath, dest))
-        throw new java.io.IOException(s"append: rename ${f.getPath} -> $dest failed")
-      fs.setTimes(dest, stamp, -1)
-    }
-  }
+  /** Append rows to a table dir; returns the rows written. */
+  def append(dir: String, df: DataFrame, schema: StructType): Long =
+    publish(df.select(schema.fieldNames.map(col).toSeq: _*))(_ => new Path(dir))
 
   /** Hive-escaped partition dir values → raw (e.g. "a%3Ab" → "a:b").
     * Local implementation to avoid Spark-internal APIs. */
@@ -376,92 +398,36 @@ class QueueStore(val spark: SparkSession, val root: String,
     sb.toString
   }
 
-  /** Move every part file of a dynamic-partition staging write into
-    * per-partition-value target dirs resolved by `targetFor`. One
-    * Spark job total; same atomic-rename protocol as append(). */
-  private def movePartitioned(staging: String, prefix: String,
-      targetFor: String => Path): Unit = {
-    movePartitionDirs(new Path(staging), prefix, targetFor)
-    fs.delete(new Path(staging), true)
-  }
-
-  private def movePartitionDirs(base: Path, prefix: String,
-      targetFor: String => Path): Unit = {
-    val id = java.util.UUID.randomUUID().toString
-    val partIdx = "part-(\\d+)".r
-    fs.listStatus(base)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith(s"$prefix="))
-      .foreach { d =>
-        val value = unescapePath(d.getPath.getName.stripPrefix(s"$prefix="))
-        val target = targetFor(value)
-        fs.mkdirs(target)
-        fs.listStatus(d.getPath).filter(_.getPath.getName.startsWith("part-"))
-          // same parsed-numeric-index order contract as append()
-          .sortBy(f => partIdx.findFirstMatchIn(f.getPath.getName)
-            .map(_.group(1).toLong).getOrElse(Long.MaxValue))
-          .zipWithIndex.foreach { case (f, i) =>
-            fenceCheck() // die before publishing if ownership was taken over
-            val stamp = nextPartStampMs()
-            val dest = new Path(target, f"part-$stamp%013d-$id-$i.parquet")
-            if (!fs.rename(f.getPath, dest))
-              throw new java.io.IOException(s"append: rename ${f.getPath} -> $dest failed")
-            fs.setTimes(dest, stamp, -1)
-          }
-      }
-  }
-
-  private def enqueueDayCol = date_format(col("enqueued_at"), "yyyy-MM-dd")
+  private def events(df: DataFrame) = df.select(Schemas.event.fieldNames.map(col).toSeq: _*)
+  private def enqueueDay = date_format(col("enqueued_at"), "yyyy-MM-dd")
 
   /** Append rows to a queue dir under its `day=<UTC enqueue date>`
-    * partition (one staged dynamic-partition write + file moves). Queue
-    * dirs are date-partitioned so BATCH reads over queue history prune
-    * on day (the streaming source globs `day=*` and is indifferent —
-    * it lists the whole glob per trigger either way); the day derives
-    * from enqueued_at, so replays land the same rows in the same
-    * partition. FIFO is untouched: the part-stamp discipline stamps
-    * name+mtime across partition subdirs from ONE per-writer clock. */
-  def appendQueue(q: String, df: DataFrame): Unit = {
-    maybeRenewLease()
-    val staging = s"$root/.staging/${java.util.UUID.randomUUID()}"
-    df.select(Schemas.event.fieldNames.map(col).toSeq: _*)
-      .withColumn("__day", enqueueDayCol)
-      .write.mode("overwrite").partitionBy("__day").parquet(staging)
-    movePartitioned(staging, "__day", d => new Path(s"${queueDir(q)}/day=$d"))
-  }
+    * partition. Queue dirs are date-partitioned so BATCH reads over
+    * queue history prune on day (the streaming source globs `day=*` and
+    * is indifferent — it lists the whole glob per trigger either way);
+    * the day derives from enqueued_at, so replays land the same rows in
+    * the same partition. FIFO is untouched: publish stamps name+mtime
+    * across partition subdirs from ONE per-writer clock. */
+  def appendQueue(q: String, df: DataFrame): Unit =
+    publish(events(df), enqueueDay) { case Seq(d) => new Path(s"${queueDir(q)}/day=$d") }
 
-  /** Append rows to every destination queue dir in ONE Spark job
-    * (dynamic-partition staging write keyed on `queue` then enqueue
-    * day, then file moves). Replaces per-queue job loops — at
-    * thousands of queues a loop is thousands of Spark jobs per
-    * housekeeping tick. */
-  def appendToQueues(df: DataFrame): Unit = {
-    maybeRenewLease()
-    val staging = s"$root/.staging/${java.util.UUID.randomUUID()}"
-    df.select(Schemas.event.fieldNames.map(col).toSeq: _*)
-      .withColumn("__q", col("queue"))
-      .withColumn("__day", enqueueDayCol)
-      .write.mode("overwrite").partitionBy("__q", "__day").parquet(staging)
-    fs.listStatus(new Path(staging))
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("__q="))
-      .foreach { qd =>
-        val q = unescapePath(qd.getPath.getName.stripPrefix("__q="))
-        movePartitionDirs(qd.getPath, "__day", d => new Path(s"${queueDir(q)}/day=$d"))
-      }
-    fs.delete(new Path(staging), true)
-  }
+  /** Append rows to every destination queue dir in ONE Spark job (the
+    * staged write partitions on queue, then enqueue day). Replaces
+    * per-queue job loops — at thousands of queues a loop is thousands
+    * of Spark jobs per housekeeping tick. */
+  def appendToQueues(df: DataFrame): Unit =
+    publish(events(df), col("queue"), enqueueDay) {
+      case Seq(q, d) => new Path(s"${queueDir(q)}/day=$d")
+    }
 
   /** The scheduled table is hive-partitioned on nb_day (the UTC date of
     * not_before), so the housekeeper's due scan partition-prunes away
     * far-future days — the ZRANGEBYSCORE analog at the directory level. */
-  def appendScheduled(df: DataFrame): Unit = {
-    maybeRenewLease()
-    val staging = s"$root/.staging/${java.util.UUID.randomUUID()}"
-    df.select(scheduledSchema.fieldNames.map(col).toSeq: _*)
-      .withColumn("nb_day", date_format(col("not_before"), "yyyy-MM-dd"))
-      .write.mode("overwrite").partitionBy("nb_day").parquet(staging)
-    movePartitioned(staging, "nb_day",
-      d => new Path(s"$scheduledDir/nb_day=$d"))
-  }
+  def appendScheduled(df: DataFrame): Unit =
+    publish(df.select(scheduledSchema.fieldNames.map(col).toSeq: _*),
+      date_format(col("not_before"), "yyyy-MM-dd")) {
+      case Seq(d) => new Path(s"$scheduledDir/nb_day=$d")
+    }
 
   private val scheduledSchemaP: StructType = scheduledSchema.add("nb_day", StringType)
 
@@ -470,16 +436,8 @@ class QueueStore(val spark: SparkSession, val root: String,
     * Manifest-aware: live files only, resolved against basePath so the
     * partition column still derives from the paths. Reads exactly
     * `files` (a [[dataFiles]] listing). */
-  private def readScheduled(files: Seq[String]): DataFrame = {
-    maybeRenewLease()
-    if (files.nonEmpty)
-      spark.read.option("basePath", scheduledDir)
-        .option("ignoreMissingFiles", "true")
-        .schema(scheduledSchemaP).parquet(files: _*)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], scheduledSchemaP)
-  }
+  private def readScheduled(files: Seq[String]): DataFrame =
+    readParquet(files, scheduledSchemaP, basePath = Some(scheduledDir))
 
   /** Materialize df into a private staging dir and read it back: a
     * stable snapshot decoupled from live-table recomputation, so
@@ -514,13 +472,9 @@ class QueueStore(val spark: SparkSession, val root: String,
     * it cannot resurrect anything. */
   private def readTombsInForce(dir: String, table: String): DataFrame = {
     val folded = readManifest(dir).map(_.folded).getOrElse(Set.empty)
-    val files = listPartFilesRec(tombDir(table)).collect {
+    readParquet(listPartFilesRec(tombDir(table)).collect {
       case (rel, st) if !folded(rel) => st.getPath.toString
-    }
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
-    else spark.read.schema(tombSchema).option("ignoreMissingFiles", "true")
-      .parquet(files: _*)
+    }, tombSchema)
   }
 
   /** rows minus tombstones; idCol names the row's tombstone key. */
@@ -538,112 +492,14 @@ class QueueStore(val spark: SparkSession, val root: String,
     * created). */
   def queueStreamPath(q: String): String = s"${queueDir(q)}/day=*"
 
-  /** One-time layout upgrade: part files at a queue dir's ROOT (the
-    * pre-day-partition flat layout) are invisible to the streaming
-    * source's `day=*` glob, so an upgraded store root would silently
-    * strand undrained jobs — queueRows/pendingJobs (recursive listing)
-    * still count them, but no pipeline would ever process them. Runs
-    * at store init, before any new write:
-    *
-    *  - a file whose rows share one enqueue day is RENAMED into that
-    *    day's partition — name (the FIFO part stamp) and mtime
-    *    preserved, so drain order is untouched;
-    *  - a midnight-spanning file is SPLIT per day; the splits reuse
-    *    the original stamp with day-ordered indices and mtimes
-    *    stamp+dayIdx, so they drain in enqueue-day order in the
-    *    original file's position. If stamp+dayIdx collides with the
-    *    next file's stamp the relative order inside that millisecond
-    *    is arbitrary — the same within-batch reorder the part-stamp
-    *    contract already permits across writer JVMs.
-    *
-    * Cost on a non-upgrading boot: one listing per queue dir, zero
-    * Spark jobs. */
-  private def migrateFlatQueueLayouts(): Unit = {
-    val qbase = new Path(s"$root/queue")
-    if (!fs.exists(qbase)) return
-    fs.listStatus(qbase).filter(_.isDirectory).foreach { qd =>
-      val flat = fs.listStatus(qd.getPath)
-        .filter(f => !f.isDirectory && f.getPath.getName.startsWith("part-"))
-        .sortBy(_.getPath.getName)
-      flat.foreach { f =>
-        val name = f.getPath.getName
-        val stamp = "part-(\\d{13})".r.findFirstMatchIn(name)
-          .map(_.group(1).toLong).getOrElse(f.getModificationTime)
-        val df = spark.read.schema(Schemas.event).parquet(f.getPath.toString)
-        val days = df.select(enqueueDayCol.as("d")).distinct()
-          .collect().map(_.getString(0)).sorted
-        if (days.length <= 1) {
-          val day = days.headOption.getOrElse(
-            java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd")
-              .withZone(java.time.ZoneId.of(
-                spark.sessionState.conf.sessionLocalTimeZone))
-              .format(java.time.Instant.ofEpochMilli(stamp)))
-          val target = new Path(qd.getPath, s"day=$day")
-          fs.mkdirs(target)
-          val dest = new Path(target, name)
-          if (!fs.rename(f.getPath, dest))
-            throw new java.io.IOException(
-              s"layout migration: rename ${f.getPath} -> $dest failed")
-          fs.setTimes(dest, stamp, -1)
-        } else {
-          val staging = s"$root/.staging/migrate-${java.util.UUID.randomUUID()}"
-          df.withColumn("__day", enqueueDayCol)
-            .write.mode("overwrite").partitionBy("__day").parquet(staging)
-          val partIdx = "part-(\\d+)".r
-          days.zipWithIndex.foreach { case (day, di) =>
-            val src = new Path(staging, s"__day=$day")
-            val target = new Path(qd.getPath, s"day=$day")
-            fs.mkdirs(target)
-            val s = stamp + di
-            fs.listStatus(src).filter(_.getPath.getName.startsWith("part-"))
-              // sort by the PARSED part index, not listStatus order: the
-              // crash-rerun convergence below keys on `i`, and an
-              // enumeration-order index could pair a rerun's staged file
-              // with a first-run dest holding DIFFERENT rows — the
-              // exists-check would then delete the staged file and lose
-              // its rows. Spark's own part numbering is the stable key.
-              .sortBy(p => partIdx.findFirstMatchIn(p.getPath.getName)
-                .map(_.group(1).toLong).getOrElse(Long.MaxValue))
-              .zipWithIndex.foreach { case (p, i) =>
-                // DETERMINISTIC name: a crash between split move-in and
-                // the original's delete re-runs this migration on next
-                // boot, and the exists-check converges it instead of
-                // duplicating rows (the original is deleted LAST, so no
-                // crash point loses data)
-                val dest = new Path(target, f"part-$s%013d-migr$di-$i.parquet")
-                if (fs.exists(dest)) fs.delete(p.getPath, false)
-                else {
-                  if (!fs.rename(p.getPath, dest))
-                    throw new java.io.IOException(
-                      s"layout migration: rename ${p.getPath} -> $dest failed")
-                  fs.setTimes(dest, s, -1)
-                }
-              }
-          }
-          fs.delete(new Path(staging), true)
-          fs.delete(f.getPath, false)
-        }
-      }
-      if (flat.nonEmpty)
-        graft.GraftLog.current.info("queue layout migrated to day partitions",
-          Map("queue" -> qd.getPath.getName, "files" -> flat.length.toString))
-    }
-  }
-
   private val eventSchemaP: StructType = Schemas.event.add("day", StringType)
 
   /** Partition-discovering batch read of a queue's history: carries the
     * `day` partition column, so date predicates prune whole day dirs
     * (PartitionFilters) instead of footer-scanning years of history.
     * The analytics/audit path; the pipeline itself streams the glob. */
-  def queueHistory(q: String): DataFrame = {
-    val files = dataFiles(queueDir(q))
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], eventSchemaP)
-    else spark.read.option("basePath", queueDir(q))
-      .option("ignoreMissingFiles", "true")
-      .schema(eventSchemaP).parquet(files: _*)
-  }
+  def queueHistory(q: String): DataFrame =
+    readParquet(dataFiles(queueDir(q)), eventSchemaP, basePath = Some(queueDir(q)))
   /** Deduped on sched_id: a micro-batch that crashes after the
     * scheduled-table append replays and re-appends the same
     * deterministic sched_id; without the dedupe, promoteDue would
@@ -663,7 +519,7 @@ class QueueStore(val spark: SparkSession, val root: String,
     * without the dedupe requeueStuck would requeue a stuck claim once
     * per copy. Reads exactly `files`, as liveScheduled. */
   def liveProcessing(files: Seq[String] = dataFiles(processingDir)): DataFrame =
-    minusTombs(readFiles(files, processingSchema), processingDir, "processing", "claim_id")
+    minusTombs(readParquet(files, processingSchema), processingDir, "processing", "claim_id")
       .dropDuplicates("claim_id")
   /** Deduped on jid for the same replayed-append reason as
     * liveScheduled (jid is the dead row's natural identity). */
@@ -697,11 +553,7 @@ class QueueStore(val spark: SparkSession, val root: String,
     // counters of an epoch this call has not read, so dropping the file
     // is a transient undercount, not a crash (matches footerRowCount's
     // FileNotFoundException->0 stance)
-    val tombClaims =
-      if (tombFiles.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
-      else spark.read.schema(tombSchema).option("ignoreMissingFiles", "true")
-        .parquet(tombFiles.map(_.getPath.toString).toSeq: _*)
+    val tombClaims = readParquet(tombFiles.map(_.getPath.toString).toSeq, tombSchema)
     val unfolded = rowClaims.unionAll(tombClaims.select(col("id"), col("queue")))
       .where(col("queue").isin(qs: _*))
       .groupBy("queue").agg(countDistinct("id").as("n"))
@@ -806,8 +658,7 @@ class QueueStore(val spark: SparkSession, val root: String,
     val all = listTombFiles("processing")
     val candidates = all.filter(_.getModificationTime < cutoff)
     if (candidates.isEmpty) return 0L
-    val candDF = spark.read.schema(tombSchema)
-      .parquet(candidates.map(_.getPath.toString).toSeq: _*)
+    val candDF = readParquet(candidates.map(_.getPath.toString).toSeq, tombSchema, strict = true)
       .withColumn("f", input_file_name())
     val rowIds = readOrEmpty(processingDir, processingSchema)
       .select(col("claim_id").as("id"))
@@ -839,13 +690,8 @@ class QueueStore(val spark: SparkSession, val root: String,
     if (foldable.isEmpty) return 0L
     val foldNames = foldable.map(_.getPath.getName).toSet
     val remaining = all.filterNot(f => foldNames(f.getPath.getName))
-    val foldDF = spark.read.schema(tombSchema)
-      .parquet(foldable.map(_.getPath.toString).toSeq: _*)
-    val remIds =
-      if (remaining.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
-      else spark.read.schema(tombSchema)
-        .parquet(remaining.map(_.getPath.toString).toSeq: _*)
+    val foldDF = readParquet(foldable.map(_.getPath.toString).toSeq, tombSchema, strict = true)
+    val remIds = readParquet(remaining.map(_.getPath.toString).toSeq, tombSchema, strict = true)
     val newly = foldDF.select("id", "queue").distinct()
       .join(remIds.select("id"), Seq("id"), "left_anti")
       .groupBy("queue").agg(count("*").as("n"))
@@ -1106,10 +952,11 @@ class QueueStore(val spark: SparkSession, val root: String,
     *   1. snapshot the live row-file list R and in-force tombstone
     *      file list T (tombstones appended concurrently are not in T
     *      and stay in force — they suppress their rows in every read);
-    *   2. write rows(R) ANTI-JOIN tombs(T), deduped on idCol, to
-    *      staging; move the files INTO the live dir (additive — until
+    *   2. append rows(R) ANTI-JOIN tombs(T), deduped on idCol, through
+    *      the table's own append path (publish; the scheduled table's
+    *      snapshot lands in its nb_day partitions) — additive: until
     *      commit, readers see both copies, which the id-dedup readers
-    *      collapse: the same dedup replayed micro-batches already
+    *      collapse (the same dedup replayed micro-batches already
     *      require);
     *   3. COMMIT: publish a manifest epoch marking R (and T, unless
     *      keepTombstones) superseded — readers now resolve
@@ -1122,8 +969,8 @@ class QueueStore(val spark: SparkSession, val root: String,
     * next pass finishes the GC. Nothing is ever deleted before the
     * committed snapshot covers it.
     *
-    * With NO unfolded tombstones the rewrite is skipped (the GC /
-    * recovery legs still run): a compaction that folds nothing would
+    * With NO unfolded tombstones the rewrite is skipped (the GC leg
+    * still runs): a compaction that folds nothing would
     * churn a full table rewrite per call — the auto-compaction tick
     * fires on the in-force tombstone count, so a skip here is what
     * makes the grace window quiet (folded-but-not-yet-GC'd tombstone
@@ -1134,7 +981,6 @@ class QueueStore(val spark: SparkSession, val root: String,
   def compact(dir: String, table: String, schema: StructType, idCol: String,
       keepTombstones: Boolean = false,
       rewriteWithoutTombstones: Boolean = false): Unit = withMaintenance {
-    recoverCompaction(dir) // heal any legacy swap-based crash state
     gcSuperseded(dir, table)
     val manifest = readManifest(dir)
     val replaced0 = manifest.map(_.replaced).getOrElse(Set.empty)
@@ -1153,21 +999,17 @@ class QueueStore(val spark: SparkSession, val root: String,
     } else if (tombFilesNew.isEmpty && !rewriteWithoutTombstones) {
       () // nothing to fold — leave the table untouched
     } else {
-      val tombs =
-        if (tombFiles.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
-        // no ignoreMissingFiles here: T must be read completely or the
-        // pass must fail — a silently dropped tombstone file would
-        // resurrect its rows INTO the durable snapshot (deleters all
-        // hold the maintenance lock, so this cannot race)
-        else spark.read.schema(tombSchema).parquet(tombFiles.map(_._2.getPath.toString): _*)
-      val rows = spark.read.schema(schema).parquet(rowFiles.map(_._2.getPath.toString): _*)
-      val staging = s"$root/.staging/compact-${java.util.UUID.randomUUID()}"
-      rows.join(broadcast(tombs), rows(idCol) === tombs("id"), "left_anti")
+      // strict reads: T must be read completely or the pass must fail —
+      // a silently dropped tombstone file would resurrect its rows INTO
+      // the durable snapshot (deleters all hold the maintenance lock, so
+      // this cannot race)
+      val tombs = readParquet(tombFiles.map(_._2.getPath.toString), tombSchema, strict = true)
+      val rows = readParquet(rowFiles.map(_._2.getPath.toString), schema, strict = true)
+      val snap = rows.join(broadcast(tombs), rows(idCol) === tombs("id"), "left_anti")
         .dropDuplicates(idCol)
-        .write.mode("overwrite").parquet(staging)
-      moveStagedPartsIn(staging, new Path(dir))
-      fs.delete(new Path(staging), true)
+      // the snapshot goes through the table's own append path, so a
+      // partitioned table keeps its layout
+      if (dir == scheduledDir) appendScheduled(snap) else append(dir, snap, schema)
       stampCommitTime(rowFiles.map { case (rel, _) => new Path(dir, rel) } ++
         (if (keepTombstones) Nil
          else tombFiles.map { case (rel, _) => new Path(tombDir(table), rel) }))
@@ -1176,77 +1018,6 @@ class QueueStore(val spark: SparkSession, val root: String,
         if (keepTombstones) folded0 else folded0 ++ tombFiles.map(_._1),
         if (keepTombstones) tombFiles.map(_._1).toSet else Set.empty))
       gcSuperseded(dir, table) // immediate when compactionGraceMs == 0
-    }
-  }
-
-  /** Heal an interrupted compact():
-    *  - table dir missing, aside present → swap never completed: move
-    *    the aside copy back (nothing was lost);
-    *  - both present → crash between swap and cleanup: MERGE the aside
-    *    part files back in (duplicates are harmless — ids are
-    *    deterministic, consumers are distinct/anti-join based, and the
-    *    tombstones still exist at this crash point); the merge walks
-    *    partition subdirs recursively so partitioned tables (scheduled)
-    *    recover into the matching partition;
-    *  - leftover tmp is always discarded.
-    * Never deletes the aside copy while the table dir might have been
-    * recreated empty by a later append. */
-  def recoverCompaction(dir: String): Unit = {
-    val d = new Path(dir)
-    val old = new Path(s"$dir.compact.old")
-    if (fs.exists(old)) {
-      if (!fs.exists(d)) fs.rename(old, d)
-      else {
-        def merge(from: Path, to: Path): Unit =
-          fs.listStatus(from).foreach { f =>
-            if (f.isDirectory) merge(f.getPath, new Path(to, f.getPath.getName))
-            else if (f.getPath.getName.startsWith("part-")) {
-              fs.mkdirs(to)
-              fs.rename(f.getPath, new Path(to, s"part-recovered-${f.getPath.getName}"))
-            }
-          }
-        merge(old, d)
-        fs.delete(old, true)
-      }
-    }
-    fs.delete(new Path(s"$dir.compact.tmp"), true)
-  }
-
-  /** compact() for the partitioned scheduled table: same additive
-    * manifest-commit protocol, but the snapshot rewrite preserves the
-    * nb_day partition layout (files move into their partition subdir
-    * and the manifest tracks partition-relative paths). */
-  def compactScheduled(): Unit = withMaintenance {
-    recoverCompaction(scheduledDir)
-    gcSuperseded(scheduledDir, "scheduled")
-    val manifest = readManifest(scheduledDir)
-    val replaced0 = manifest.map(_.replaced).getOrElse(Set.empty)
-    val folded0 = manifest.map(_.folded).getOrElse(Set.empty)
-    val tombFiles = listPartFilesRec(tombDir("scheduled")).filterNot(f => folded0(f._1))
-    val rowFiles = listPartFilesRec(scheduledDir).filterNot(f => replaced0(f._1))
-    if (rowFiles.isEmpty) {
-      tombFiles.foreach { case (_, st) => fs.delete(st.getPath, false) }
-    } else if (tombFiles.isEmpty) {
-      () // nothing to fold — see compact()
-    } else {
-      val tombs =
-        if (tombFiles.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
-        else spark.read.schema(tombSchema).parquet(tombFiles.map(_._2.getPath.toString): _*)
-      val rows = spark.read.option("basePath", scheduledDir)
-        .schema(scheduledSchemaP).parquet(rowFiles.map(_._2.getPath.toString): _*)
-      val staging = s"$root/.staging/compact-${java.util.UUID.randomUUID()}"
-      rows.join(broadcast(tombs), rows("sched_id") === tombs("id"), "left_anti")
-        .dropDuplicates("sched_id")
-        .write.mode("overwrite").partitionBy("nb_day").parquet(staging)
-      movePartitioned(staging, "nb_day", d => new Path(s"$scheduledDir/nb_day=$d"))
-      stampCommitTime(
-        rowFiles.map { case (rel, _) => new Path(scheduledDir, rel) } ++
-          tombFiles.map { case (rel, _) => new Path(tombDir("scheduled"), rel) })
-      writeManifest(scheduledDir, Manifest(manifest.map(_.epoch + 1).getOrElse(0L),
-        replaced0 ++ rowFiles.map(_._1),
-        folded0 ++ tombFiles.map(_._1)))
-      gcSuperseded(scheduledDir, "scheduled")
     }
   }
 
@@ -1319,7 +1090,7 @@ class QueueStore(val spark: SparkSession, val root: String,
       .distinct()
     // files with any row copy not covered by a same-file ack stay
     val oldPaths = oldByQueue.values.flatten.map(_._2.getPath.toString).toSeq
-    val pending = spark.read.schema(Schemas.event).parquet(oldPaths: _*)
+    val pending = readParquet(oldPaths, Schemas.event, strict = true)
       .select(col("queue"), col("jid"),
         regexp_extract(input_file_name(), "[^/]+$", 0).as("src_file"))
       .join(acks, Seq("queue", "jid", "src_file"), "left_anti")
@@ -1348,8 +1119,13 @@ class QueueStore(val spark: SparkSession, val root: String,
     * Correct only when processing tombstones carry their queue — all
     * engine write paths do; ad-hoc callers must too. */
   def compactProcessing(): Unit =
-    compact(processingDir, "processing", processingSchema, "claim_id",
-      keepTombstones = true)
+    compact(processingDir, "processing", processingSchema, "claim_id", keepTombstones = true)
+
+  /** Compact the scheduled table: retry and promotion tombstones fold
+    * away; the snapshot keeps the nb_day layout because it is written
+    * through appendScheduled. */
+  def compactScheduled(): Unit =
+    compact(scheduledDir, "scheduled", scheduledSchema, "sched_id")
 
   /** Fold the dead-letter table to one deduped snapshot. The dead
     * table is append-only — nothing tombstones a dead row (parity: the
@@ -1536,16 +1312,11 @@ class QueueStore(val spark: SparkSession, val root: String,
     }
 
   acquireOwnership()
-  // heal any compaction or claim fold interrupted by a crash in a
-  // previous process, and finish any pending post-commit GC
-  recoverCompaction(processingDir)
-  recoverCompaction(scheduledDir)
+  // heal a claim fold interrupted by a crash in a previous process, and
+  // finish any pending post-commit GC
   recoverClaimFold()
   gcSuperseded(processingDir, "processing")
   gcSuperseded(scheduledDir, "scheduled")
-  // upgrade any pre-day-partition flat queue layout before pipelines
-  // start (root-level part files are invisible to the day=* stream glob)
-  migrateFlatQueueLayouts()
 }
 
 object QueueStore {

@@ -281,6 +281,62 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     try q.processAllAvailable() finally runner.stop()
     assert(Buffers.echo.toArray.map(_.toString).toSeq ===
       (1 to 6).map(i => s"[f$i]"))
+
+    // (4) every other publish path stamps names and mtimes from the same
+    // clock: a processing append, appendScheduled into nb_day=
+    // partitions, appendToQueues into two queues, a compaction snapshot
+    val s2 = new QueueStore(spark, TestSpark.tmpRoot("fifo_paths"))
+    new DefaultQueueApi(s2).bulkEnqueue("src",
+      (1 to 6).map(i => JobSpec("EchoWorker", args = s"[$i]")))
+    val rows = s2.queueRows("src")
+    val low = col("args").isin("[1]", "[2]", "[3]")
+    def under(glob: String) =
+      fs.globStatus(new org.apache.hadoop.fs.Path(s"${s2.root}/$glob")).toSeq
+    def assertStamped(files: Seq[org.apache.hadoop.fs.FileStatus], what: String): Unit = {
+      assert(files.nonEmpty, s"$what published no file")
+      val sorted = files.sortBy(_.getPath.getName)
+      val mtimes = sorted.map(_.getModificationTime)
+      assert(mtimes === mtimes.sorted && mtimes.distinct.size === mtimes.size,
+        s"$what: mtime stamps not strictly increasing in name order: $mtimes")
+      assert(sorted.map(_.getPath.getName.slice(5, 18).toLong) === mtimes,
+        s"$what: name stamps differ from mtimes")
+    }
+    val claims = rows.repartition(3)
+      .withColumn("claim_id", concat_ws(":", col("jid"), lit(0)))
+      .withColumn("claimed_at", current_timestamp())
+      .withColumn("src_file", lit(null).cast("string"))
+    assert(s2.append(s2.processingDir, claims, s2.processingSchema) === 6)
+    val claimFiles = under("processing/part-*")
+    assertStamped(claimFiles, "processing append")
+    val now = System.currentTimeMillis()
+    s2.appendScheduled(rows.withColumn("sched_id", col("jid"))
+      .withColumn("not_before", when(low, lit(new java.sql.Timestamp(now)))
+        .otherwise(lit(new java.sql.Timestamp(now + 2 * 86400000L))))
+      .withColumn("kind", lit("retry")))
+    val schedFiles = under("scheduled/nb_day=*/part-*")
+    assertStamped(schedFiles, "appendScheduled")
+    assert(schedFiles.map(_.getPath.getParent.getName).distinct.size === 2)
+    s2.appendToQueues(rows.withColumn("queue", when(low, lit("qa")).otherwise(lit("qb"))))
+    val fanFiles = under("queue/q[ab]/day=*/part-*")
+    assertStamped(fanFiles, "appendToQueues")
+    assert(fanFiles.map(_.getPath.getParent.getParent.getName).toSet === Set("qa", "qb"))
+    assert(s2.queueRows("qa").count() === 3 && s2.queueRows("qb").count() === 3)
+    s2.tombstone("processing", claims.where(low).select(col("claim_id"), col("queue")))
+    s2.compactProcessing()
+    val snapFiles = s2.dataFiles(s2.processingDir).toSet
+    assert((snapFiles & claimFiles.map(_.getPath.toString).toSet).isEmpty)
+    val liveClaimFiles = under("processing/part-*").filter(f => snapFiles(f.getPath.toString))
+    assertStamped(liveClaimFiles, "compaction snapshot")
+    assert(s2.liveProcessing().count() === 3)
+    // one clock across every path: the root's live files are one FIFO
+    // sequence (superseded files are re-stamped to the commit instant)
+    assertStamped(under("queue/*/day=*/part-*") ++ liveClaimFiles ++
+      under("scheduled/nb_day=*/part-*") ++ under("tombstones/*/part-*"), "all publish paths")
+    // an empty input publishes no file and reports 0 rows
+    assert(s2.append(s2.deadDir, rows.limit(0), s2.deadSchema) === 0)
+    assert(s2.dataFiles(s2.deadDir).isEmpty)
+    s2.appendScheduled(s2.liveScheduled().limit(0))
+    assert(under("scheduled/nb_day=*/part-*").size === schedFiles.size)
   }
 
   test("batch_size multiplies fetch demand: demand counts BulkEvents (B4 multiplier)") {

@@ -223,7 +223,17 @@ class RetryChainSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(hk.promoteDue(System.currentTimeMillis()) === 1)
     val before = store.dataFiles(store.scheduledDir).toSet
     store.compactScheduled() // folds the promoted row's tombstone
-    assert(store.dataFiles(store.scheduledDir).toSet != before)
+    val after = store.dataFiles(store.scheduledDir)
+    assert(after.toSet != before)
+    // the snapshot keeps the partitioning promoteDue prunes on: every
+    // live file sits under nb_day=<UTC date of its rows' not_before>
+    after.foreach { f =>
+      val days = spark.read.parquet(f)
+        .select(date_format(col("not_before"), "yyyy-MM-dd")).distinct()
+        .collect().map(_.getString(0)).toSeq
+      assert(days.map(d => s"nb_day=$d") === Seq(new org.apache.hadoop.fs.Path(f).getParent.getName),
+        s"$f is outside its not_before partition")
+    }
     val (n, jobs) = jobsOf(hk.promoteDue(nb - 1))
     assert(n === 0)
     assert(jobs > 0, "a changed listing must be scanned")

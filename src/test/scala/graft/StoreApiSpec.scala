@@ -274,25 +274,6 @@ class StoreApiSpec extends AnyFunSuite {
     assert(ex2.getMessage.contains("taken over"), ex2.getMessage)
   }
 
-  test("interrupted compaction is recoverable (crash-safe swap)") {
-    import spark.implicits._
-    val store = new QueueStore(spark, TestSpark.tmpRoot("crash"))
-    val api = new DefaultQueueApi(store)
-    api.bulkEnqueue("xq", (1 to 5).map(i => JobSpec("W", args = s"[$i]")))
-    val claimed = store.queueRows("xq")
-      .withColumn("claim_id", concat_ws(":", col("jid"), lit(0)))
-      .withColumn("claimed_at", current_timestamp())
-      .withColumn("src_file", lit(null).cast("string"))
-    store.append(store.processingDir, claimed, store.processingSchema)
-    // simulate a crash mid-swap: table dir renamed aside, new dir absent
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(store.processingDir),
-      new org.apache.hadoop.fs.Path(store.processingDir + ".compact.old"))
-    assert(store.liveProcessing().count() === 0) // table looks gone...
-    store.recoverCompaction(store.processingDir)
-    assert(store.liveProcessing().count() === 5) // ...but nothing was lost
-  }
-
   test("claim fold: counts unchanged across compaction + fold + repeat folds") {
     val store = new QueueStore(spark, TestSpark.tmpRoot("fold"))
     val api = new DefaultQueueApi(store)
@@ -566,53 +547,6 @@ class StoreApiSpec extends AnyFunSuite {
     assert(store.queueRows("fq").count() === 1, "zombie append landed after takeover")
   }
 
-  test("flat (pre-day-partition) queue layout migrates into day= at store init") {
-    import spark.implicits._
-    val root = TestSpark.tmpRoot("migrate")
-    val store1 = new QueueStore(spark, root)
-    val api = new DefaultQueueApi(store1)
-    // build real event rows, then write them the way the OLD layout
-    // did: directly at the queue dir root (append() is layout-agnostic)
-    api.bulkEnqueue("scratch", (1 to 6).map(i => JobSpec("W", args = s"[$i]")))
-    val rows = store1.queueRows("scratch").cache()
-    store1.append(store1.queueDir("legacy"), rows, graft.model.Schemas.event)
-    // a midnight-spanning file: one specific row enqueued "yesterday"
-    val j0 = rows.select("jid").orderBy("jid").limit(1).collect()(0).getString(0)
-    val mixed = rows.withColumn("enqueued_at",
-      when(col("jid") === j0,
-        col("enqueued_at") - expr("INTERVAL 1 DAY")).otherwise(col("enqueued_at")))
-    store1.append(store1.queueDir("legacy"), mixed, graft.model.Schemas.event)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val legacyDir = new org.apache.hadoop.fs.Path(store1.queueDir("legacy"))
-    def rootLevelParts = fs.listStatus(legacyDir)
-      .filter(f => !f.isDirectory && f.getPath.getName.startsWith("part-"))
-    val flatNames = rootLevelParts.map(_.getPath.getName).toSet
-    assert(flatNames.nonEmpty, "setup failed: no flat files written")
-    val beforeJids = store1.queueRows("legacy").select("jid", "enqueued_at")
-      .collect().map(r => (r.getString(0), r.getTimestamp(1))).sortBy(_.toString)
-
-    // re-open the root: init migrates the flat files
-    val store2 = new QueueStore(spark, root)
-    assert(rootLevelParts.isEmpty, "flat files survived migration")
-    val afterJids = store2.queueRows("legacy").select("jid", "enqueued_at")
-      .collect().map(r => (r.getString(0), r.getTimestamp(1))).sortBy(_.toString)
-    assert(afterJids.toSeq === beforeJids.toSeq, "migration changed the row set")
-    // the stream glob now lists every migrated file
-    val globbed = fs.globStatus(
-      new org.apache.hadoop.fs.Path(store2.queueStreamPath("legacy") + "/part-*"))
-    assert(globbed.length >= 2)
-    // single-day files keep their FIFO part-stamp name verbatim
-    val migratedNames = globbed.map(_.getPath.getName).toSet
-    assert(flatNames.exists(migratedNames), "single-day file was renamed in migration")
-    // the day partition value agrees with each row's enqueue day
-    // (pruning on day must never miss rows)
-    val mismatches = store2.queueHistory("legacy")
-      .where(col("day") =!= date_format(col("enqueued_at"), "yyyy-MM-dd"))
-      .count()
-    assert(mismatches === 0, s"$mismatches rows landed in the wrong day partition")
-    rows.unpersist()
-  }
-
   test("dead-letter fold collapses replay duplicates to one deduped snapshot") {
     val store = new QueueStore(spark, TestSpark.tmpRoot("deadfold"), compactionGraceMs = 0)
     val api = new DefaultQueueApi(store)
@@ -646,67 +580,6 @@ class StoreApiSpec extends AnyFunSuite {
     assert(api.recorded.size === 4)
     assert(api.recorded.last._3 === 5000)
     assert(api.jobCounts(Seq("q"))("q") === 3) // enqueueIn not counted as queued
-  }
-
-  test("flat-layout migration converges after a crash between move-in and delete") {
-    import spark.implicits._
-    val rootA = TestSpark.tmpRoot("migrate-full")
-    val storeA = new QueueStore(spark, rootA)
-    val api = new DefaultQueueApi(storeA)
-    api.bulkEnqueue("scratch", (1 to 8).map(i => JobSpec("W", args = s"[$i]")))
-    val rows = storeA.queueRows("scratch").cache()
-    // a midnight-spanning flat file: half the rows enqueued "yesterday",
-    // so migration takes the multi-day SPLIT path (staging + per-day
-    // deterministic part names), not the single-day rename
-    val jids = rows.select("jid").orderBy("jid").collect().map(_.getString(0))
-    val backdated = jids.take(4).toSet
-    val mixed = rows.withColumn("enqueued_at",
-      when(col("jid").isin(backdated.toSeq: _*),
-        col("enqueued_at") - expr("INTERVAL 1 DAY")).otherwise(col("enqueued_at")))
-      .coalesce(1) // ONE flat file holding both days
-    storeA.append(storeA.queueDir("legacy"), mixed, graft.model.Schemas.event)
-    rows.unpersist()
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val legacyA = new org.apache.hadoop.fs.Path(storeA.queueDir("legacy"))
-    // snapshot the pre-migration flat state before store init migrates it
-    val rootB = TestSpark.tmpRoot("migrate-crash")
-    val legacyB = new org.apache.hadoop.fs.Path(
-      legacyA.toString.replace(rootA, rootB))
-    fs.mkdirs(legacyB.getParent)
-    org.apache.hadoop.fs.FileUtil.copy(fs, legacyA, fs, legacyB, false,
-      spark.sparkContext.hadoopConfiguration)
-    // rootA: the clean full migration — the reference row set + layout
-    val storeA2 = new QueueStore(spark, rootA)
-    val expect = storeA2.queueRows("legacy").select("jid", "enqueued_at")
-      .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime)).sorted.toSeq
-    assert(expect.size === 8)
-    val dayDirs = fs.listStatus(legacyA).filter(d =>
-      d.isDirectory && d.getPath.getName.startsWith("day="))
-    assert(dayDirs.length === 2, "setup: expected a two-day split")
-    // rootB: reproduce the CRASH state — one day's split file already
-    // moved in (its deterministic migrated name), the flat original
-    // still present, the other day not yet migrated
-    val firstDay = dayDirs.minBy(_.getPath.getName)
-    val migrated = fs.listStatus(firstDay.getPath)
-      .filter(_.getPath.getName.contains("-migr"))
-    assert(migrated.nonEmpty, "setup: expected -migr split names")
-    migrated.foreach { f =>
-      val dst = new org.apache.hadoop.fs.Path(
-        f.getPath.toString.replace(rootA, rootB))
-      fs.mkdirs(dst.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs, dst, false,
-        spark.sparkContext.hadoopConfiguration)
-    }
-    // re-run the migration on the crash state: the exists-check must
-    // converge (skip the already-landed split) — identical row set, no
-    // duplicates, no loss
-    val storeB = new QueueStore(spark, rootB)
-    val got = storeB.queueRows("legacy").select("jid", "enqueued_at")
-      .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime)).sorted.toSeq
-    assert(got === expect, "crash-rerun migration changed the row set")
-    val flatLeft = fs.listStatus(legacyB).filter(f =>
-      !f.isDirectory && f.getPath.getName.startsWith("part-"))
-    assert(flatLeft.isEmpty, "flat original survived the converged migration")
   }
 
   test("rate-limit mirror: a wider window after narrow-caller pruning recounts from the log") {
