@@ -257,51 +257,18 @@ object Bench {
     }
     val sbJson = sb.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // CPU calibration probe: a fixed JVM integer-spin, single-thread and
-    // all-threads-wall. Rounds run on whatever VM the driver lands on —
-    // round 10's host timed byte-identical plans ~2x round 8's on
-    // identical fixture content — so BENCH.json carries its own
-    // hardware yardstick: compare cpu_probe across rounds FIRST, then
-    // query times normalized by it.
-    def spin(iters: Long): Long = {
-      var x = 0x9e3779b97f4a7c15L; var i = 0L
-      while (i < iters) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      x
-    }
-    def probeSt(): Double = {
-      val t0 = System.nanoTime(); spin(200000000L); (System.nanoTime() - t0) / 1e9
-    }
-    def probeMt(): Double = {
-      val n = Runtime.getRuntime.availableProcessors()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-      val t0 = System.nanoTime()
-      val fs = (1 to n).map(_ => pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = spin(200000000L)
-      }))
-      fs.foreach(_.get())
-      pool.shutdown()
-      (System.nanoTime() - t0) / 1e9
-    }
-    spin(20000000L) // JIT warm
-    val (st, mt) = (probeSt(), probeMt())
-    // Scheduler-latency probe — the contention mode the CPU-spin pair
-    // CANNOT see (r15/r16 evidence: two runs with band-clean spin
-    // probes and +12 s / +50 s totals concentrated in many-job
-    // iterative queries; a direct measurement found empty-job
-    // round-trips at 102 ms on a spin-clean host vs ~10-30 ms
-    // healthy). Spin measures pure userspace compute; query wall time
-    // is also thread wakeups, futexes, and task dispatch — iterative
-    // CC queries run hundreds of short jobs and amplify every extra
-    // millisecond. Median of 30 empty jobs, against a pinned canonical
-    // 20 ms; > 2.5x flags the run band-suspect like the spin probe.
-    val jobLatMs: Double = {
-      (1 to 5).foreach(_ => spark.range(1).count()) // scheduler warm
-      val ls = (1 to 30).map { _ =>
-        val t0 = System.nanoTime(); spark.range(1).count()
-        (System.nanoTime() - t0) / 1e6
-      }.sorted
-      ls(ls.size / 2)
-    }
+    // Host yardsticks (HostProbe): the CPU-spin pair, single-thread and
+    // all-threads-wall, and the median empty-job round-trip. Rounds run
+    // on whatever VM the driver lands on — round 10's host timed
+    // byte-identical plans ~2x round 8's on identical fixture content —
+    // so BENCH.json carries its own hardware yardstick: compare the
+    // probes across rounds FIRST, then query times normalized by them.
+    // The job probe sees the contention mode the spin pair cannot
+    // (r15/r16: band-clean spin probes, +12 s / +50 s totals in
+    // many-job iterative queries, empty-job round-trips at 102 ms vs
+    // ~10-30 ms healthy).
+    val (st, mt) = HostProbe.cpuProbes()
+    val jobLatMs = HostProbe.jobProbeMs(spark)._1
     // Band self-certification: the round artifact (BENCH_r{N}.json, the
     // parsed compact line) must carry its own hardware yardstick — the
     // full BENCH.json embeds the probes, but adjudicating a cross-round
@@ -344,9 +311,7 @@ object Bench {
           f"breadth ${breadth * 100}%.0f%%, top5 ${topShare * 100}%.0f%%)")
         s""""noise_verdict":{"verdict":"$verdict","gap_sec":${r3(gap)},"breadth":${r3(breadth)},"top5_share":${r3(topShare)},"top_movers":$moversJson}"""
       }
-    val bandSuspect =
-      math.max(mt, CanonicalMtRefSec) / math.min(mt, CanonicalMtRefSec) > 1.25 ||
-        jobLatMs > CanonicalJobLatMs * 2.5
+    val bandSuspect = HostProbe.bandSuspect(mt, jobLatMs)
     val refJson = s""","cpu_probe_mt_ref_sec":$CanonicalMtRefSec""" +
       prevMt.map(r => s""","cpu_probe_mt_prev_sec":$r""").getOrElse("")
     val hw = s""""hardware":{"cpus":"$cpus","maxHeapGb":${Runtime.getRuntime.maxMemory / (1L << 30)},"cpu_probe_st_sec":${BigDecimal(st).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"cpu_probe_mt_sec":${BigDecimal(mt).setScale(3, BigDecimal.RoundingMode.HALF_UP)}$refJson,"job_probe_ms":${BigDecimal(jobLatMs).setScale(1, BigDecimal.RoundingMode.HALF_UP)},"job_probe_ref_ms":$CanonicalJobLatMs,"band_suspect":$bandSuspect}"""

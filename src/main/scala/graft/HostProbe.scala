@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   * 25-minute runs on a host whose scheduler latency (98–190 ms
   * round-trips, healthy 10–30 ms) was invisible until measured.
   *
-  * The probe primitives are shared with [[IngestBench]] so every
-  * committed artifact carries its own hardware yardstick.
+  * The probe primitives are shared with [[Bench]], [[IngestBench]]
+  * and [[QueryProbe]], and the band-suspect flag with the first two,
+  * so every committed artifact carries the same hardware yardstick.
   */
 object HostProbe {
   private def spin(iters: Long): Long = {
@@ -52,11 +53,22 @@ object HostProbe {
     (ls(ls.size / 2), ls((ls.size * 9) / 10))
   }
 
+  /** The band-suspect flag every bench artifact carries: the
+    * all-threads spin more than 25% off [[Bench.CanonicalMtRefSec]]
+    * either way, or the empty-job median past 2.5x
+    * [[Bench.CanonicalJobLatMs]]. */
+  private[graft] def bandSuspect(mt: Double, jobMs: Double): Boolean =
+    math.max(mt, Bench.CanonicalMtRefSec) /
+      math.min(mt, Bench.CanonicalMtRefSec) > 1.25 ||
+      jobMs > Bench.CanonicalJobLatMs * 2.5
+
   def main(args: Array[String]): Unit = {
     val (st, mt) = cpuProbes()
+    // the scheduler width of the Bench run this probe certifies
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

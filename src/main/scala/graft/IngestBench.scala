@@ -25,6 +25,7 @@ object IngestBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -73,10 +74,7 @@ object IngestBench {
       // not comparable across rounds without it
       val (st, mt) = HostProbe.cpuProbes()
       val (jobMs, _) = HostProbe.jobProbeMs(spark)
-      val bandSuspect =
-        math.max(mt, Bench.CanonicalMtRefSec) /
-          math.min(mt, Bench.CanonicalMtRefSec) > 1.25 ||
-          jobMs > Bench.CanonicalJobLatMs * 2.5
+      val bandSuspect = HostProbe.bandSuspect(mt, jobMs)
       val json = s"""{"metric":"ingest_bench","build_sec":${r3(buildSec)},""" +
         s""""ingest_total_sec":${r3(perBatch.sum)},""" +
         s""""ingest_per_batch_sec":[${perBatch.map(r3).mkString(",")}],""" +

@@ -174,7 +174,6 @@ class IvfPqSpec extends AnyFunSuite {
     val q = Seq((3L, e3)).toDF("query_id", "embedding")
     val beforeRows = IvfMaintenance.adcKnn(spark, out, q, k = 3, nprobe = 2)
       .collect().sortBy(_.getInt(3))
-    val before = beforeRows.map(_.getLong(1)).toSet
     val victim = beforeRows.head.getLong(1) // the rank-1 neighbor
     IvfMaintenance.remove(spark, Seq(victim).toDF("vec_id"), out, "rm-victim")
     val after = IvfMaintenance.adcKnn(spark, out, q, k = 3, nprobe = 2)

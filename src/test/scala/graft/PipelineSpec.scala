@@ -144,7 +144,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
       PipelineConfig("pp2", "pace", rateLimitCount = Some(10),
         rateLimitScaleMs = Some(1500), pollIntervalMs = 100))
     api.bulkEnqueue("pace", (1 to 25).map(i => JobSpec("EchoWorker", args = s"[p$i]")))
-    val q = runner.start().get
+    runner.start().get
     val t0 = System.currentTimeMillis()
     val deadline = t0 + 60000
     while (Buffers.echo.size < 25 && System.currentTimeMillis() < deadline)
@@ -426,7 +426,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     // phase 1: consume ONE file, then stop (simulated crash/restart point)
     val r1 = new PipelineRunner(store,
       PipelineConfig("rec_p", "rcq", maxDemand = 1, pollIntervalMs = 50))
-    val q1 = r1.start().get
+    r1.start().get
     val deadline = System.currentTimeMillis() + 30000
     while (seen.size < 5 && System.currentTimeMillis() < deadline) Thread.sleep(50)
     r1.stop()
