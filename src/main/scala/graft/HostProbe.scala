@@ -66,11 +66,7 @@ object HostProbe {
     val (st, mt) = cpuProbes()
     // the scheduler width of the Bench run this probe certifies
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val (jobMs, jobP90) = jobProbeMs(spark)
     spark.stop()

@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Delta-ingest micro-benchmark — the operator-side ruler the registry
   * bench cannot provide (registry queries re-derive delta semantics
   * under the DuckDB oracle; this times the OPERATOR: CurationRun +
   * buildIndex, then N sequential ingestKeyed batches + a readFinal
-  * fold). Prints one JSON line, same contract as [[Bench]]. Used to
+  * fold). Prints one JSON line, same contract as [[Bench]]; that line
+  * is the artifact, and nothing else is written (refresh the committed
+  * INGEST.json on purpose with `... | tail -1 > INGEST.json`). Used to
   * adjudicate delta-family changes (the r16 localCheckpoint→MatScope
   * conversion) against a fixed workload.
   *
@@ -19,15 +20,7 @@ object IngestBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nBatches = sys.env.getOrElse("GRAFT_INGEST_BATCHES", "5").toInt
     val batchDocs = sys.env.getOrElse("GRAFT_INGEST_BATCH_DOCS", "60").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -83,13 +76,6 @@ object IngestBench {
         s""""cpu_probe_st_sec":${r3(st)},"cpu_probe_mt_sec":${r3(mt)},""" +
         s""""job_probe_ms":${r3(jobMs)},"band_suspect":$bandSuspect,""" +
         s""""sf":"$sfDir"}"""
-      // persist next to BENCH.json so every certified session commits
-      // the delta-ingest trend row alongside the query-bench artifact
-      try {
-        val w = new java.io.PrintWriter(
-          Bench.benchJsonPath.resolveSibling("INGEST.json").toFile)
-        try w.println(json) finally w.close()
-      } catch { case _: Throwable => () }
       spark.stop()
       Thread.sleep(300)
       System.out.flush(); System.err.flush()

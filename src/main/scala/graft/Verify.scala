@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-loop helper: dump oracle_sql.json WITHOUT running any Spark query
@@ -21,16 +20,7 @@ object Verify {
     val onlyQueries: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries nanosecond timestamps; read ts as epoch-ns
-      // BIGINT (matches DuckDB's micro-truncated view via ts div 1000).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Failures are persisted to _errors.json, not just stderr: round 9's

@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.queries.DedupQueries
-import graft.operators.SegmentLog.{fs, presentSegs}
+import graft.operators.SegmentLog.{committedLog, foldLatest, fs, readCommitted}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -216,41 +216,18 @@ object DeltaIngest {
     segs + 0L
   }
 
-  /** All committed rows of a log table (with their `seg`), empty-safe.
-    * Reads only the allowed segment dirs, so an uncommitted (crashed)
-    * segment is invisible — snapshot isolation on bare parquet. */
-  /** `allowedSegs`: pass a committed-segment snapshot to pin several
-    * reads to ONE commit point (a concurrent ingest landing between two
-    * default-snapshot reads would otherwise show each read a different
-    * index state); None re-lists per read — fine inside the
-    * single-writer ingest, wrong for multi-table readers. */
+  /** All committed rows of an index log table (with their `seg`),
+    * empty-safe ([[SegmentLog.readCommitted]]). `allowedSegs`: pass a
+    * committed-segment snapshot to pin several reads to ONE commit
+    * point (a concurrent ingest landing between two default-snapshot
+    * reads would otherwise show each read a different index state);
+    * None re-lists per read — fine inside the single-writer ingest,
+    * wrong for multi-table readers. */
   private[graft] def readLog(
       s: SparkSession, outDir: String, table: String,
-      schema: StructType, allowedSegs: Option[Set[Long]] = None): DataFrame = {
-    val root = s"${idxDir(outDir)}/$table"
-    val allowed = allowedSegs.getOrElse(committedSegs(s, outDir))
-    val segs = presentSegs(s, root).filter(allowed)
-    if (segs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], schema.add("seg", LongType))
-    else
-      s.read.option("basePath", root)
-        .parquet(segs.map(n => s"$root/seg=$n"): _*)
-        .withColumn("seg", col("seg").cast("long"))
-  }
-
-  /** Latest row per key across segments; tombstones (`dead`) drop. The
-    * fold COMMUTES with any key-predicate, so callers bound first (a
-    * candidate semi-join), fold the survivors — never an index-sized
-    * shuffle. */
-  private[graft] def foldLog(df: DataFrame, key: Seq[String]): DataFrame = {
-    val payload = df.columns.filterNot(c => key.contains(c) || c == "seg").toSeq
-    val folded = df
-      .groupBy(key.map(col): _*)
-      .agg(max(struct((col("seg") +: payload.map(col)): _*)).as("b"))
-      .select((key.map(col) ++ payload.map(p => col(s"b.$p").as(p))): _*)
-    if (folded.columns.contains("dead")) folded.where(!col("dead")).drop("dead")
-    else folded
-  }
+      schema: StructType, allowedSegs: Option[Set[Long]] = None): DataFrame =
+    readCommitted(s, s"${idxDir(outDir)}/$table",
+      allowedSegs.getOrElse(committedSegs(s, outDir)), schema)
 
   private val BandsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("band", IntegerType),
@@ -270,6 +247,12 @@ object DeltaIngest {
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
+  // fold payloads in each table's column order ([[SegmentLog.foldLatest]]
+  // keys the struct on them, so the order fixes the tie-breaks)
+  private val MemberFields = Seq("cluster_id")
+  private val KeeperFields = Seq("keeper_id", "keeper_len")
+  private val MetaFields = Seq("n_grams", "n_shared", "dead")
+  private val ManifestFields = Seq("split", "source", "n_chars", "shard", "dead")
 
   /** The UNFOLDED manifest union (base run rows as seg 0 + the
     * committed increment log) — the one definition both [[readManifest]]
@@ -283,22 +266,16 @@ object DeltaIngest {
       .select(col("doc_id"), col("split"), col("source"), col("n_chars"),
         col("shard"))
       .withColumn("dead", lit(false)).withColumn("seg", lit(0L))
-    val root = s"$outDir/manifest_log"
-    val segs = presentSegs(s, root).filter(allowed)
-    if (segs.isEmpty) base
-    else base.unionAll(
-      s.read.option("basePath", root)
-        .parquet(segs.map(n => s"$root/seg=$n"): _*)
-        .withColumn("seg", col("seg").cast("long"))
-        .select("doc_id", "split", "source", "n_chars", "shard", "dead", "seg"))
+    committedLog(s, s"$outDir/manifest_log", allowed).fold(base)(log =>
+      base.unionAll(log.select(("doc_id" +: ManifestFields :+ "seg").map(col): _*)))
   }
 
   /** The curated-layout manifest as of the last committed ingest: the
     * base run's manifest folded with the per-ingest increment log.
     * Works on a plain CurationRun dir too (no log → the base manifest). */
   def readManifest(s: SparkSession, outDir: String): DataFrame =
-    foldLog(manifestAll(s, outDir, committedSegs(s, outDir)), Seq("doc_id"))
-      .select("doc_id", "split", "source", "n_chars", "shard")
+    foldLatest(manifestAll(s, outDir, committedSegs(s, outDir)), Seq("doc_id"),
+      ManifestFields)
 
   private val FinalCols = Seq("doc_id", "text", "lang", "n_chars", "split", "source")
 
@@ -339,21 +316,15 @@ object DeltaIngest {
     * never mask a NEW segment. */
   def readFinal(s: SparkSession, outDir: String): DataFrame = {
     val base = s.read.parquet(s"$outDir/final").select(FinalCols.map(col): _*)
-    val root = s"$outDir/final_log"
     val epoch = foldedEpoch(s, outDir)
-    val committed = committedSegs(s, outDir)
-    val segs = presentSegs(s, root).filter(n => n > epoch && committed(n))
-    if (segs.isEmpty) base
-    else {
-      val log = s.read.option("basePath", root)
-        .parquet(segs.map(n => s"$root/seg=$n"): _*)
-        .withColumn("seg", col("seg").cast("long"))
+    committedLog(s, s"$outDir/final_log",
+        committedSegs(s, outDir).filter(_ > epoch)).fold(base) { log =>
       // a dead row's id may also be log-APPENDED-then-removed (not in
       // base) — the anti-join is a no-op for those and the fold drops
       // their live rows, so dead-only stays exact for every history
       val deadIds = log.where(col("dead")).select("doc_id").distinct()
       base.join(deadIds, Seq("doc_id"), "left_anti")
-        .unionAll(foldLog(log, Seq("doc_id")).select(FinalCols.map(col): _*))
+        .unionAll(foldLatest(log, Seq("doc_id"), FinalCols.tail :+ "dead"))
     }
   }
 
@@ -498,16 +469,16 @@ object DeltaIngest {
     // live manifest rows for the queried ids: bound base + log first,
     // then fold (readManifest folds the whole corpus — same fold, same
     // result on the bounded slice)
-    val live = foldLog(manifestAll(s, outDir, allowed)
-        .join(q, Seq("doc_id"), "left_semi"), Seq("doc_id"))
+    val live = foldLatest(manifestAll(s, outDir, allowed)
+        .join(q, Seq("doc_id"), "left_semi"), Seq("doc_id"), ManifestFields)
       .select(col("doc_id"), col("split"))
     // cluster membership + current keeper, candidate-bounded: only the
     // queried ids' member rows, only THEIR clusters' keeper rows
-    val mem = foldLog(readLog(s, outDir, "members", MembersSchema, Some(allowed))
-        .join(q, Seq("doc_id"), "left_semi"), Seq("doc_id"))
-    val keep = foldLog(readLog(s, outDir, "keepers", KeepersSchema, Some(allowed))
+    val mem = foldLatest(readLog(s, outDir, "members", MembersSchema, Some(allowed))
+        .join(q, Seq("doc_id"), "left_semi"), Seq("doc_id"), MemberFields)
+    val keep = foldLatest(readLog(s, outDir, "keepers", KeepersSchema, Some(allowed))
         .join(mem.select("cluster_id"), Seq("cluster_id"), "left_semi"),
-      Seq("cluster_id"))
+      Seq("cluster_id"), KeeperFields)
     val keeperOf = mem.join(keep, "cluster_id")
       .select(col("doc_id"), col("keeper_id"))
     // gated-corpus membership (ids only — column-pruned scans)
@@ -734,15 +705,9 @@ object DeltaIngest {
     * files, manifest_log segments, and staging dirs (committed ones
     * too — those are post-commit leftovers). */
   private[graft] def wipeUncommitted(s: SparkSession, outDir: String): Unit = {
-    val allowed = committedSegs(s, outDir)
-    val idx = idxDir(outDir)
-    for (t <- LogTables; n <- presentSegs(s, s"$idx/$t") if !allowed(n)) {
-      val p = new Path(s"$idx/$t/seg=$n"); fs(s, p).delete(p, true)
-    }
-    for (root <- Seq(s"$outDir/manifest_log", s"$outDir/final_log");
-        n <- presentSegs(s, root) if !allowed(n)) {
-      val p = new Path(s"$root/seg=$n"); fs(s, p).delete(p, true)
-    }
+    SegmentLog.wipeUncommitted(s, committedSegs(s, outDir),
+      LogTables.map(t => s"${idxDir(outDir)}/$t") ++
+        Seq(s"$outDir/manifest_log", s"$outDir/final_log"))
     val stRoot = new Path(s"$outDir/delta_staging")
     val f = fs(s, stRoot)
     if (f.exists(stRoot)) f.listStatus(stRoot).foreach { st =>
@@ -875,16 +840,16 @@ object DeltaIngest {
     // bounding (fold commutes with key predicates), so neither probe
     // shuffles the index. Docs absent from members are singletons →
     // their own keeper, length from the candidate read.
-    val membersCand = foldLog(
+    val membersCand = foldLatest(
       readLog(s, outDir, "members", MembersSchema)
         .join(xCand.select(col("base_id").as("doc_id")).distinct(),
           Seq("doc_id"), "left_semi"),
-      Seq("doc_id")).localCheckpoint(true)
-    val keepersCand = foldLog(
+      Seq("doc_id"), MemberFields).localCheckpoint(true)
+    val keepersCand = foldLatest(
       readLog(s, outDir, "keepers", KeepersSchema)
         .join(membersCand.select("cluster_id").distinct(),
           Seq("cluster_id"), "left_semi"),
-      Seq("cluster_id"))
+      Seq("cluster_id"), KeeperFields)
     val matchedKeepers = xPairs
       .join(dClusters.select(col("doc_id").as("delta_id"), col("dcid")), "delta_id")
       .join(membersCand.select(col("doc_id").as("base_id"), col("cluster_id")),
@@ -958,10 +923,10 @@ object DeltaIngest {
       .groupBy("doc_id").agg(count(lit(1)).as("n_new"))
       .localCheckpoint(true)
     // candidate-bounded fold of the meta rows the increment touches
-    val metaCand = foldLog(
+    val metaCand = foldLatest(
       readLog(s, outDir, "train_meta", MetaSchema)
         .join(newShared.select("doc_id"), Seq("doc_id"), "left_semi"),
-      Seq("doc_id")).localCheckpoint(true)
+      Seq("doc_id"), MetaFields).localCheckpoint(true)
     // lazy (same reason as `kept`): a filter over two checkpointed
     // frames — its consumers re-run a delta-sized join, not the log read
     val baseContam = metaCand.join(newShared, "doc_id")
@@ -1209,18 +1174,15 @@ object DeltaIngest {
     resumeIncomplete(s, outDir)
     wipeUncommitted(s, outDir)
     val idx = idxDir(outDir)
-    def rewrite(root: String, df: DataFrame): Unit = {
-      val staged = s"${root}_compacted"
-      df.write.mode("overwrite").parquet(s"$staged/seg=0")
-      SegmentLog.swapDir(s, staged, root)
-    }
+    def rewrite(root: String, df: DataFrame): Unit = SegmentLog.swapDir(s,
+      SegmentLog.stageCompaction(s, root, 0L)(df.write.mode("overwrite").parquet), root)
     // folded tables: latest row per key survives (and drops its seg)
     rewrite(s"$idx/keepers",
-      foldLog(readLog(s, outDir, "keepers", KeepersSchema), Seq("cluster_id"))
-        .localCheckpoint(true))
+      foldLatest(readLog(s, outDir, "keepers", KeepersSchema), Seq("cluster_id"),
+        KeeperFields).localCheckpoint(true))
     rewrite(s"$idx/train_meta",
-      foldLog(readLog(s, outDir, "train_meta", MetaSchema), Seq("doc_id"))
-        .withColumn("dead", lit(false)).localCheckpoint(true))
+      foldLatest(readLog(s, outDir, "train_meta", MetaSchema), Seq("doc_id"),
+        MetaFields).withColumn("dead", lit(false)).localCheckpoint(true))
     // append-only tables: concatenate segments
     for ((t, schema) <- Seq(("bands", BandsSchema), ("members", MembersSchema),
         ("train_grams", GramsSchema), ("holdout_grams", HoldSchema),
@@ -1229,9 +1191,8 @@ object DeltaIngest {
         readLog(s, outDir, t, schema).drop("seg").localCheckpoint(true))
     // manifest: fold the log into a fresh base manifest, then drop the log
     val manifest = readManifest(s, outDir).localCheckpoint(true)
-    val staged = s"$outDir/manifest.parquet_compacted"
-    manifest.write.mode("overwrite").parquet(staged)
-    SegmentLog.swapDir(s, staged, s"$outDir/manifest.parquet")
+    SegmentLog.swapDir(s, SegmentLog.stageTable(s, s"$outDir/manifest.parquet")(
+      manifest.write.mode("overwrite").parquet), s"$outDir/manifest.parquet")
     val mlog = new Path(s"$outDir/manifest_log")
     fs(s, mlog).delete(mlog, true)
     // final layout: fold the edit log into a fresh IMMUTABLE base —
@@ -1253,14 +1214,14 @@ object DeltaIngest {
     // counting toward the compaction trigger once folded
     val priorEpoch = foldedEpoch(s, outDir)
     val foldedMax = (committedSegs(s, outDir) + priorEpoch).max
-    val finalStaged = s"$outDir/final_compacted"
-    readFinal(s, outDir)
-      .repartition(col("split"), col("source"))
-      .sortWithinPartitions("split", "source", "doc_id")
-      .write.mode("overwrite").partitionBy("split", "source")
-      .parquet(finalStaged)
-    SegmentLog.writeSmallFile(s, s"$finalStaged/_folded_max_seg",
-      foldedMax.toString)
+    val finalStaged = SegmentLog.stageTable(s, s"$outDir/final") { staged =>
+      readFinal(s, outDir)
+        .repartition(col("split"), col("source"))
+        .sortWithinPartitions("split", "source", "doc_id")
+        .write.mode("overwrite").partitionBy("split", "source")
+        .parquet(staged)
+      SegmentLog.writeSmallFile(s, s"$staged/_folded_max_seg", foldedMax.toString)
+    }
     SegmentLog.swapDir(s, finalStaged, s"$outDir/final")
     val flog = new Path(s"$outDir/final_log")
     fs(s, flog).delete(flog, true)

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.operators.SegmentLog.{foldLatest, fs, presentSegs, readCommitted}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -202,14 +203,8 @@ object IvfMaintenance {
     StructField("e", ArrayType(DoubleType)), StructField("dead", BooleanType),
     StructField("shard", IntegerType)))
 
-  private def fs(s: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
   private def committedSegs(s: SparkSession, outDir: String): Set[Long] =
     SegmentLog.committedSegs(s, markerDir(outDir))
-
-  private def presentSegs(s: SparkSession, root: String): Seq[Long] =
-    SegmentLog.presentSegs(s, root)
 
   /** Marker NAME carries the segment number (the visibility set);
     * marker CONTENT carries the batch key (the replay identity) — one
@@ -236,7 +231,7 @@ object IvfMaintenance {
   /** Uncommitted segment dirs are crash leftovers: readers never admit
     * them, and the next writer sweeps them before computing. */
   private def wipeUncommitted(s: SparkSession, outDir: String): Unit =
-    SegmentLog.wipeUncommitted(s, markerDir(outDir),
+    SegmentLog.wipeUncommitted(s, committedSegs(s, outDir),
       Seq(centRoot(outDir), asgRoot(outDir), pqRoot(outDir), pqCbRoot(outDir)))
 
   /** The centroid table as of the last committed segment:
@@ -258,26 +253,18 @@ object IvfMaintenance {
     * drop. The fold commutes with cell predicates (a moved vector is
     * tombstoned in its OLD cell), so bound first, fold the survivors. */
   def assignments(s: SparkSession, outDir: String): DataFrame =
-    foldAsg(readAsgLog(s, outDir)).select("vec_id", "cell", "e")
+    foldLatest(readAsgLog(s, outDir), AsgKey, AsgFields)
+      .select("vec_id", "cell", "e")
 
   private def readAsgLog(s: SparkSession, outDir: String,
-      allowedSegs: Option[Set[Long]] = None): DataFrame = {
-    val root = asgRoot(outDir)
-    val allowed = allowedSegs.getOrElse(committedSegs(s, outDir))
-    val segs = presentSegs(s, root).filter(allowed)
-    if (segs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], AsgSchema.add("seg", LongType))
-    else
-      s.read.option("basePath", root)
-        .parquet(segs.map(n => s"$root/seg=$n"): _*)
-        .withColumn("seg", col("seg").cast("long"))
-  }
+      allowedSegs: Option[Set[Long]] = None): DataFrame =
+    readCommitted(s, asgRoot(outDir),
+      allowedSegs.getOrElse(committedSegs(s, outDir)), AsgSchema)
 
-  private def foldAsg(log: DataFrame): DataFrame =
-    log.groupBy("cell", "vec_id")
-      .agg(max(struct(col("seg"), col("dead"), col("e"))).as("b"))
-      .where(!col("b.dead"))
-      .select(col("vec_id"), col("cell"), col("b.e").as("e"))
+  // the lists' fold: keyed per cell (a moved vector is tombstoned in
+  // its OLD cell), a tombstone beating a live row of its own segment
+  private val AsgKey = Seq("cell", "vec_id")
+  private val AsgFields = Seq("dead", "e")
 
   private def shardOf(cell: Column, nShards: Int): Column =
     (cell % nShards).cast("int")
@@ -571,10 +558,10 @@ object IvfMaintenance {
         // touches only the split cells' bytes.
         val nsh = layoutShards(s, outDir)
         val flaggedShards = flaggedCells.map(c => (c % nsh).toInt).distinct
-        val baseMembers = foldAsg(
+        val baseMembers = foldLatest(
           readAsgLog(s, outDir)
             .where(col("shard").isin(flaggedShards: _*) &&
-              col("cell").isin(flaggedCells: _*)))
+              col("cell").isin(flaggedCells: _*)), AsgKey, AsgFields)
           .select(col("vec_id"), col("cell"), col("e"), lit(false).as("is_delta"))
         val members = baseMembers.unionAll(
           dAsg.join(broadcast(flagged), Seq("cell"), "left_semi")
@@ -679,8 +666,9 @@ object IvfMaintenance {
         // the tombstoned-row count rides the fold's checkpoint action
         // (r18 observe-fusion: checkpoint + count was two jobs)
         val obsL = org.apache.spark.sql.Observation()
-        val live = foldAsg(readAsgLog(s, outDir)
-            .join(ids.select(col("vec_id")), Seq("vec_id"), "left_semi"))
+        val live = foldLatest(readAsgLog(s, outDir)
+            .join(ids.select(col("vec_id")), Seq("vec_id"), "left_semi"),
+            AsgKey, AsgFields)
           .observe(obsL, count(lit(1)).as("n"))
           .localCheckpoint(true)
         val nLive = obsL.get("n").asInstanceOf[Long]
@@ -791,9 +779,9 @@ object IvfMaintenance {
       .localCheckpoint(true) // needsMerge guarantees nonempty (see scaladoc)
     val nsh = layoutShards(s, outDir)
     val flaggedShards = flaggedCells.map(c => (c % nsh).toInt).distinct
-    val members = foldAsg(readAsgLog(s, outDir)
+    val members = foldLatest(readAsgLog(s, outDir)
         .where(col("shard").isin(flaggedShards: _*) &&
-          col("cell").isin(flaggedCells: _*)))
+          col("cell").isin(flaggedCells: _*)), AsgKey, AsgFields)
       .localCheckpoint(true)
     val re = assign(members.select("vec_id", "e"), survivors)
       .join(members.select(col("vec_id"), col("cell").as("old_cell"), col("e")),
@@ -843,8 +831,9 @@ object IvfMaintenance {
       case Some(sp) => probeCellsHier(s, outDir, queries, nprobe, sp, allowed)
       case None => probeCells(s, outDir, queries, nprobe, allowed)
     }
-    val cand = foldAsg(readAsgLog(s, outDir, Some(allowed))
-      .where(col("shard").isin(shards: _*) && col("cell").isin(cells: _*)))
+    val cand = foldLatest(readAsgLog(s, outDir, Some(allowed))
+      .where(col("shard").isin(shards: _*) && col("cell").isin(cells: _*)),
+      AsgKey, AsgFields).select("vec_id", "cell", "e")
     val scored = probes.join(cand, "cell")
       .where(!lit(excludeSelfId) || col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -1336,23 +1325,8 @@ object IvfMaintenance {
     s.read.parquet(s"${pqCbRoot(outDir)}/seg=$cbSeg").select("m", "cw", "c")
 
   private def readCodesLog(s: SparkSession, outDir: String,
-      allowed: Set[Long]): DataFrame = {
-    val root = pqRoot(outDir)
-    val segs = presentSegs(s, root).filter(allowed)
-    if (segs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        PqCodesSchema.add("seg", LongType))
-    else
-      s.read.option("basePath", root)
-        .parquet(segs.map(n => s"$root/seg=$n"): _*)
-        .withColumn("seg", col("seg").cast("long"))
-  }
-
-  /** Latest committed code per (vec_id, m). */
-  private def foldCodes(log: DataFrame): DataFrame =
-    log.groupBy("vec_id", "m")
-      .agg(max(struct(col("seg"), col("code"))).as("b"))
-      .select(col("vec_id"), col("m"), col("b.code").as("code"))
+      allowed: Set[Long]): DataFrame =
+    readCommitted(s, pqRoot(outDir), allowed, PqCodesSchema)
 
   /** argmin codeword per (vec, subspace) against the broadcast
     * codebooks — ties to the smaller codeword id (the pqScored rule). */
@@ -1552,13 +1526,10 @@ object IvfMaintenance {
       .localCheckpoint(true)
     // candidate ids from the probed cells — the embedding column never
     // leaves the scan (id-width fold)
-    val candIds = readAsgLog(s, outDir, Some(allowed))
+    val candIds = foldLatest(readAsgLog(s, outDir, Some(allowed))
       .where(col("shard").isin(shards: _*) && col("cell").isin(cells: _*))
-      .select("vec_id", "cell", "seg", "dead")
-      .groupBy("cell", "vec_id")
-      .agg(max(struct(col("seg"), col("dead"))).as("b"))
-      .where(!col("b.dead"))
-      .select(col("vec_id"), col("cell"))
+      .select("vec_id", "cell", "seg", "dead"), AsgKey, Seq("dead"))
+      .select("vec_id", "cell")
     val pairs = probes.select("query_id", "cell").join(candIds, "cell")
       .where(!lit(excludeSelfId) || col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
@@ -1572,9 +1543,10 @@ object IvfMaintenance {
     // only segments at/after the active codebook generation: every live
     // vector is re-encoded by the refresh that activates a generation,
     // so older codes are shadow — the bound keeps even a changed m safe
-    val codes = foldCodes(readCodesLog(s, outDir, allowed)
+    val codes = foldLatest(readCodesLog(s, outDir, allowed)
       .where(col("seg") >= cbSeg)
-      .join(pairs.select("vec_id").distinct(), Seq("vec_id"), "left_semi"))
+      .join(pairs.select("vec_id").distinct(), Seq("vec_id"), "left_semi"),
+      Seq("vec_id", "m"), Seq("code"))
     val scored = pairs
       .join(codes, "vec_id") // (query_id, vec_id, m, code)
       .join(broadcast(qd.select(col("query_id").as("qid"), col("m").as("qm"),
@@ -1614,54 +1586,38 @@ object IvfMaintenance {
     wipeUncommitted(s, outDir)
     val segs = committedSegs(s, outDir)
     val top = segs.max
-    val folded = foldAsg(readAsgLog(s, outDir))
+    val folded = foldLatest(readAsgLog(s, outDir), AsgKey, AsgFields)
       .withColumn("dead", lit(false)).localCheckpoint(true)
-    // a CRASHED prior compaction leaves a stale staged seg under the
-    // _compacted roots; mode-overwrite below only replaces seg=$top, so
-    // the whole-dir swap would carry the stale seg into the live root
-    // and resurrect its rows — clear the staging first
-    val stagedAsg = s"${asgRoot(outDir)}_compacted"
-    SegmentLog.deleteDir(s, stagedAsg)
+    def stage(root: String)(write: String => Unit): (String, String) =
+      root -> SegmentLog.stageCompaction(s, root, top)(write)
     val nsh = layoutShards(s, outDir)
-    folded.select(col("vec_id"), col("cell"), col("e"), col("dead"),
-        shardOf(col("cell"), nsh).as("shard"))
-      .repartition(col("shard")).sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$stagedAsg/seg=$top")
-    val stagedCents = s"${centRoot(outDir)}_compacted"
-    SegmentLog.deleteDir(s, stagedCents)
-    centroids(s, outDir).localCheckpoint(true)
-      .write.mode("overwrite").parquet(s"$stagedCents/seg=$top")
-    // PQ codes: keep only the latest code of each LIVE vector — stale
-    // codes of removed/rebuilt-away ids are unreachable (adcKnn joins
-    // through the folded lists) and drop here
-    val stagedPq =
-      if (pqEnabled(s, outDir)) {
+    val staged = Seq(
+      stage(asgRoot(outDir))(folded.select(col("vec_id"), col("cell"), col("e"),
+          col("dead"), shardOf(col("cell"), nsh).as("shard"))
+        .repartition(col("shard")).sortWithinPartitions("cell", "vec_id")
+        .write.mode("overwrite").partitionBy("shard").parquet),
+      stage(centRoot(outDir))(
+        centroids(s, outDir).localCheckpoint(true).write.mode("overwrite").parquet)) ++
+      // PQ codes: keep only the latest code of each LIVE vector — stale
+      // codes of removed/rebuilt-away ids are unreachable (adcKnn joins
+      // through the folded lists) and drop here
+      (if (!pqEnabled(s, outDir)) Nil
+      else {
         val cbSeg = activeCbSeg(s, outDir, segs).get
         val liveIds = folded.select("vec_id").distinct()
-        val pqStage = s"${pqRoot(outDir)}_compacted"
-        SegmentLog.deleteDir(s, pqStage)
-        foldCodes(readCodesLog(s, outDir, segs)
-            .where(col("seg") >= cbSeg)
-            .join(liveIds, Seq("vec_id"), "left_semi"))
-          .localCheckpoint(true)
-          .write.mode("overwrite").parquet(s"$pqStage/seg=$top")
-        // the active codebook generation re-lands at seg=top (its
-        // content unchanged) — compaction drops every marker except
-        // seg-top, and a generation whose seg is no longer committed
-        // would otherwise be swept, silently disabling PQ
-        val cbStage = s"${pqCbRoot(outDir)}_compacted"
-        SegmentLog.deleteDir(s, cbStage)
-        s.read.parquet(s"${pqCbRoot(outDir)}/seg=$cbSeg")
-          .write.mode("overwrite").parquet(s"$cbStage/seg=$top")
-        Some((pqStage, cbStage))
-      } else None
-    SegmentLog.swapDir(s, stagedAsg, asgRoot(outDir))
-    SegmentLog.swapDir(s, stagedCents, centRoot(outDir))
-    stagedPq.foreach { case (pqStage, cbStage) =>
-      SegmentLog.swapDir(s, pqStage, pqRoot(outDir))
-      SegmentLog.swapDir(s, cbStage, pqCbRoot(outDir))
-    }
+        Seq(
+          stage(pqRoot(outDir))(foldLatest(readCodesLog(s, outDir, segs)
+              .where(col("seg") >= cbSeg)
+              .join(liveIds, Seq("vec_id"), "left_semi"), Seq("vec_id", "m"), Seq("code"))
+            .localCheckpoint(true).write.mode("overwrite").parquet),
+          // the active codebook generation re-lands at seg=top (its
+          // content unchanged) — compaction drops every marker except
+          // seg-top, and a generation whose seg is no longer committed
+          // would otherwise be swept, silently disabling PQ
+          stage(pqCbRoot(outDir))(s.read.parquet(s"${pqCbRoot(outDir)}/seg=$cbSeg")
+            .write.mode("overwrite").parquet))
+      })
+    staged.foreach { case (root, st) => SegmentLog.swapDir(s, st, root) }
     // replay identity must survive the folded-away segments — the keys
     // consolidate into one file (SegmentLog.consolidateKeys), so
     // committedKeys stays O(segments since last compaction)

@@ -1,20 +1,38 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, max, struct}
+import org.apache.spark.sql.types.{LongType, StructType}
 
-/** The segment-log commit discipline [[IvfMaintenance]] and
-  * [[TextSearchIndex]] share — ONE definition so marker semantics,
-  * replay identity, crash sweeping, and the compaction swap can never
-  * drift bug-for-bug between indexes (they did: the stale-staging
-  * defect existed identically in both compacts before this extraction).
+/** The segment-log commit protocol [[DeltaIngest]], [[IvfMaintenance]]
+  * and [[TextSearchIndex]] share — ONE definition of every step, so
+  * marker semantics, snapshot reads, the latest-wins fold, crash
+  * sweeping and the compaction swap can never drift bug-for-bug
+  * between operators (they did: the stale-staging defect existed
+  * identically in two compacts before this extraction).
   *
-  * Contract: data tables live as immutable `<root>/seg=<n>` dirs; a
-  * marker file `<markerDir>/seg-<n>` (content = the batch's replay
-  * key) admits segment n atomically; `skip-<key>` markers record
-  * replay identity without consuming a segment; compaction folds to
-  * the top segment, swaps via rename-aside, and consolidates every
-  * marker's keys into one `keys-<top>-<v>` file. */
+  * The protocol, in the order a batch and a compaction walk it:
+  *   - stage: a batch writes each table's increment as an immutable
+  *     `<root>/seg=<n>` dir (or into a staging dir first and is placed
+  *     there by one checked rename — DeltaIngest's two-phase apply);
+  *   - place: a dir lands only at its own `seg=<n>`; nothing already
+  *     admitted is ever rewritten in place;
+  *   - marker: a commit marker admits segment n atomically —
+  *     `<markerDir>/seg-<n>` carrying the batch's replay key
+  *     ([[commitMarker]]; `skip-<key>` records replay identity without
+  *     consuming a segment), or DeltaIngest's `<key>` file carrying n.
+  *     Its callers hand the committed set to every step below;
+  *     [[wipeUncommitted]] sweeps the dirs no marker admitted;
+  *   - fold-on-read: [[readCommitted]] reads only admitted dirs
+  *     (snapshot isolation on bare parquet) and [[foldLatest]] keeps
+  *     the latest row per key, tombstones dropping;
+  *   - compaction stage: [[stageCompaction]] clears `<root>_compacted`
+  *     and lets the caller write the folded table at the top segment;
+  *   - swap: [[swapDir]] renames the live root aside, the staged one in;
+  *   - key consolidation: [[consolidateKeys]] folds every marker's keys
+  *     into one `keys-<top>-<v>` file, so replay identity survives the
+  *     markers the compaction drops. */
 private[graft] object SegmentLog {
 
   def fs(s: SparkSession, p: Path): FileSystem =
@@ -135,14 +153,68 @@ private[graft] object SegmentLog {
   }
 
   /** Uncommitted segment dirs are crash leftovers: readers never admit
-    * them, the next writer sweeps them. */
-  def wipeUncommitted(s: SparkSession, markerDir: String,
-      roots: Seq[String]): Unit = {
-    val allowed = committedSegs(s, markerDir)
-    for (r <- roots; n <- presentSegs(s, r) if !allowed(n)) {
-      val p = new Path(s"$r/seg=$n"); fs(s, p).delete(p, true)
-    }
+    * them, the next writer sweeps them. `committed` is the caller's
+    * visibility set — SegmentLog markers or DeltaIngest's key map. */
+  def wipeUncommitted(s: SparkSession, committed: Set[Long],
+      roots: Seq[String]): Unit =
+    for (r <- roots; n <- presentSegs(s, r) if !committed(n)) deleteDir(s, s"$r/seg=$n")
+
+  /** The committed rows of the log at `root`, each with its `seg`: only
+    * the `seg=<n>` dirs in `allowed` are read, so an uncommitted
+    * (crashed) segment is invisible. Callers pass ONE committed-segment
+    * snapshot to every read that must see the same commit point. None
+    * when no allowed segment is present. */
+  def committedLog(s: SparkSession, root: String,
+      allowed: Set[Long]): Option[DataFrame] = {
+    val segs = presentSegs(s, root).filter(allowed)
+    if (segs.isEmpty) None
+    else Some(s.read.option("basePath", root)
+      .parquet(segs.map(n => s"$root/seg=$n"): _*)
+      .withColumn("seg", col("seg").cast("long")))
   }
+
+  /** [[committedLog]], empty-safe: with no allowed segment present the
+    * read is an empty frame of `schema` plus `seg: long`. */
+  def readCommitted(s: SparkSession, root: String, allowed: Set[Long],
+      schema: StructType): DataFrame =
+    committedLog(s, root, allowed).getOrElse(
+      s.createDataFrame(s.sparkContext.emptyRDD[Row], schema.add("seg", LongType)))
+
+  /** Latest row per `key` across segments: `max(struct(seg, fields…))`,
+    * so the newest segment wins and, within one segment, the caller's
+    * field order breaks ties (`dead` right after `seg` makes a
+    * tombstone beat a live row of the same segment). A winner with
+    * `dead` set drops. Returns `key ++ fields` without `dead`. The fold
+    * commutes with any key predicate: callers bound the log first (a
+    * candidate semi-join, a pruned cell list) and fold the survivors —
+    * never an index-sized shuffle. */
+  def foldLatest(log: DataFrame, key: Seq[String], fields: Seq[String]): DataFrame = {
+    val won = log.groupBy(key.map(col): _*)
+      .agg(max(struct((col("seg") +: fields.map(col)): _*)).as("b"))
+    val live = if (fields.contains("dead")) won.where(!col("b.dead")) else won
+    live.select(key.map(col) ++
+      fields.filterNot(_ == "dead").map(f => col(s"b.$f").as(f)): _*)
+  }
+
+  /** Compaction stage for the table at `root`: clear `<root>_compacted`
+    * — a CRASHED prior compaction leaves stale `seg=<old>` dirs there,
+    * and the whole-dir [[swapDir]] would carry them into the live root
+    * and resurrect their rows — then let `write` fill the path it is
+    * given (`seg=<top>` by [[stageCompaction]], the whole table for an
+    * unsegmented base). Returns the staged root for [[swapDir]]. */
+  def stageTable(s: SparkSession, root: String)(write: String => Unit): String = {
+    val staged = s"${root}_compacted"
+    deleteDir(s, staged)
+    write(staged)
+    staged
+  }
+
+  /** [[stageTable]] for a segment log: the folded table lands at
+    * `seg=<top>`, so readers see identical data before and after the
+    * swap. */
+  def stageCompaction(s: SparkSession, root: String, top: Long)(
+      write: String => Unit): String =
+    stageTable(s, root)(staged => write(s"$staged/seg=$top"))
 
   def deleteDir(s: SparkSession, path: String): Unit = {
     val p = new Path(path); fs(s, p).delete(p, true)

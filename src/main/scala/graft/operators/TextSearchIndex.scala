@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.operators.SegmentLog.{foldLatest, presentSegs, readCommitted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -85,35 +85,22 @@ object TextSearchIndex {
   private def commitMarker(s: SparkSession, outDir: String, seg: Long,
       key: String): Unit =
     SegmentLog.commitMarker(s, markerDir(outDir), seg, key)
-  private def presentSegs(s: SparkSession, r: String): Seq[Long] =
-    SegmentLog.presentSegs(s, r)
 
   def indexed(s: SparkSession, outDir: String): Boolean =
     committedSegs(s, outDir).nonEmpty
 
   private def wipeUncommitted(s: SparkSession, outDir: String): Unit =
-    SegmentLog.wipeUncommitted(s, markerDir(outDir),
+    SegmentLog.wipeUncommitted(s, committedSegs(s, outDir),
       Seq(postRoot(outDir), statsRoot(outDir)))
 
   private def readPostLog(s: SparkSession, outDir: String,
-      allowed: Set[Long]): DataFrame = {
-    val r = postRoot(outDir)
-    val segs = presentSegs(s, r).filter(allowed)
-    if (segs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        PostSchema.add("seg", LongType))
-    else
-      s.read.option("basePath", r).parquet(segs.map(n => s"$r/seg=$n"): _*)
-        .withColumn("seg", col("seg").cast("long"))
-  }
+      allowed: Set[Long]): DataFrame =
+    readCommitted(s, postRoot(outDir), allowed, PostSchema)
 
-  /** Latest committed posting per (term, doc_id); tombstones drop. */
-  private def foldPostings(log: DataFrame): DataFrame =
-    log.groupBy("term", "doc_id")
-      .agg(max(struct(col("seg"), col("dead"), col("tf"), col("dl"))).as("b"))
-      .where(!col("b.dead"))
-      .select(col("term"), col("doc_id"), col("b.tf").as("tf"),
-        col("b.dl").as("dl"))
+  // the postings fold: latest committed row per (term, doc_id), a
+  // tombstone beating a live row of its own segment
+  private val PostKey = Seq("term", "doc_id")
+  private val PostFields = Seq("dead", "tf", "dl")
 
   /** Exact (n_docs, sum_dl) as of the snapshot's last committed seg. */
   private def readStats(s: SparkSession, outDir: String,
@@ -215,11 +202,11 @@ object TextSearchIndex {
     if (committedKeys(s, outDir).contains(key)) return 0L
     wipeUncommitted(s, outDir)
     if (assertFresh) {
-      val stale = foldPostings(
+      val stale = foldLatest(
         readPostLog(s, outDir, committedSegs(s, outDir))
           .select("term", "doc_id", "tf", "dl", "dead", "seg")
           .join(docs.select(col("doc_id").cast("long").as("doc_id")).distinct(),
-            Seq("doc_id"), "left_semi"))
+            Seq("doc_id"), "left_semi"), PostKey, PostFields)
         .select("doc_id").distinct().count()
       require(stale == 0L,
         s"$outDir: $stale doc_id(s) in this batch are already live in " +
@@ -256,9 +243,9 @@ object TextSearchIndex {
     if (ids.isEmpty) { commitMarker(s, outDir, -1L, key); return 0L }
     val allowed = committedSegs(s, outDir)
     val seg = allowed.max + 1
-    val live = foldPostings(readPostLog(s, outDir, allowed)
+    val live = foldLatest(readPostLog(s, outDir, allowed)
         .join(ids.select(col("doc_id").cast("long").as("doc_id")),
-          Seq("doc_id"), "left_semi"))
+          Seq("doc_id"), "left_semi"), PostKey, PostFields)
       .localCheckpoint(true)
     val st = live.groupBy("doc_id").agg(max("dl").as("dl"))
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s")).head()
@@ -321,8 +308,9 @@ object TextSearchIndex {
     val nsh = layoutShards(s, outDir)
     val shards = terms.toDF("term").select(shardOf(col("term"), nsh))
       .collect().map(_.getInt(0)).distinct.toSeq
-    foldPostings(readPostLog(s, outDir, allowed)
-      .where(col("shard").isin(shards: _*) && col("term").isin(terms: _*)))
+    foldLatest(readPostLog(s, outDir, allowed)
+      .where(col("shard").isin(shards: _*) && col("term").isin(terms: _*)),
+      PostKey, PostFields)
   }
 
   /** Fold the log to one segment and consolidate replay keys — the
@@ -332,26 +320,18 @@ object TextSearchIndex {
     wipeUncommitted(s, outDir)
     val allowed = committedSegs(s, outDir)
     val top = allowed.max
-    val folded = foldPostings(readPostLog(s, outDir, allowed))
+    val folded = foldLatest(readPostLog(s, outDir, allowed), PostKey, PostFields)
       .withColumn("dead", lit(false)).localCheckpoint(true)
-    // a CRASHED prior compaction leaves a stale staged seg under the
-    // _compacted root; mode-overwrite below only replaces seg=$top, so
-    // the whole-dir swap would carry the stale seg into the live root
-    // and resurrect its rows — clear the staging first
-    val stagedPost = s"${postRoot(outDir)}_compacted"
-    val stagedStats = s"${statsRoot(outDir)}_compacted"
-    SegmentLog.deleteDir(s, stagedPost)
-    SegmentLog.deleteDir(s, stagedStats)
     val nsh = layoutShards(s, outDir)
-    folded.select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        col("dead"), shardOf(col("term"), nsh).as("shard"))
-      .repartition(col("shard")).sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$stagedPost/seg=$top")
+    val stagedPost = SegmentLog.stageCompaction(s, postRoot(outDir), top)(
+      folded.select(col("term"), col("doc_id"), col("tf"), col("dl"),
+          col("dead"), shardOf(col("term"), nsh).as("shard"))
+        .repartition(col("shard")).sortWithinPartitions("term", "doc_id")
+        .write.mode("overwrite").partitionBy("shard").parquet)
     val (nd, sumDl) = readStats(s, outDir, allowed)
     import s.implicits._
-    Seq((nd, sumDl)).toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$stagedStats/seg=$top")
+    val stagedStats = SegmentLog.stageCompaction(s, statsRoot(outDir), top)(
+      Seq((nd, sumDl)).toDF("n_docs", "sum_dl").coalesce(1).write.mode("overwrite").parquet)
     SegmentLog.swapDir(s, stagedPost, postRoot(outDir))
     SegmentLog.swapDir(s, stagedStats, statsRoot(outDir))
     SegmentLog.consolidateKeys(s, markerDir(outDir), top)

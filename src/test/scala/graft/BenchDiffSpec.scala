@@ -20,7 +20,7 @@ class BenchDiffSpec extends AnyFunSuite {
     def js(m: Map[String, Double]) =
       m.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
         .mkString("""{"queries":{""", ",", "}}")
-    val dir = java.nio.file.Files.createTempDirectory("bdiff")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpRoot("bdiff"))
     val fb = dir.resolve("b.json"); val fc = dir.resolve("c.json")
     java.nio.file.Files.write(fb, js(b).getBytes("UTF-8"))
     java.nio.file.Files.write(fc, js(c).getBytes("UTF-8"))
@@ -75,7 +75,7 @@ class BenchDiffSpec extends AnyFunSuite {
     def js(m: Map[String, Double]) =
       m.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
         .mkString("""{"queries":{""", ",", "}}")
-    val dir = java.nio.file.Files.createTempDirectory("bdiff-refuse")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpRoot("bdiff-refuse"))
     val fb = dir.resolve("b.json"); val fc = dir.resolve("c.json")
     java.nio.file.Files.write(fb,
       js(Map("a" -> 1.0, "b" -> 2.0)).getBytes("UTF-8"))

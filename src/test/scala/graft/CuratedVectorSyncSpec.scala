@@ -14,7 +14,7 @@ class CuratedVectorSyncSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"cvs_$name").toString
+    TestSpark.tmpRoot(s"cvs_$name")
 
   // 30 globally-unique 5-char words per doc (gate-passing: n=30, TTR=1,
   // top=1, sum(len) == 5n)

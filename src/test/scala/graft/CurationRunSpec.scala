@@ -11,7 +11,7 @@ class CurationRunSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val out = {
-    val d = java.nio.file.Files.createTempDirectory("curation_run").toString
+    val d = TestSpark.tmpRoot("curation_run")
     (d, CurationRun.run(spark, sf, d))
   }
 
@@ -67,7 +67,7 @@ class CurationRunSpec extends AnyFunSuite {
   }
 
   test("crash recovery: a partial stage (no _SUCCESS) is rebuilt, not trusted") {
-    val dir = java.nio.file.Files.createTempDirectory("curation_crash").toString
+    val dir = TestSpark.tmpRoot("curation_crash")
     // simulate a run that died mid-stage-1: directory exists, data is
     // garbage, no _SUCCESS marker
     val partial = new java.io.File(s"$dir/stage1_clean/documents.parquet")
@@ -121,7 +121,7 @@ class CurationRunSpec extends AnyFunSuite {
     assert(e.getMessage.contains("manifest"), e.getMessage)
     // a LOST record refuses too (a fallback default would route delta
     // manifest rows with the wrong modulus on any non-default run)
-    val d2 = java.nio.file.Files.createTempDirectory("curation_lost").toString
+    val d2 = TestSpark.tmpRoot("curation_lost")
     CurationRun.run(spark, sf, d2)
     assert(new java.io.File(s"$d2/_layout").delete())
     val e2 = intercept[IllegalArgumentException] {
@@ -135,7 +135,7 @@ class CurationRunSpec extends AnyFunSuite {
     // between the final writes and the report write, the gate must NOT
     // trust the (possibly partial) final outputs
     val (srcDir, r) = out
-    val dir = java.nio.file.Files.createTempDirectory("curation_post3").toString
+    val dir = TestSpark.tmpRoot("curation_post3")
     // stage 1+2 completed; stage-3 outputs present but UNMARKED
     def cp(from: String, to: String): Unit = {
       val src = java.nio.file.Paths.get(from)

@@ -18,7 +18,7 @@ class DedupLinesSpec extends AnyFunSuite {
   /** Run dedup_lines over a crafted documents table; returns
     * doc_id -> (n_segs, n_kept, clean_text). */
   private def run(docs: Seq[(Long, String)]): Map[Long, (Int, Long, String)] = {
-    val dir = Files.createTempDirectory("lines").toString
+    val dir = TestSpark.tmpRoot("lines")
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("s"))

@@ -16,7 +16,7 @@ class DeltaIngestSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"delta_$name").toString
+    TestSpark.tmpRoot(s"delta_$name")
 
   // the split-bucket hash (t_split_assign convention)
   private def bucket(id: Long): Int = (id % 1000003L * 2654435761L % 100).toInt

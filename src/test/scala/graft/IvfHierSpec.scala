@@ -18,7 +18,7 @@ class IvfHierSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"hier_$name").toString
+    TestSpark.tmpRoot(s"hier_$name")
 
   // 12 well-separated 8-d cluster centers, 40 points each: clear
   // geometry so small-sprobe pruning is meaningful, deterministic by

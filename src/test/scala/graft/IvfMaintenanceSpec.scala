@@ -17,7 +17,7 @@ class IvfMaintenanceSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"ivf_$name").toString
+    TestSpark.tmpRoot(s"ivf_$name")
 
   private def embeddings: DataFrame =
     graft.queries.Tables.t(spark, sf, "embeddings")

@@ -18,7 +18,7 @@ class IvfMergeSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"ivfm_$name").toString
+    TestSpark.tmpRoot(s"ivfm_$name")
 
   private def embeddings: DataFrame =
     graft.queries.Tables.t(spark, sf, "embeddings")

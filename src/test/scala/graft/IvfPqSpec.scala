@@ -18,7 +18,7 @@ class IvfPqSpec extends AnyFunSuite {
   private val M = 8
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"ivfpq_$name").toString
+    TestSpark.tmpRoot(s"ivfpq_$name")
 
   private def embeddings: DataFrame =
     graft.queries.Tables.t(spark, sf, "embeddings")

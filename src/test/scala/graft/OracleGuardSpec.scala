@@ -55,7 +55,7 @@ class OracleGuardSpec extends AnyFunSuite {
   }
 
   private def dumpOracles(oracles: Map[String, String]): String = {
-    val f = Files.createTempFile("oracles", ".json")
+    val f = Paths.get(TestSpark.tmpRoot("oracles"), "oracles.json")
     Files.writeString(f, queries.OracleJson.obj(oracles))
     f.toString
   }

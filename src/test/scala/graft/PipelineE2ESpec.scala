@@ -17,7 +17,7 @@ class PipelineE2ESpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"e2e_$name").toString
+    TestSpark.tmpRoot(s"e2e_$name")
 
   private def words(key: Long, n: Int = 30): Vector[String] =
     (0 until n).map { j =>

@@ -23,7 +23,7 @@ class PqRefreshSpec extends AnyFunSuite {
   private val M = 4
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"pqr_$name").toString
+    TestSpark.tmpRoot(s"pqr_$name")
 
   /** Original corpus: 3 tight clusters at coordinate levels 0/1/2. */
   private def corpusA: DataFrame =

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.model.{EventJson, GraftEvent}
 import graft.streaming.StreamingAnalytics
 import org.apache.spark.sql.functions._
@@ -37,7 +35,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("stream-static enrichment over a real file stream: dim joined per micro-batch, closed window emits enriched counts") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("enrich").toString + "/data"
+    val dir = TestSpark.tmpRoot("enrich") + "/data"
     val base = 1704067200000L // 2024-01-01T00:00Z
     val dim = Seq((1L, "AUTO"), (2L, "BUILD"), (3L, "HOME"))
       .toDF("c_custkey", "c_mktsegment")
@@ -77,7 +75,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("sliding windows over a real file stream: overlap expansion, append-mode close, state eviction") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("slide").toString + "/data"
+    val dir = TestSpark.tmpRoot("slide") + "/data"
     val base = 1704067200000L // 2024-01-01T00:00Z (15-min aligned)
     // batch 1: two clicks 16 min apart — each lands in FOUR overlapping
     // 1h/15min windows, three of which they share — plus a sentinel 3 h
@@ -120,7 +118,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("windowed CMS over a real file stream: constant cells, closed-window emit, probe overestimates") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("cms").toString + "/data"
+    val dir = TestSpark.tmpRoot("cms") + "/data"
     val base = 1704067200000L // 2024-01-01T00:00Z
     // batch 1: user 7 three times, user 9 once, all in hour 0 — plus a
     // sentinel 3 h ahead so the 10-min watermark closes hour 0
@@ -168,7 +166,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("windowed HLL registers over a real file stream: replay-idempotent, closed-window emit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("hll").toString + "/data"
+    val dir = TestSpark.tmpRoot("hll") + "/data"
     val base = 1704067200000L // 2024-01-01T00:00Z
     // batch 1: users 7 and 9 in hour 0 + a sentinel 3 h ahead
     appendStamped(Seq(
@@ -209,7 +207,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("windowed log-histogram over a real file stream: cross-batch additive counts, closed-window emit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("loghist").toString + "/data"
+    val dir = TestSpark.tmpRoot("loghist") + "/data"
     val base = 1704067200000L // 2024-01-01T00:00Z
     // batch 1: two values in hour 0 (1.00 -> bucket 7, 5.00 -> bucket 9)
     // + a sentinel 3 h ahead that will close the window
@@ -251,7 +249,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("dedupWithinWatermark drops replays inside the horizon, re-admits after eviction") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("ddww").toString + "/data"
+    val dir = TestSpark.tmpRoot("ddww") + "/data"
     val base = 1704067200000L // 2024-01-01T00:00Z
     // batch 1: key A plus a replay 1 min later (inside the 10 min
     // watermark) — the replay must drop
@@ -337,7 +335,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("watermarked windowed aggregation over a file stream") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("stream").toString + "/data"
+    val dir = TestSpark.tmpRoot("stream") + "/data"
     val base = 1704067200000L // 2024-01-01T00:00Z
     val rows = (0 until 600).map { i =>
       (new java.sql.Timestamp(base + i * 1000L), if (i % 2 == 0) "click" else "view", i.toDouble)
@@ -367,7 +365,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("windowedCounts drops late rows past the watermark and evicts closed-window state") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("late").toString + "/data"
+    val dir = TestSpark.tmpRoot("late") + "/data"
     val base = 1704067200000L // 2024-01-01T00:00Z
     // batch 1: 10 clicks inside window [00:00, 00:05) plus a sentinel
     // 2 h ahead — after this batch the watermark stands at 1h50m,
@@ -408,7 +406,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("sessionCounts on a stream: closed session emits, late row is dropped, state evicted") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sess").toString + "/data"
+    val dir = TestSpark.tmpRoot("sess") + "/data"
     val base = 1704067200000L
     // batch 1: user 1 burst (3 events over 2 min; 5-min gap → ONE
     // session [00:00, 00:07)) + user 99 sentinel 2 h out that advances
@@ -449,8 +447,8 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("intervalJoin drops late rows past the watermark and evicts join state") {
     import spark.implicits._
-    val ldir = Files.createTempDirectory("lssl").toString + "/l"
-    val rdir = Files.createTempDirectory("lssr").toString + "/r"
+    val ldir = TestSpark.tmpRoot("lssl") + "/l"
+    val rdir = TestSpark.tmpRoot("lssr") + "/r"
     val base = 1704067200000L
     def row(id: Long, user: Long, offSec: Long, tpe: String) =
       (user, id, new java.sql.Timestamp(base + offSec * 1000), tpe)
@@ -491,7 +489,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("dedupByJid evicts state on processing-time timeout (replay re-admitted)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("dedupevict").toString
+    val dir = TestSpark.tmpRoot("dedupevict")
     val at = new java.sql.Timestamp(System.currentTimeMillis())
     def ev(jid: String) = GraftEvent("W", "perform", "q", jid, "[]", 0, at)
     Seq(ev("a")).toDF().coalesce(1).write.mode("append").parquet(dir)
@@ -527,8 +525,8 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("stream-stream interval join pairs events within the gap (state-bounded)") {
     import spark.implicits._
-    val ldir = Files.createTempDirectory("ssl").toString + "/l"
-    val rdir = Files.createTempDirectory("ssr").toString + "/r"
+    val ldir = TestSpark.tmpRoot("ssl") + "/l"
+    val rdir = TestSpark.tmpRoot("ssr") + "/r"
     val base = 1704067200000L
     def row(id: Long, user: Long, offSec: Long, tpe: String) =
       (user, id, new java.sql.Timestamp(base + offSec * 1000), tpe)
@@ -557,7 +555,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("stateful dedup by jid across micro-batches (flatMapGroupsWithState)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("dedup").toString
+    val dir = TestSpark.tmpRoot("dedup")
     val at = new java.sql.Timestamp(System.currentTimeMillis())
     def ev(jid: String) = GraftEvent("W", "perform", "q", jid, "[]", 0, at)
     // batch 1: a,b ; batch 2 (separate file): b replay + c
@@ -577,7 +575,7 @@ class StreamingJsonSpec extends AnyFunSuite {
 
   test("lshBucketCanon carries bucket state across micro-batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("lshst").toString + "/bands"
+    val dir = TestSpark.tmpRoot("lshst") + "/bands"
     // batch 1: bucket B1 sees docs 7, 9 → canon 7 for both.
     // batch 2: the SAME bucket sees 5 and 8 → 5 becomes the new canon
     // (emitted as (5,5)); 8 must get canon 5 from min(batch, STATE).

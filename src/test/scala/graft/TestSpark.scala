@@ -1,28 +1,30 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (the "TestWithRedis" analog:
   * temp-dir state roots wiped per test instead of a flushed keyspace). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
 
-  def tmpRoot(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private val roots = new ConcurrentLinkedQueue[Path]()
+  // every root a spec asked for goes when the (forked) test JVM exits
+  sys.addShutdownHook(roots.forEach(r => FileUtils.deleteQuietly(r.toFile)))
+
+  /** A fresh temp dir that outlives the spec but not the test run. */
+  def tmpRoot(prefix: String): String = {
+    val root = Files.createTempDirectory(prefix)
+    roots.add(root)
+    root.toString
+  }
 }
 
 /** Executor-visible buffers for echo workers (local mode = same JVM). */

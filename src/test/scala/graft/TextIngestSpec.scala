@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class TextIngestSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"ingest_$name")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(name: String): String = TestSpark.tmpRoot(s"ingest_$name")
 
   private def writeLines(dir: String, file: String, lines: Seq[String]): String = {
     val p = java.nio.file.Paths.get(dir, file)

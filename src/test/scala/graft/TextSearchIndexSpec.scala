@@ -16,7 +16,7 @@ class TextSearchIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"tsi_$name").toString
+    TestSpark.tmpRoot(s"tsi_$name")
 
   // controlled vocabulary: shared query terms with varied tf, unique
   // fillers so doc lengths differ

@@ -16,7 +16,7 @@ class TrainingExportSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"texp_$name").toString
+    TestSpark.tmpRoot(s"texp_$name")
 
   // globally-unique 5-char words per doc (gate-passing by construction:
   // sum(len) == 5n passes chars<=5n; unique vocab -> no dedup interference)

@@ -29,7 +29,7 @@ class WorkerSetChaosSpec extends AnyFunSuite {
     val classes = new java.io.File(
       classOf[graft.store.QueueStore].getProtectionDomain
         .getCodeSource.getLocation.toURI).getAbsolutePath
-    val base = java.nio.file.Files.createTempDirectory("ws_chaos")
+    val base = java.nio.file.Paths.get(TestSpark.tmpRoot("ws_chaos"))
     val evDir = base.resolve("ev").toString
     val storeDir = base.resolve("store").toString
     // single-line statements only: -i feeds the REPL line by line
