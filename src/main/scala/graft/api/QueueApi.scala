@@ -117,10 +117,10 @@ class DefaultQueueApi(
     e.jid
   }
 
-  /** D2 without full scans: enqueued counts come from parquet footer
-    * metadata (driver-side, zero Spark jobs), claim counts from ONE
-    * column-pruned job across all queues — previously 2 full-table
-    * jobs per queue per call. */
+  /** D2 without scans: enqueued counts are parquet footer sums, claim
+    * counts distinct claim ids — both from the store's per-file gauge
+    * memo, so a read on an unchanged store runs no Spark job and one
+    * after appends runs at most one (for the new claim files). */
   def jobCounts(queues: Seq[String]): Map[String, Long] = {
     val claims = store.rawProcessingCounts(queues)
     // archived files' rows still have acked claims in the tombstone
@@ -137,15 +137,14 @@ class DefaultQueueApi(
     }.toMap
   }
 
-  // distinct: merge-style compaction recovery may leave duplicate rows
-  // for the same claim, which must not inflate the in-flight gauge
-  def pendingJobsCount(): Long =
-    store.liveProcessing().select("claim_id").distinct().count()
+  /** D3: claims in flight — distinct claim ids of the live processing
+    * rows. A claim can have several row copies: a replayed micro-batch
+    * re-appends the same deterministic claim ids, and a compaction
+    * lists its snapshot beside the rows it replaces until its manifest
+    * commits; the store counts ids, so copies count once. */
+  def pendingJobsCount(): Long = store.pendingClaimCount(None)
 
-  def pendingJobsCount(queues: Seq[String]): Long =
-    store.liveProcessing()
-      .where(org.apache.spark.sql.functions.col("queue").isin(queues: _*))
-      .select("claim_id").distinct().count()
+  def pendingJobsCount(queues: Seq[String]): Long = store.pendingClaimCount(Some(queues))
 
   /** Interop with the reference's wire format: enqueue raw JSON job
     * strings (one per element). Lenient decode (EventJson); rows whose

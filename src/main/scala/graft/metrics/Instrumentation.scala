@@ -1,6 +1,10 @@
 package graft.metrics
 
+import java.time.Instant
+
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -40,21 +44,33 @@ class InMemoryEventHandler(maxJobs: Int = 10000) extends EventHandler {
   override def handleJob(pipeline: String, jid: String, durationMs: Double, success: Boolean): Unit =
     jobRing.synchronized { jobRing.put((pipeline, jid), (durationMs, success)); () }
   /** Snapshot of the most recent (pipeline, jid) → (durationMs, success). */
-  def jobs: Map[(String, String), (Double, Boolean)] = jobRing.synchronized {
-    import scala.jdk.CollectionConverters._
-    jobRing.asScala.toMap
-  }
+  def jobs: Map[(String, String), (Double, Boolean)] =
+    jobRing.synchronized(jobRing.asScala.toMap)
 }
 
 class PipelineListener(handler: EventHandler) extends StreamingQueryListener {
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
     handler.handle("query_started", e.name, Map.empty)
-  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-    handler.handle("batch", Option(e.progress.name).getOrElse(e.progress.id.toString),
+  /** One `batch` event per trigger: input rows and duration, Spark's
+    * per-phase breakdown of the trigger (`addBatchMs`, `getBatchMs`,
+    * `latestOffsetMs`, `queryPlanningMs`, `walCommitMs`,
+    * `triggerExecutionMs`, ... — the phases Spark timed on that
+    * trigger) and, when the query sets one, the event-time watermark
+    * as epoch ms (`watermarkMs`). */
+  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+    val p = e.progress
+    val phases = Option(p.durationMs).fold(Map.empty[String, Double])(
+      _.asScala.map { case (phase, ms) => s"${phase}Ms" -> ms.doubleValue }.toMap)
+    // Spark reports the watermark as an ISO-8601 UTC instant
+    val watermark = Option(p.eventTime).flatMap(t => Option(t.get("watermark")))
+      .flatMap(w => Try(Instant.parse(w).toEpochMilli.toDouble).toOption)
+      .map("watermarkMs" -> _)
+    handler.handle("batch", Option(p.name).getOrElse(p.id.toString),
       Map(
-        "numInputRows" -> e.progress.numInputRows.toDouble,
-        "batchDurationMs" -> e.progress.batchDuration.toDouble,
-        "inputRowsPerSecond" -> e.progress.inputRowsPerSecond))
+        "numInputRows" -> p.numInputRows.toDouble,
+        "batchDurationMs" -> p.batchDuration.toDouble,
+        "inputRowsPerSecond" -> p.inputRowsPerSecond) ++ phases ++ watermark)
+  }
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
     handler.handle("query_terminated", e.id.toString, Map.empty)
 }

@@ -3,7 +3,9 @@ package graft.store
 import java.sql.Timestamp
 
 import graft.model.Schemas
-import org.apache.hadoop.fs.Path
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -199,10 +201,10 @@ class QueueStore(val spark: SparkSession, val root: String,
 
   /** All part files under `dir` (recursing into partition subdirs), as
     * (path relative to dir, status). Dot/underscore entries skipped. */
-  private def listPartFilesRec(dir: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
+  private def listPartFilesRec(dir: String): Seq[(String, FileStatus)] = {
     val base = new Path(dir)
     if (!fs.exists(base)) return Seq.empty
-    def walk(p: Path, prefix: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+    def walk(p: Path, prefix: String): Seq[(String, FileStatus)] =
       fs.listStatus(p).toSeq.flatMap { f =>
         val n = f.getPath.getName
         if (n.startsWith("_") || n.startsWith(".")) Seq.empty
@@ -218,11 +220,12 @@ class QueueStore(val spark: SparkSession, val root: String,
     * listing only, no Spark job: an append (a new file) or a committed
     * compaction changes it, a tombstone does not — which is what lets
     * the housekeeper skip re-scanning an unchanged table. */
-  def dataFiles(dir: String): Seq[String] = {
+  def dataFiles(dir: String): Seq[String] = liveParts(dir).map(_._2.getPath.toString)
+
+  /** [[dataFiles]] as (path relative to dir, status). */
+  private def liveParts(dir: String): Seq[(String, FileStatus)] = {
     val replaced = readManifest(dir).map(_.replaced).getOrElse(Set.empty)
-    listPartFilesRec(dir).collect {
-      case (rel, st) if !replaced(rel) => st.getPath.toString
-    }
+    listPartFilesRec(dir).filterNot(f => replaced(f._1))
   }
 
   /** GC a table's superseded files once they are older than the grace
@@ -533,36 +536,135 @@ class QueueStore(val spark: SparkSession, val root: String,
   def rawProcessingCount(q: String): Long =
     rawProcessingCounts(Seq(q)).getOrElse(q, 0L)
 
-  /** Distinct claims for MANY queues in ONE column-pruned Spark job
-    * (ids + queue only — the claim tables are id-sized, and acked
-    * rows compact away), instead of a scan per queue per call.
-    * Reads = folded per-queue counters (latest fold epoch) + the
-    * tombstones NOT yet folded + live claim rows — so the scan cost is
-    * bounded by the fold horizon, not by all-time ack history. */
-  def rawProcessingCounts(qs: Seq[String]): Map[String, Long] = {
-    val (folded, excluded) = latestFoldEpoch() match {
-      case Some((_, dir)) => (readFoldCounts(dir), readFoldManifest(dir))
-      case None => (Map.empty[String, Long], Set.empty[String])
+  // -- queue gauges from a per-file driver memo ---------------------------
+  // job_counts and pending_jobs_count are LLEN / ZCARD in the reference
+  // (flume.ex:80-102): they must not cost a scan of every claim per
+  // read. Every queue, processing and tombstone part file is immutable
+  // once publish renamed it in, under a unique name (stamp + uuid +
+  // index), and a file only ever LEAVES a listing (GC, the claim fold,
+  // the archiver, a compaction's `replaced` set). So the gauges keep
+  // what each file contributes — a processing row or tombstone file's
+  // (id, queue) pairs, a queue file's footer row count — and a read
+  // lists the files, forgets those that left the listing, reads only
+  // the unseen ones (ONE column-pruned Spark job for claims, none when
+  // nothing was appended) and counts on the driver. The memo holds the
+  // same id sets every read scanned before, so compaction, the claim
+  // fold and GC bound it as they bound the tables. A listed file that
+  // vanishes before its read contributes 0 and leaves the memo with
+  // the next listing (the readers' ignoreMissingFiles stance).
+
+  /** What a gauge needs of each part file of one listing, by path
+    * relative to the listed dir. */
+  private final class FileMemo[V] {
+    private val byRel = mutable.HashMap.empty[String, V]
+    /** Forget files not in `listing`; returns the listed files with no
+      * entry yet. */
+    def sync(listing: Seq[(String, FileStatus)]): Seq[(String, FileStatus)] = {
+      val listed = listing.iterator.map(_._1).toSet
+      byRel.filterInPlace((rel, _) => listed(rel))
+      listing.filterNot(f => byRel.contains(f._1))
     }
-    val rowClaims = readOrEmpty(processingDir, processingSchema)
-      .select(col("claim_id").as("id"), col("queue"))
-    val tombFiles = listTombFiles("processing")
-      .filterNot(f => excluded(f.getPath.getName))
-    // ignoreMissingFiles: a concurrent foldClaimCounters may delete a
-    // listed file before the scan opens it — its claims are then in the
-    // counters of an epoch this call has not read, so dropping the file
-    // is a transient undercount, not a crash (matches footerRowCount's
-    // FileNotFoundException->0 stance)
-    val tombClaims = readParquet(tombFiles.map(_.getPath.toString).toSeq, tombSchema)
-    val unfolded = rowClaims.unionAll(tombClaims.select(col("id"), col("queue")))
-      .where(col("queue").isin(qs: _*))
-      .groupBy("queue").agg(countDistinct("id").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def update(rel: String, v: V): Unit = byRel.update(rel, v)
+    def entries: Iterator[(String, V)] = byRel.iterator
+  }
+
+  private type Claims = Array[(String, String)] // (id, queue) per row
+  // one lock for the whole memo: reads are driver arithmetic, and two
+  // readers syncing the same file would scan it twice
+  private object gaugeMemo {
+    val rows = new FileMemo[Claims]  // live processing row files
+    val tombs = new FileMemo[Claims] // listed processing tombstone files
+    val footers = mutable.HashMap.empty[String, FileMemo[Long]] // by dir
+    // latest claim-fold epoch: (k, per-queue counters, absorbed files)
+    var fold: Option[(Int, Map[String, Long], Set[String])] = None
+  }
+
+  /** Bring the claim memos in line with the live processing listing and
+    * the tombstone listing: unseen files of both are read in ONE
+    * column-pruned Spark job; nothing runs when no file is new. Caller
+    * holds the gaugeMemo lock. */
+  private def syncClaims(): Unit = {
+    maybeRenewLease() // a job-free read must still renew, like readParquet
+    val newRows = gaugeMemo.rows.sync(liveParts(processingDir))
+    val newTombs = gaugeMemo.tombs.sync(listPartFilesRec(tombDir("processing")))
+    // the table dir, filtered to the unseen files by name: Spark lists
+    // one dir on the driver (an explicit list of more than 32 paths
+    // costs a parallel-listing job) and prunes the others before the
+    // scan. Both dirs are flat and part names unique, so (table,
+    // basename) keys a file.
+    def scan(dir: String, files: Seq[(String, FileStatus)], schema: StructType,
+        idCol: String, table: Int) =
+      Option.when(files.nonEmpty)(readParquet(Seq(dir), schema)
+        .where(col("_metadata.file_name").isin(files.map(_._2.getPath.getName): _*))
+        .select(lit(table), col(idCol), col("queue"), col("_metadata.file_name")))
+    val scans = scan(processingDir, newRows, processingSchema, "claim_id", 0) ++
+      scan(tombDir("processing"), newTombs, tombSchema, "id", 1)
+    if (scans.nonEmpty) {
+      val read = scans.reduce(_ unionAll _).collect()
+        .groupMap(r => (r.getInt(0), r.getString(3)))(r => (r.getString(1), r.getString(2)))
+      def fill(memo: FileMemo[Claims], files: Seq[(String, FileStatus)], table: Int): Unit =
+        files.foreach { case (rel, st) =>
+          memo(rel) = read.getOrElse((table, st.getPath.getName), Array.empty)
+        }
+      fill(gaugeMemo.rows, newRows, 0)
+      fill(gaugeMemo.tombs, newTombs, 1)
+    }
+  }
+
+  /** The latest fold epoch's per-queue counters and the tombstone file
+    * names it absorbed, read once per epoch (a fold in this process
+    * hands its own over). Caller holds the gaugeMemo lock. */
+  private def foldState(): (Map[String, Long], Set[String]) =
+    latestFoldEpoch() match {
+      case None => (Map.empty, Set.empty)
+      case Some((k, dir)) =>
+        val (_, counts, absorbed) = gaugeMemo.fold.filter(_._1 == k).getOrElse {
+          val f = (k, readFoldCounts(dir), readFoldManifest(dir))
+          gaugeMemo.fold = Some(f)
+          f
+        }
+        (counts, absorbed)
+    }
+
+  /** Distinct claims for MANY queues: folded per-queue counters (latest
+    * fold epoch) + the distinct ids over live claim rows and the
+    * tombstones NOT yet folded, from the gauge memo — zero Spark jobs
+    * on an unchanged store, one after appends. */
+  def rawProcessingCounts(qs: Seq[String]): Map[String, Long] = gaugeMemo.synchronized {
+    val (folded, absorbed) = foldState()
+    syncClaims()
+    val wanted = qs.toSet
+    val ids = mutable.HashMap.empty[String, mutable.HashSet[String]]
+    def add(claims: Claims): Unit = claims.foreach { case (id, q) =>
+      if (id != null && wanted(q)) ids.getOrElseUpdate(q, mutable.HashSet.empty) += id
+    }
+    gaugeMemo.rows.entries.foreach(e => add(e._2))
+    gaugeMemo.tombs.entries.foreach { case (rel, c) => if (!absorbed(rel)) add(c) }
     qs.distinct.flatMap { q =>
-      val n = folded.getOrElse(q, 0L) + unfolded.getOrElse(q, 0L)
-      if (n == 0) None else Some(q -> n)
+      val n = folded.getOrElse(q, 0L) + ids.get(q).fold(0L)(_.size.toLong)
+      Option.when(n != 0)(q -> n)
     }.toMap
   }
+
+  /** In-flight claims: distinct claim ids of the live processing rows
+    * minus the ids of tombstones in force, of `queues` only when given —
+    * [[liveProcessing]]'s rows, counted from the gauge memo. Set
+    * semantics absorb duplicate copies of a claim. */
+  private[graft] def pendingClaimCount(queues: Option[Seq[String]]): Long =
+    gaugeMemo.synchronized {
+      syncClaims()
+      val folded = readManifest(processingDir).map(_.folded).getOrElse(Set.empty)
+      val acked = mutable.HashSet.empty[String]
+      gaugeMemo.tombs.entries.foreach { case (rel, c) =>
+        if (!folded(rel)) c.foreach { case (id, _) => if (id != null) acked += id }
+      }
+      val inScope = queues.map(_.toSet)
+      val live = mutable.HashSet.empty[String]
+      gaugeMemo.rows.entries.foreach(_._2.foreach { case (id, q) =>
+        if (!acked(id) && inScope.forall(_(q))) live += id
+      })
+      live.size.toLong
+    }
 
   // -- acked-claim counter fold --------------------------------------------
   // The processing tombstones are the durable acked-claim record that
@@ -574,7 +676,7 @@ class QueueStore(val spark: SparkSession, val root: String,
 
   def claimCountsDir: String = s"$root/claimcounts"
 
-  private def listTombFiles(table: String): Array[org.apache.hadoop.fs.FileStatus] = {
+  private def listTombFiles(table: String): Array[FileStatus] = {
     val p = new Path(tombDir(table))
     if (!fs.exists(p)) Array.empty
     else fs.listStatus(p).filter(_.getPath.getName.startsWith("part-"))
@@ -712,6 +814,7 @@ class QueueStore(val spark: SparkSession, val root: String,
     val epochDir = new Path(s"$claimCountsDir/epoch=$epoch")
     if (!fs.rename(new Path(staging), epochDir))
       throw new java.io.IOException(s"claim fold: rename $staging -> $epochDir failed")
+    gaugeMemo.synchronized { gaugeMemo.fold = Some((epoch, merged.toMap, foldNames)) }
     foldable.foreach(f => fs.delete(f.getPath, false))
     prevEpoch.foreach { case (_, d) => fs.delete(d, true) }
     foldable.length.toLong
@@ -719,18 +822,19 @@ class QueueStore(val spark: SparkSession, val root: String,
 
   /** Row count of an append-only table from parquet FOOTERS only —
     * driver-side metadata reads, no Spark job, no data scan. Exact for
-    * queue dirs (append-only, never deduped). O(files) footer reads;
-    * at scale the compactor keeps file counts bounded. */
-  def footerRowCount(dir: String): Long = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) 0L
-    else listPartFilesRec(dir).map(f => footerCount(f._2)).sum
+    * queue dirs (append-only, never deduped). Each file's footer is
+    * read once (the gauge memo): a call lists the dir and reads only
+    * files it has not seen. */
+  def footerRowCount(dir: String): Long = gaugeMemo.synchronized {
+    val memo = gaugeMemo.footers.getOrElseUpdate(dir, new FileMemo[Long])
+    memo.sync(listPartFilesRec(dir)).foreach { case (rel, st) => memo(rel) = footerCount(st) }
+    memo.entries.map(_._2).sum
   }
 
   // a concurrently deleted/moved listed file opens as 0 rows: for queue
   // dirs the archiver counts its rows under the archive, for tombstones
   // a fold counted them into the counters — either way not lost
-  private def footerCount(f: org.apache.hadoop.fs.FileStatus): Long =
+  private def footerCount(f: FileStatus): Long =
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromStatus(f, spark.sparkContext.hadoopConfiguration)
@@ -1061,7 +1165,7 @@ class QueueStore(val spark: SparkSession, val root: String,
     // recursive: queue files live under day= partition subdirs; the
     // archive move preserves the relative path so history stays
     // day-partitioned under .archive/ too
-    val oldByQueue: Map[String, Seq[(String, org.apache.hadoop.fs.FileStatus)]] =
+    val oldByQueue: Map[String, Seq[(String, FileStatus)]] =
       qs.distinct.map { q =>
         q -> listPartFilesRec(queueDir(q))
           .filter(_._2.getModificationTime < cutoff)
@@ -1144,10 +1248,7 @@ class QueueStore(val spark: SparkSession, val root: String,
   /** Live (non-replaced) part files in the dead dir — the driver-side
     * listing-only gauge that arms compactDead. Grows with appends
     * since the last fold, collapses to the snapshot's width after. */
-  def deadPartFileCount(): Long = {
-    val replaced = readManifest(deadDir).map(_.replaced).getOrElse(Set.empty)
-    listPartFilesRec(deadDir).count { case (rel, _) => !replaced(rel) }.toLong
-  }
+  def deadPartFileCount(): Long = liveParts(deadDir).length.toLong
 
   // -- single-driver ownership guard (SURVEY §2 E3) -----------------------
   // The FIFO part-stamp clock, the runner quiesce registry and the

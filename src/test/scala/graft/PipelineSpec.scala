@@ -18,11 +18,25 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   override def beforeEach(): Unit = { Buffers.clear(); WorkerRegistry.clear() }
 
+  /** Keeps every `batch` event besides the last-seen gauges: `all`, and
+    * `batches` for the triggers that read rows. */
+  private class BatchRecorder extends InMemoryEventHandler {
+    val all = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Double]]()
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Double]]()
+    override def handle(event: String, pipeline: String, m: Map[String, Double]): Unit = {
+      super.handle(event, pipeline, m)
+      if (event == "batch") {
+        all.add(m)
+        if (m.getOrElse("numInputRows", 0.0) > 0) batches.add(m)
+      }
+    }
+  }
+
   test("minimum e2e slice: enqueue 100 → streaming pipeline → all acked (A1,B1,B4,B5,B7,D2,D5)") {
     WorkerRegistry.register("EchoWorker", (args, ctx) => {
       Buffers.echo.add(args); Buffers.ctx.add(ctx)
     })
-    val handler = new InMemoryEventHandler
+    val handler = new BatchRecorder
     val listener = Instrumentation.attach(spark, handler)
     val store = new QueueStore(spark, TestSpark.tmpRoot("e2e"))
     val api = new DefaultQueueApi(store)
@@ -46,6 +60,40 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     while (!handler.gauges.keys.exists(_._2 == "batch") && System.currentTimeMillis() < deadline)
       Thread.sleep(100)
     assert(handler.gauges.keys.exists(_._2 == "batch"))
+    // each trigger that read rows carries Spark's phase breakdown; the
+    // queue pipeline sets no watermark
+    assert(!handler.batches.isEmpty)
+    handler.batches.forEach { m =>
+      assert(Seq("addBatchMs", "getBatchMs", "latestOffsetMs", "queryPlanningMs",
+        "walCommitMs", "triggerExecutionMs").forall(m.contains), m.keys.toString)
+      assert(!m.contains("watermarkMs"))
+    }
+  }
+
+  test("D5: batch telemetry carries the event-time watermark when the query sets one") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val dir = TestSpark.tmpRoot("wm_events") + "/data"
+    val base = 1704067200000L // 2024-01-01T00:00Z
+    val last = base + 3600000L
+    Seq((new java.sql.Timestamp(base), "click", 1.0), (new java.sql.Timestamp(last), "view", 1.0))
+      .toDF("ts", "event_type", "value").coalesce(1).write.parquet(dir)
+    val handler = new BatchRecorder
+    val listener = Instrumentation.attach(spark, handler)
+    def marks = handler.all.asScala.flatMap(_.get("watermarkMs")).toSeq
+    try {
+      val src = spark.readStream.schema("ts timestamp, event_type string, value double").parquet(dir)
+      val q = graft.streaming.StreamingAnalytics.windowedCounts(src, watermark = "10 minutes")
+        .writeStream.outputMode("append").format("memory").queryName("wm_events")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.processAllAvailable(); q.stop()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!marks.contains((last - 600000L).toDouble) && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+    } finally spark.streams.removeListener(listener)
+    // the first trigger runs under the initial watermark, the next under
+    // max(ts) minus the 10-minute delay
+    assert(marks.toSet === Set(0.0, (last - 600000L).toDouble))
   }
 
   test("failure → retry with backoff → dead letter after max_retries (B8,B9,C1)") {

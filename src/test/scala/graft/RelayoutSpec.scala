@@ -10,6 +10,13 @@ class RelayoutSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Relayout.spreadUnsplittable; its spread copy (a fixed /tmp path
+    * per source dir) goes with the test run's temp dirs. */
+  private def spreadCopy(src: String): (String, Double) = {
+    val (out, sec) = Relayout.spreadUnsplittable(spark, src)
+    (TestSpark.deleteAtExit(out), sec)
+  }
+
   private def writeSingleFile(dir: java.io.File, name: String, n: Int): Unit = {
     // coalesce(1) → one part file, one row group → unsplittable
     val tmp = new java.io.File(dir, s"_stage_$name")
@@ -28,7 +35,7 @@ class RelayoutSpec extends AnyFunSuite {
   test("unsplittable table is spread multi-file with identical content") {
     val src = new java.io.File(TestSpark.tmpRoot("relayout-src"))
     writeSingleFile(src, "t1", 1000)
-    val (outDir, sec) = Relayout.spreadUnsplittable(spark, src.getAbsolutePath)
+    val (outDir, sec) = spreadCopy(src.getAbsolutePath)
     assert(outDir != src.getAbsolutePath)
     assert(sec >= 0.0)
     val spread = spark.read.parquet(s"$outDir/t1.parquet")
@@ -41,16 +48,16 @@ class RelayoutSpec extends AnyFunSuite {
   test("second call reuses the stamped copy; source touch rebuilds") {
     val src = new java.io.File(TestSpark.tmpRoot("relayout-reuse"))
     writeSingleFile(src, "t1", 100)
-    val (out1, _) = Relayout.spreadUnsplittable(spark, src.getAbsolutePath)
+    val (out1, _) = spreadCopy(src.getAbsolutePath)
     val stamp = new java.io.File(out1, "_GRAFT_SPREAD_DONE")
     val stampT = stamp.lastModified()
-    val (out2, _) = Relayout.spreadUnsplittable(spark, src.getAbsolutePath)
+    val (out2, _) = spreadCopy(src.getAbsolutePath)
     assert(out1 == out2)
     assert(stamp.lastModified() == stampT, "fresh copy must be reused, not rebuilt")
     // a newer source invalidates the stamp
     val tbl = new java.io.File(src, "t1.parquet")
     assert(tbl.setLastModified(stamp.lastModified() + 2000))
-    val (_, _) = Relayout.spreadUnsplittable(spark, src.getAbsolutePath)
+    val (_, _) = spreadCopy(src.getAbsolutePath)
     assert(stamp.lastModified() > stampT, "stale copy must be rebuilt")
   }
 
@@ -58,7 +65,7 @@ class RelayoutSpec extends AnyFunSuite {
     // dir-per-table layout (no bare files) → returned unchanged
     val dirLayout = TestSpark.tmpRoot("relayout-dirs")
     (1 to 10).toDF("id").write.parquet(s"$dirLayout/t1.parquet")
-    val (same, _) = Relayout.spreadUnsplittable(spark, dirLayout)
+    val (same, _) = spreadCopy(dirLayout)
     assert(same == dirLayout)
     // a genuinely multi-row-group single file passes through as a link
     val src = new java.io.File(TestSpark.tmpRoot("relayout-pass"))
@@ -74,7 +81,7 @@ class RelayoutSpec extends AnyFunSuite {
       .parquet(stage.getAbsolutePath)
     val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.move(part.toPath, many.toPath)
-    val (outDir, _) = Relayout.spreadUnsplittable(spark, src.getAbsolutePath)
+    val (outDir, _) = spreadCopy(src.getAbsolutePath)
     val linked = new java.io.File(outDir, "many.parquet")
     assert(java.nio.file.Files.isSymbolicLink(linked.toPath),
       "well-laid-out table should pass through untouched")

@@ -7,7 +7,7 @@ import graft.model.PipelineConfig
 import graft.pipeline.{PipelineRunner, WorkerRegistry}
 import graft.scheduler.Housekeeper
 import graft.store.QueueStore
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.TestSpark.jobsOf
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,38 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * must never delay a row past the first tick where it is due. */
 class RetryChainSpec extends AnyFunSuite with BeforeAndAfterEach {
   private lazy val spark = TestSpark.spark
-  private val Key = "graft.spec.jobTag"
 
   override def beforeEach(): Unit = { Buffers.clear(); WorkerRegistry.clear() }
-
-  /** Spark jobs `body` launches. Jobs are tagged through a thread-local
-    * property (inherited by broadcast and AQE stage jobs); a sentinel
-    * job after the body marks the end, and since the listener bus
-    * delivers in order, every earlier job start has been seen once the
-    * sentinel's has. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Key))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Key, tag)
-      val a = try body finally sc.setLocalProperty(Key, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.contains(s"$tag-end") && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$tag-end"), "sentinel job never reached the listener")
-      (a, seen.toArray.count(_ == tag))
-    } finally {
-      sc.setLocalProperty(Key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def claimAt(store: QueueStore, q: String, atMs: Long, batch: Int): Unit =
     store.append(store.processingDir, store.queueRows(q)
