@@ -34,6 +34,10 @@ import sys
 import time
 
 import duckdb
+# imported here, not by the first fetchdf(): every oracle runs in a
+# forked child, and a child that imports pandas itself pays ~0.6 s per
+# query, most of the tool's run time over 167 oracles
+import pandas  # noqa: F401
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
