@@ -44,8 +44,10 @@ class InMemoryEventHandler(maxJobs: Int = 10000) extends EventHandler {
   override def handleJob(pipeline: String, jid: String, durationMs: Double, success: Boolean): Unit =
     jobRing.synchronized { jobRing.put((pipeline, jid), (durationMs, success)); () }
   /** Snapshot of the most recent (pipeline, jid) → (durationMs, success). */
-  def jobs: Map[(String, String), (Double, Boolean)] =
-    jobRing.synchronized(jobRing.asScala.toMap)
+  def jobs: Map[(String, String), (Double, Boolean)] = jobRing.synchronized {
+    import scala.jdk.CollectionConverters._
+    jobRing.asScala.toMap
+  }
 }
 
 class PipelineListener(handler: EventHandler) extends StreamingQueryListener {

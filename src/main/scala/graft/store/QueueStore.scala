@@ -474,10 +474,18 @@ class QueueStore(val spark: SparkSession, val root: String,
     * surviving copy (the fold proves that before deleting), so dropping
     * it cannot resurrect anything. */
   private def readTombsInForce(dir: String, table: String): DataFrame = {
-    val folded = readManifest(dir).map(_.folded).getOrElse(Set.empty)
+    val inForce = tombsInForce(dir)
     readParquet(listPartFilesRec(tombDir(table)).collect {
-      case (rel, st) if !folded(rel) => st.getPath.toString
+      case (rel, st) if inForce(rel) => st.getPath.toString
     }, tombSchema)
+  }
+
+  /** Which listed tombstone files (by path relative to the tombstone
+    * dir) are in force against `dir`: all but those its committed
+    * compaction manifest marks `folded`. */
+  private def tombsInForce(dir: String): String => Boolean = {
+    val folded = readManifest(dir).map(_.folded).getOrElse(Set.empty)
+    rel => !folded(rel)
   }
 
   /** rows minus tombstones; idCol names the row's tombstone key. */
@@ -544,7 +552,7 @@ class QueueStore(val spark: SparkSession, val root: String,
   // index), and a file only ever LEAVES a listing (GC, the claim fold,
   // the archiver, a compaction's `replaced` set). So the gauges keep
   // what each file contributes — a processing row or tombstone file's
-  // (id, queue) pairs, a queue file's footer row count — and a read
+  // claim ids by queue, a queue file's footer row count — and a read
   // lists the files, forgets those that left the listing, reads only
   // the unseen ones (ONE column-pruned Spark job for claims, none when
   // nothing was appended) and counts on the driver. The memo holds the
@@ -568,7 +576,8 @@ class QueueStore(val spark: SparkSession, val root: String,
     def entries: Iterator[(String, V)] = byRel.iterator
   }
 
-  private type Claims = Array[(String, String)] // (id, queue) per row
+  // a file's claim ids by queue: the rows of one queue share its name
+  private type Claims = Map[String, Array[String]]
   // one lock for the whole memo: reads are driver arithmetic, and two
   // readers syncing the same file would scan it twice
   private object gaugeMemo {
@@ -601,10 +610,11 @@ class QueueStore(val spark: SparkSession, val root: String,
       scan(tombDir("processing"), newTombs, tombSchema, "id", 1)
     if (scans.nonEmpty) {
       val read = scans.reduce(_ unionAll _).collect()
-        .groupMap(r => (r.getInt(0), r.getString(3)))(r => (r.getString(1), r.getString(2)))
+        .groupBy(r => (r.getInt(0), r.getString(3)))
+        .view.mapValues(_.groupMap(_.getString(2))(_.getString(1))).toMap
       def fill(memo: FileMemo[Claims], files: Seq[(String, FileStatus)], table: Int): Unit =
         files.foreach { case (rel, st) =>
-          memo(rel) = read.getOrElse((table, st.getPath.getName), Array.empty)
+          memo(rel) = read.getOrElse((table, st.getPath.getName), Map.empty)
         }
       fill(gaugeMemo.rows, newRows, 0)
       fill(gaugeMemo.tombs, newTombs, 1)
@@ -635,8 +645,8 @@ class QueueStore(val spark: SparkSession, val root: String,
     syncClaims()
     val wanted = qs.toSet
     val ids = mutable.HashMap.empty[String, mutable.HashSet[String]]
-    def add(claims: Claims): Unit = claims.foreach { case (id, q) =>
-      if (id != null && wanted(q)) ids.getOrElseUpdate(q, mutable.HashSet.empty) += id
+    def add(claims: Claims): Unit = claims.foreach { case (q, qIds) =>
+      if (wanted(q)) ids.getOrElseUpdate(q, mutable.HashSet.empty) ++= qIds.filter(_ != null)
     }
     gaugeMemo.rows.entries.foreach(e => add(e._2))
     gaugeMemo.tombs.entries.foreach { case (rel, c) => if (!absorbed(rel)) add(c) }
@@ -653,15 +663,15 @@ class QueueStore(val spark: SparkSession, val root: String,
   private[graft] def pendingClaimCount(queues: Option[Seq[String]]): Long =
     gaugeMemo.synchronized {
       syncClaims()
-      val folded = readManifest(processingDir).map(_.folded).getOrElse(Set.empty)
+      val inForce = tombsInForce(processingDir)
       val acked = mutable.HashSet.empty[String]
       gaugeMemo.tombs.entries.foreach { case (rel, c) =>
-        if (!folded(rel)) c.foreach { case (id, _) => if (id != null) acked += id }
+        if (inForce(rel)) c.valuesIterator.foreach(acked ++= _.filter(_ != null))
       }
       val inScope = queues.map(_.toSet)
       val live = mutable.HashSet.empty[String]
-      gaugeMemo.rows.entries.foreach(_._2.foreach { case (id, q) =>
-        if (!acked(id) && inScope.forall(_(q))) live += id
+      gaugeMemo.rows.entries.foreach(_._2.foreach { case (q, qIds) =>
+        if (inScope.forall(_(q))) qIds.foreach(id => if (!acked(id)) live += id)
       })
       live.size.toLong
     }

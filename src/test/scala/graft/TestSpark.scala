@@ -11,9 +11,6 @@ import org.apache.spark.sql.SparkSession
   * temp-dir state roots wiped per test instead of a flushed keyspace). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    // read by the session's SparkConf, so it is in place before the
-    // first file system is made
-    System.setProperty("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
     val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
