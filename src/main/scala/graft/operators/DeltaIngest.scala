@@ -3,9 +3,10 @@ package graft.operators
 import graft.queries.DedupQueries
 import graft.operators.SegmentLog.{committedLog, foldLatest, fs, readCommitted}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Incremental curation — the O(delta) production shape for a corpus
   * that grows daily, composed from the same oracle-checked plans the
@@ -247,6 +248,17 @@ object DeltaIngest {
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
+  // the base run's manifest (CurationRun) and the two layout logs
+  private val ManifestSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("split", StringType),
+    StructField("source", StringType), StructField("n_chars", LongType),
+    StructField("shard", IntegerType)))
+  private val ManifestLogSchema = ManifestSchema.add("dead", BooleanType)
+  private val FinalLogSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("n_chars", LongType),
+    StructField("split", StringType), StructField("source", StringType),
+    StructField("dead", BooleanType)))
   // fold payloads in each table's column order ([[SegmentLog.foldLatest]]
   // keys the struct on them, so the order fixes the tie-breaks)
   private val MemberFields = Seq("cluster_id")
@@ -262,11 +274,9 @@ object DeltaIngest {
     * multi-read caller sees ONE commit point). */
   private def manifestAll(s: SparkSession, outDir: String,
       allowed: Set[Long]): DataFrame = {
-    val base = s.read.parquet(s"$outDir/manifest.parquet")
-      .select(col("doc_id"), col("split"), col("source"), col("n_chars"),
-        col("shard"))
+    val base = s.read.schema(ManifestSchema).parquet(s"$outDir/manifest.parquet")
       .withColumn("dead", lit(false)).withColumn("seg", lit(0L))
-    committedLog(s, s"$outDir/manifest_log", allowed).fold(base)(log =>
+    committedLog(s, s"$outDir/manifest_log", allowed, ManifestLogSchema).fold(base)(log =>
       base.unionAll(log.select(("doc_id" +: ManifestFields :+ "seg").map(col): _*)))
   }
 
@@ -318,7 +328,7 @@ object DeltaIngest {
     val base = s.read.parquet(s"$outDir/final").select(FinalCols.map(col): _*)
     val epoch = foldedEpoch(s, outDir)
     committedLog(s, s"$outDir/final_log",
-        committedSegs(s, outDir).filter(_ > epoch)).fold(base) { log =>
+        committedSegs(s, outDir).filter(_ > epoch), FinalLogSchema).fold(base) { log =>
       // a dead row's id may also be log-APPENDED-then-removed (not in
       // base) — the anti-join is a no-op for those and the fold drops
       // their live rows, so dead-only stays exact for every history
@@ -408,29 +418,95 @@ object DeltaIngest {
     * the dedup twin of [[IvfMaintenance.knnQuery]]: for each input doc
     * (canonical schema), every committed corpus doc whose exact
     * word-shingle Jaccard reaches the ingest verification threshold
-    * (>= 0.3), found through the SAME band index + combined-occupancy
-    * hot-bucket cap + candidates-only verification the ingest path
-    * runs — literally the same code: [[baseProbe]] + [[verifiedJaccard]]
-    * are one definition shared with [[computeAndStage]]'s stage 2a/2b,
-    * so screening and ingest cannot drift. Nothing is written; corpus
-    * text is
-    * read candidate-bounded, never scanned. Matches are against the
-    * GATED corpus the ingest path itself matches — including cluster
-    * members later dropped from the final layout (that is the point:
-    * a probe that collides with a dropped member IS a near-dup), and
-    * a probe reusing a committed doc_id matches itself at jaccard 1.
-    * Output: (doc_id, base_id, jaccard). */
+    * ([[DedupQueries.JaccardThreshold]]), found through the same band
+    * index, combined-occupancy hot-bucket cap
+    * ([[DedupQueries.HotBucketCap]]) and candidates-only verification
+    * the ingest path runs. Matches are against the GATED corpus the
+    * ingest path itself matches — including cluster members later
+    * dropped from the final layout (that is the point: a probe that
+    * collides with a dropped member IS a near-dup), and a probe reusing
+    * a committed doc_id matches itself at jaccard 1. Nothing is written.
+    *
+    * The input is query-sized by contract: it is collected to the
+    * driver, and the probe runs there in exactly 3 Spark jobs — collect
+    * the probe docs, one column-pruned scan of the committed band rows
+    * in the probe's buckets, one scan of the candidates' texts. Both
+    * scans read ONE committed-segment snapshot, so a concurrent ingest
+    * can never show a batch's bands without its text. Signatures come
+    * from [[DedupQueries.shingleSet]]/[[DedupQueries.minhashKeys]],
+    * the columns the ingest path signs with, evaluated over a local
+    * relation (no job). The result equals the ingest path's
+    * [[baseProbe]] + [[verifiedJaccard]] on the same input (the spec
+    * holds them equal), duplicate input ids included: shared shingles
+    * count as the join does, Σ count_a(s)·count_b(s). Output: a local
+    * (doc_id, base_id, jaccard) frame. */
   def probeNearDups(s: SparkSession, docs: DataFrame, outDir: String): DataFrame = {
     require(indexed(s, outDir), s"buildIndex has not completed for $outDir")
-    val d = docs.select("doc_id", "text", "lang", "source", "n_chars")
-      .localCheckpoint(true)
-    val bp = baseProbe(s, d, outDir)
-    verifiedJaccard(
-      bp.xCand.select(col("delta_id").as("doc_a"), col("base_id").as("doc_b")),
-      bp.dShingles, bp.bShingles, bp.dCnt, bp.bCnt)
-      .select(col("doc_a").as("doc_id"), col("doc_b").as("base_id"),
-        col("jaccard"))
+    val probe = signaturesOf(s, docs.select(col("doc_id").cast(LongType), col("text")))
+    val allowed = committedSegs(s, outDir)
+    // probe band rows by bucket, one entry per row (duplicate ids count)
+    val probeBuckets = probe.flatMap(p =>
+      p.bands.zipWithIndex.map { case (k, b) => (b, k) -> p.id }).groupMap(_._1)(_._2)
+    val committed = readLog(s, outDir, "bands", BandsSchema, Some(allowed))
+      .where(col("bkey").isin(probeBuckets.keys.map(_._2).toSeq.distinct: _*))
+      .select("band", "bkey", "doc_id").collect()
+      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).groupMap(_._1)(_._2)
+    val cand = probeBuckets.toSeq.flatMap { case (bucket, ids) =>
+      val base = committed.getOrElse(bucket, Array.empty[Long])
+      if (ids.size + base.length > DedupQueries.HotBucketCap) Nil
+      else for (id <- ids; b <- base) yield id -> b
+    }.distinct
+    val candIds = cand.map(_._2).distinct
+    val texts = gatedCorpus(s, outDir, allowed).select("doc_id", "text")
+      .where(col("doc_id").isin(candIds: _*))
+    val pBag = shingleBags(probe)
+    val bBag = shingleBags(signaturesOf(s, texts))
+    val hits = cand.flatMap { case (a, b) =>
+      val (sa, sb) = (pBag.getOrElse(a, Map.empty[String, Long]),
+        bBag.getOrElse(b, Map.empty[String, Long]))
+      val shared = sa.iterator.map { case (sh, c) => c * sb.getOrElse(sh, 0L) }.sum
+      // the join's arithmetic: a zero denominator is null there, no hit
+      val den = sa.values.sum + sb.values.sum - shared
+      val jaccard = shared.toDouble / den
+      Option.when(den > 0 && jaccard >= DedupQueries.JaccardThreshold)(Row(a, b, jaccard))
+    }
+    s.createDataFrame(hits.asJava, ProbeHitSchema)
   }
+
+  /** The gated corpus every match reads text from, as of the
+    * committed-segment snapshot `allowed`: the base run's stage-1 docs
+    * plus each committed delta's clean segment, both immutable. */
+  private def gatedCorpus(s: SparkSession, outDir: String, allowed: Set[Long]): DataFrame =
+    s.read.schema(CleanSchema).parquet(s"$outDir/stage1_clean/documents.parquet")
+      .unionAll(readLog(s, outDir, "clean_delta", CleanSchema, Some(allowed)).drop("seg"))
+
+  private val ProbeHitSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("base_id", LongType),
+    StructField("jaccard", DoubleType)))
+
+  /** One doc row's signatures, as the ingest path computes them. */
+  private final case class Signed(id: Long, shingles: Seq[String], bands: Seq[String])
+
+  /** Collects `(doc_id: long, text)` (one job unless `docs` is local) and
+    * signs every row on the driver: the shared signature columns over
+    * a local relation, which the optimizer evaluates in place. */
+  private def signaturesOf(s: SparkSession, docs: DataFrame): Seq[Signed] = {
+    graft.functions.expr.TextExpressions.register(s)
+    s.createDataFrame(docs.collect().toSeq.asJava, docs.schema)
+      .select(col("doc_id"), DedupQueries.shingleSet(col("text")),
+        DedupQueries.minhashKeys(col("text")))
+      .collect().toSeq.map(r => Signed(r.getLong(0),
+        Option(r.getSeq[String](1)).getOrElse(Nil),
+        Option(r.getSeq[String](2)).getOrElse(Nil)))
+  }
+
+  /** Per doc id, each shingle's count over that id's rows — the
+    * multiset the [[verifiedJaccard]] join counts (a row's shingles are
+    * distinct, so only a duplicate id counts one above 1); its total is
+    * the join's per-id shingle count. */
+  private def shingleBags(signed: Seq[Signed]): Map[Long, Map[String, Long]] =
+    signed.groupMap(_.id)(_.shingles).view
+      .mapValues(_.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)).toMap
 
   /** Per-doc curation audit off the PERSISTED index — "why is doc X in
     * (or out of) the corpus", answered without recomputing anything
@@ -482,10 +558,7 @@ object DeltaIngest {
     val keeperOf = mem.join(keep, "cluster_id")
       .select(col("doc_id"), col("keeper_id"))
     // gated-corpus membership (ids only — column-pruned scans)
-    val gated = s.read.parquet(s"$outDir/stage1_clean/documents.parquet")
-      .select("doc_id")
-      .unionAll(readLog(s, outDir, "clean_delta", CleanSchema, Some(allowed))
-        .select("doc_id"))
+    val gated = gatedCorpus(s, outDir, allowed).select("doc_id")
       .join(q, Seq("doc_id"), "left_semi").distinct()
       .withColumn("g", lit(1))
     q.join(live, Seq("doc_id"), "left")
@@ -503,12 +576,15 @@ object DeltaIngest {
           col("keeper_id")).as("keeper_id"))
   }
 
-  /** The shared band-probe pipeline behind [[computeAndStage]]'s stage
-    * 2a/2b and [[probeNearDups]] — ONE definition, so query-time
-    * screening and ingest-time dedup cannot drift:
+  /** The band-probe pipeline of [[computeAndStage]]'s stage 2a/2b,
+    * and the reference [[probeNearDups]] must equal: the spec holds the
+    * driver-side probe to this plan + [[verifiedJaccard]] case by case.
+    * Both sign with the same [[DedupQueries]] columns and share the
+    * hot-bucket cap and the Jaccard threshold, so query-time screening
+    * and ingest-time dedup cannot drift:
     *   - the input docs' shingles, counts, and LSH band rows;
     *   - `dProbe`: band rows after the hot-bucket cap, mirroring
-    *     lshVerifiedPairs (capN=100) over the COMBINED input+base
+    *     lshVerifiedPairs (HotBucketCap) over the COMBINED input+base
     *     occupancy — counted candidate-bounded (the base side is
     *     semi-joined to the input's bucket keys first). The UNFILTERED
     *     `dBands` still feeds occupancy and the ingest's index segment;
@@ -516,12 +592,12 @@ object DeltaIngest {
     *   - `baseCandDocs`/`bShingles`/`bCnt`: base text read ONLY for the
     *     candidate ids — from the base run's stage-1 table plus every
     *     committed delta's clean segment (immutable forever). */
-  private final case class BaseProbe(
+  private[graft] final case class BaseProbe(
       dShingles: DataFrame, dCnt: DataFrame, dBands: DataFrame,
       dProbe: DataFrame, xCand: DataFrame, baseCandDocs: DataFrame,
       bShingles: DataFrame, bCnt: DataFrame)
 
-  private def baseProbe(s: SparkSession, docs: DataFrame, outDir: String): BaseProbe = {
+  private[graft] def baseProbe(s: SparkSession, docs: DataFrame, outDir: String): BaseProbe = {
     val dShingles = DedupQueries.shinglesOf(s, docs).localCheckpoint(true)
     val dCnt = dShingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val dBands = DedupQueries.minhashSigOf(s, docs)
@@ -529,8 +605,8 @@ object DeltaIngest {
         array(DedupQueries.MinhashBands.map(b => col(b._1)): _*))
         .as(Seq("band", "bkey")))
       .localCheckpoint(true)
-    val capN = 100
-    val baseBandsIdx = readLog(s, outDir, "bands", BandsSchema)
+    val allowed = committedSegs(s, outDir)
+    val baseBandsIdx = readLog(s, outDir, "bands", BandsSchema, Some(allowed))
       .select("doc_id", "band", "bkey")
     val deltaBuckets = dBands.select("band", "bkey").distinct()
     val baseOcc = baseBandsIdx.join(deltaBuckets, Seq("band", "bkey"), "left_semi")
@@ -538,7 +614,7 @@ object DeltaIngest {
     val hotBuckets = dBands.groupBy("band", "bkey")
       .agg(count(lit(1)).as("n_delta"))
       .join(baseOcc, Seq("band", "bkey"), "left")
-      .where(col("n_delta") + coalesce(col("n_base"), lit(0L)) > capN)
+      .where(col("n_delta") + coalesce(col("n_base"), lit(0L)) > DedupQueries.HotBucketCap)
       .select("band", "bkey")
     val dProbe = dBands.join(broadcast(hotBuckets), Seq("band", "bkey"), "left_anti")
       .localCheckpoint(true)
@@ -548,12 +624,7 @@ object DeltaIngest {
         Seq("band", "bkey"))
       .select(col("doc_id").as("delta_id"), col("base_id")).distinct()
       .localCheckpoint(true)
-    val matchCorpus = s.read
-      .parquet(s"$outDir/stage1_clean/documents.parquet")
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .unionAll(readLog(s, outDir, "clean_delta", CleanSchema)
-        .select("doc_id", "text", "lang", "source", "n_chars"))
-    val baseCandDocs = matchCorpus
+    val baseCandDocs = gatedCorpus(s, outDir, allowed)
       .join(xCand.select(col("base_id").as("doc_id")).distinct(), Seq("doc_id"),
         "left_semi")
       .localCheckpoint(true)
@@ -563,11 +634,11 @@ object DeltaIngest {
       bShingles, bCnt)
   }
 
-  /** Exact shingle-Jaccard >= 0.3 on candidates only — the
-    * lshVerifiedPairs predicate, verbatim; the single verification
-    * rule both the ingest elections and probeNearDups apply.
+  /** Exact shingle-Jaccard >= JaccardThreshold on candidates only —
+    * the lshVerifiedPairs predicate, verbatim; the verification rule of
+    * the ingest elections, which probeNearDups computes on the driver.
     * Output: (doc_a, doc_b, jaccard). */
-  private def verifiedJaccard(cand: DataFrame, shA: DataFrame, shB: DataFrame,
+  private[graft] def verifiedJaccard(cand: DataFrame, shA: DataFrame, shB: DataFrame,
       cntA: DataFrame, cntB: DataFrame): DataFrame =
     cand
       .join(shA.select(col("doc_id").as("doc_a"), col("s")), "doc_a")
@@ -578,7 +649,7 @@ object DeltaIngest {
       .select(col("doc_a"), col("doc_b"),
         (col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
           .as("jaccard"))
-      .where(col("jaccard") >= 0.3)
+      .where(col("jaccard") >= DedupQueries.JaccardThreshold)
 
   // ---------------------------------------------------------------
   // streaming composition
@@ -794,9 +865,8 @@ object DeltaIngest {
     val gated = CurationRun.qualityGate(delta, s).localCheckpoint(true)
 
     // ---- stage 2a: within-delta near-dedup (same LSH + CC plans) ----
-    // the band probe + hot-cap + candidate-bounded base inputs are the
-    // SHARED pipeline (one definition with probeNearDups, which screens
-    // query docs through exactly these semantics)
+    // the band probe + hot-cap + candidate-bounded base inputs; the
+    // spec holds probeNearDups's driver-side screen equal to this plan
     val bp = baseProbe(s, gated, outDir)
     val dShingles = bp.dShingles
     val dCnt = bp.dCnt

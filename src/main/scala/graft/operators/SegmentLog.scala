@@ -163,12 +163,15 @@ private[graft] object SegmentLog {
     * the `seg=<n>` dirs in `allowed` are read, so an uncommitted
     * (crashed) segment is invisible. Callers pass ONE committed-segment
     * snapshot to every read that must see the same commit point. None
-    * when no allowed segment is present. */
-  def committedLog(s: SparkSession, root: String,
-      allowed: Set[Long]): Option[DataFrame] = {
+    * when no allowed segment is present. `schema` is the table's
+    * declared schema (or a column subset): handing it to the reader
+    * spares the footer-inference Spark job a bare parquet read runs,
+    * so building the frame launches none. */
+  def committedLog(s: SparkSession, root: String, allowed: Set[Long],
+      schema: StructType): Option[DataFrame] = {
     val segs = presentSegs(s, root).filter(allowed)
     if (segs.isEmpty) None
-    else Some(s.read.option("basePath", root)
+    else Some(s.read.schema(schema).option("basePath", root)
       .parquet(segs.map(n => s"$root/seg=$n"): _*)
       .withColumn("seg", col("seg").cast("long")))
   }
@@ -177,7 +180,7 @@ private[graft] object SegmentLog {
     * read is an empty frame of `schema` plus `seg: long`. */
   def readCommitted(s: SparkSession, root: String, allowed: Set[Long],
       schema: StructType): DataFrame =
-    committedLog(s, root, allowed).getOrElse(
+    committedLog(s, root, allowed, schema).getOrElse(
       s.createDataFrame(s.sparkContext.emptyRDD[Row], schema.add("seg", LongType)))
 
   /** Latest row per `key` across segments: `max(struct(seg, fields…))`,

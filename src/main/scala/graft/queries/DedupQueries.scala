@@ -106,11 +106,20 @@ object DedupQueries {
     * exact verification currency with the batch pipeline). */
   private[graft] def shinglesOf(s: SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.expr.TextExpressions.register(s)
-    docs
-      .select(col("doc_id"),
-        explode(array_distinct(
-          call_function("graft_shingles3", split(col("text"), " ")))).as("s"))
+    docs.select(col("doc_id"), explode(shingleSet(col("text"))).as("s"))
   }
+
+  /** The signature columns of a doc's text — ONE definition behind
+    * [[shinglesOf]], [[minhashSigOf]] and DeltaIngest's driver-side
+    * probe (which evaluates them over a local relation): the distinct
+    * word-3-shingles, and the 4 MinHash band keys ([[MinhashBands]]
+    * order; null when the text has no shingle). Callers register the
+    * expressions first (`TextExpressions.register`). */
+  private def shingles3(text: Column): Column =
+    call_function("graft_shingles3", split(text, " "))
+  private[graft] def shingleSet(text: Column): Column = array_distinct(shingles3(text))
+  private[graft] def minhashKeys(text: Column): Column =
+    call_function("graft_minhash4", shingles3(text))
 
   /** Eval-set decontamination: flag TRAIN docs that share any 3-gram
     * shingle with a VAL/TEST doc (the t_split_assign hash rule —
@@ -318,6 +327,13 @@ object DedupQueries {
   private[graft] val MinhashBands =
     Seq("mh0" -> 1, "mh1" -> 9, "mh2" -> 17, "mh3" -> 25)
 
+  /** A (band, key) bucket holding more docs than this is boilerplate:
+    * its docs pair through other bands or not at all. */
+  private[graft] val HotBucketCap = 100
+
+  /** Exact shingle-Jaccard a verified near-duplicate pair reaches. */
+  private[graft] val JaccardThreshold = 0.3
+
   /** Shuffle-free signatures via the native MinHashBands expression:
     * shingle + digest + band minima in one pass per row — pure map,
     * no explode, no shuffle. */
@@ -331,9 +347,7 @@ object DedupQueries {
   private[graft] def minhashSigOf(s: SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.expr.TextExpressions.register(s)
     docs
-      .select(col("doc_id"),
-        call_function("graft_minhash4",
-          call_function("graft_shingles3", split(col("text"), " "))).as("mh"))
+      .select(col("doc_id"), minhashKeys(col("text")).as("mh"))
       .where(col("mh").isNotNull)
       .select(col("doc_id") +: MinhashBands.map(_._1).zipWithIndex.map {
         case (name, idx) => col("mh").getItem(idx).as(name)
@@ -360,7 +374,6 @@ object DedupQueries {
     * per-pair deduped, cached) — the stage every verification metric
     * (Jaccard, containment, edit distance) hangs off. */
   private def lshCandidates(s: SparkSession, dir: String): DataFrame = {
-    val capN = 100
     val bands = minhashSig(s, dir)
       .select(col("doc_id"), posexplode(
         array(MinhashBands.map(b => col(b._1)): _*)).as(Seq("band", "bkey")))
@@ -368,7 +381,7 @@ object DedupQueries {
     bands.count() // both the hot-bucket agg and the anti-join probe side
     // read this frame in one job — populate before they race
     val hot = bands.groupBy("band", "bkey")
-      .agg(count("*").as("n_docs")).where(col("n_docs") > capN)
+      .agg(count("*").as("n_docs")).where(col("n_docs") > HotBucketCap)
     val ok = bands.join(broadcast(hot), Seq("band", "bkey"), "left_anti")
     val cand = ok.as("a").join(ok.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
@@ -429,7 +442,7 @@ object DedupQueries {
       .select(col("doc_a"), col("doc_b"), col("shared"),
         (col("shared").cast("double") /
           (col("na") + col("nb") - col("shared"))).as("jaccard"))
-      .where(col("jaccard") >= 0.3)
+      .where(col("jaccard") >= JaccardThreshold)
     // cache, not checkpoint: the LSH plan stays inspectable end-to-end
     // (the cached plan prints inside InMemoryRelation), and an executor
     // loss recomputes from lineage instead of failing. Cached blocks

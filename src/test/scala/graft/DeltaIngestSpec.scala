@@ -326,6 +326,52 @@ class DeltaIngestSpec extends AnyFunSuite {
     assert(finalRows(out) == finalBefore)
   }
 
+  test("probeNearDups equals the ingest path's band probe + verification, in <= 3 Spark jobs") {
+    val (out, _, _) = run
+    type Hit = (Long, Long, Double)
+    def hits(df: DataFrame): Seq[Hit] =
+      df.select("doc_id", "base_id", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    // the reference: stage 2a/2b's plan over the same docs
+    def reference(docs: DataFrame): (Seq[Hit], Long) = {
+      val bp = DeltaIngest.baseProbe(spark, docs, out)
+      (hits(DeltaIngest.verifiedJaccard(
+        bp.xCand.select(col("delta_id").as("doc_a"), col("base_id").as("doc_b")),
+        bp.dShingles, bp.bShingles, bp.dCnt, bp.bCnt)
+        .select(col("doc_a").as("doc_id"), col("doc_b").as("base_id"), col("jaccard"))),
+        bp.xCand.count())
+    }
+    val f0 = filler.head
+    val cases: Seq[(String, Seq[Doc], (Seq[Hit], Long) => Boolean)] = Seq(
+      ("hot bucket: 101 copies of one text", (0 until 101).map(k => Doc(9000L + k, e1.ws, "web")),
+        (h, _) => h.isEmpty),
+      ("a committed id matches itself", Seq(Doc(a1.id, a1.ws, "web")),
+        (h, _) => h.contains((a1.id, a1.id, 1.0))),
+      ("near-dup of a dropped member", Seq(Doc(9201, b1.ws.drop(1), "web")),
+        (h, _) => h.exists(_._2 == b1.id)),
+      ("near-dup of a clean_delta doc", Seq(Doc(9202, dNew.ws.dropRight(1), "web")),
+        (h, _) => h.exists(_._2 == dNew.id)),
+      ("fewer than 3 words", Seq(Doc(9301, Vector("x.1", "x.2"), "web")),
+        (h, c) => h.isEmpty && c == 0),
+      ("duplicate probe ids", Seq(Doc(9401, e1.ws, "web"), Doc(9401, e1.ws.drop(2), "web")),
+        (h, _) => h.exists(_._2 == e1.id)),
+      ("empty probe set", Seq.empty, (h, c) => h.isEmpty && c == 0),
+      ("no candidates", Seq(Doc(9501, words(61), "web")), (h, c) => h.isEmpty && c == 0),
+      // 9-word windows of one doc: 7 of its 28 shingles (Jaccard 0.25),
+      // so a window sharing its band minimum is a candidate that fails
+      ("band candidates below the threshold",
+        Seq(0, 10, 20).map(o => Doc(9600L + o, f0.ws.slice(o, o + 9), "web")),
+        (h, c) => h.isEmpty && c > 0))
+    cases.foreach { case (name, docs, expected) =>
+      val df = toDF(docs).localCheckpoint(true)
+      val (ref, nCand) = reference(df)
+      assert(expected(ref, nCand), s"$name: the case is not live: $ref ($nCand candidates)")
+      val (got, jobs) = TestSpark.jobsOf(hits(DeltaIngest.probeNearDups(spark, df, out)))
+      assert(got == ref, s"$name: probe $got, reference $ref")
+      assert(jobs <= 3, s"$name: $jobs Spark jobs")
+    }
+  }
+
   test("explainDocs audits every disposition off the persisted index, read-only") {
     val (out, _, _) = run
     import spark.implicits._

@@ -102,6 +102,17 @@ class SegmentLogSpec extends AnyFunSuite {
       Set((1L, "a", 1L)))
   }
 
+  test("readCommitted: building a non-empty read launches no Spark job, and seg stays long") {
+    val root = s"${TestSpark.tmpRoot("seglog_jobs")}/t"
+    writeSeg(root, 1, 1L -> "a")
+    writeSeg(root, 2, 2L -> "b")
+    val (df, jobs) = TestSpark.jobsOf(SegmentLog.readCommitted(spark, root, Set(1L, 2L), Schema))
+    assert(jobs === 0, "the declared schema spares the footer-inference job")
+    assert(df.schema === Schema.add("seg", LongType))
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet ===
+      Set((1L, "a", 1L), (2L, "b", 2L)))
+  }
+
   test("readCommitted: an empty committed set reads as schema plus seg: long") {
     val root = s"${TestSpark.tmpRoot("seglog_empty")}/t"
     writeSeg(root, 1, 1L -> "a")

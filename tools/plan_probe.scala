@@ -3,8 +3,8 @@
 // Builds DeltaIngest, IvfMaintenance and TextSearchIndex fixture dirs
 // under $PLAN_FIX_DIR (absent or empty; use the SAME path for both builds
 // so file paths match), then writes to $PLAN_OUT the explain("formatted")
-// of readFinal, readManifest, probeNearDups, assignments, knnQuery and
-// adcKnn (flat and sprobe) and TextSearchIndex.query, the served rows,
+// of readFinal, readManifest, assignments, knnQuery and adcKnn (flat and
+// sprobe) and TextSearchIndex.query, the served rows (probeNearDups's too),
 // and each dir's listing after an ingest and after a compaction (uuids
 // and time-stamped batch keys masked). Two builds' outputs diff clean
 // once plan_id, RDD ids and source line numbers are normalized.
@@ -55,7 +55,11 @@ DeltaIngest.ingestDelta(spark, docs(1000L to 1040L, id => if (id % 5 == 0) Some(
 DeltaIngest.ingestDelta(spark, docs(2000L to 2030L, id => if (id % 4 == 0) Some(id - 1990) else None), run)
 plan("readFinal", DeltaIngest.readFinal(spark, run))
 plan("readManifest", DeltaIngest.readManifest(spark, run))
-plan("probeNearDups", DeltaIngest.probeNearDups(spark, docs(3000L to 3010L, id => Some(id - 2990)), run))
+// probeNearDups answers from the driver (its plan is a LocalTableScan of
+// the hits), so its rows stand in for the plan
+pw.println("probeNearDups rows " + DeltaIngest.probeNearDups(spark,
+    docs(3000L to 3010L, id => Some(id - 2990)), run)
+  .collect().map(_.toString).sorted.mkString(","))
 pw.println("readFinal rows " + DeltaIngest.readFinal(spark, run).count())
 listing("delta after ingest", run)
 DeltaIngest.compact(spark, run)
