@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
+import scala.math.Ordering.Implicits._
 
 /** Incremental curation — the O(delta) production shape for a corpus
   * that grows daily, composed from the same oracle-checked plans the
@@ -39,12 +40,13 @@ import scala.jdk.CollectionConverters._
   * [[CompactAfterSegments]] committed segments).
   *
   * The ingest itself is a two-phase commit:
-  *   - COMPUTE+STAGE: a pure read phase (every shared frame
-  *     localCheckpoint'd) computes the full edit set and writes it to
-  *     `delta_staging/batch=<key>/`, sealed by a `_STAGED` marker.
-  *     Nothing the phase reads is mutated, so a crash here loses
-  *     nothing: the replay wipes the partial staging and recomputes
-  *     from identical inputs.
+  *   - COMPUTE+STAGE: a pure read phase computes the full edit set on
+  *     the driver — the delta collected once, the index read in
+  *     candidate-bounded slices from ONE committed-segment snapshot —
+  *     and writes it to `delta_staging/batch=<key>/` (one local write
+  *     per table), sealed by a `_STAGED` marker. Nothing the phase
+  *     reads is mutated, so a crash here loses nothing: the replay
+  *     wipes the partial staging and recomputes from identical inputs.
   *   - APPLY: staged tables move into their `seg=<n>` positions
   *     (idempotent: skip-if-sealed, else replace) — the final layout's
   *     edits included, as a `final_log/seg=<n>` increment over the
@@ -80,12 +82,13 @@ import scala.jdk.CollectionConverters._
   * conservative: it only ever drops MORE train docs than from-scratch,
   * never leaks contamination).
   *
-  * Scale shape: every per-delta stage is keyed on the delta or on
-  * candidate-bounded probes; index scans are column-pruned id/hash
-  * passes, never the corpus text; folds that could be index-sized
-  * (keepers, train_meta) are applied AFTER candidate-bounding — the
-  * key-filter commutes with the per-key fold — so no per-ingest
-  * shuffle scales with the corpus.
+  * Scale shape: the delta is a micro-batch by contract ([[streamInto]]'s
+  * `maxFilesPerTrigger`) and is held on the driver; every index read is
+  * a key-bounded slice (the delta's buckets, grams and matched ids) —
+  * column-pruned id/hash scans, never the corpus text; folds that could
+  * be index-sized (members, keepers, train_meta) run AFTER the key
+  * bound — the key filter commutes with the per-key fold — so no
+  * per-ingest step scales with the corpus.
   */
 object DeltaIngest {
 
@@ -230,7 +233,7 @@ object DeltaIngest {
     readCommitted(s, s"${idxDir(outDir)}/$table",
       allowedSegs.getOrElse(committedSegs(s, outDir)), schema)
 
-  private val BandsSchema = StructType(Seq(
+  private[graft] val BandsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("band", IntegerType),
     StructField("bkey", StringType)))
   private val MembersSchema = StructType(Seq(
@@ -254,11 +257,13 @@ object DeltaIngest {
     StructField("source", StringType), StructField("n_chars", LongType),
     StructField("shard", IntegerType)))
   private val ManifestLogSchema = ManifestSchema.add("dead", BooleanType)
-  private val FinalLogSchema = StructType(Seq(
+  // the final layout (`split`/`source` are the base dir's partition
+  // columns) and its edit log
+  private val FinalSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("lang", StringType), StructField("n_chars", LongType),
-    StructField("split", StringType), StructField("source", StringType),
-    StructField("dead", BooleanType)))
+    StructField("split", StringType), StructField("source", StringType)))
+  private val FinalLogSchema = FinalSchema.add("dead", BooleanType)
   // fold payloads in each table's column order ([[SegmentLog.foldLatest]]
   // keys the struct on them, so the order fixes the tie-breaks)
   private val MemberFields = Seq("cluster_id")
@@ -287,7 +292,7 @@ object DeltaIngest {
     foldLatest(manifestAll(s, outDir, committedSegs(s, outDir)), Seq("doc_id"),
       ManifestFields)
 
-  private val FinalCols = Seq("doc_id", "text", "lang", "n_chars", "split", "source")
+  private val FinalCols = FinalSchema.fieldNames.toSeq
 
   /** The curated FINAL layout (text included) as of the last committed
     * ingest — `final/` (the run's output, IMMUTABLE once written) plus
@@ -323,12 +328,19 @@ object DeltaIngest {
     * atomically WITH the swap), and this reader ignores log segments at
     * or below it. Segment numbers are never reused (the replay map
     * pins every batch's segment forever), so a stale-looking epoch can
-    * never mask a NEW segment. */
-  def readFinal(s: SparkSession, outDir: String): DataFrame = {
-    val base = s.read.parquet(s"$outDir/final").select(FinalCols.map(col): _*)
+    * never mask a NEW segment.
+    *
+    * The base read passes its declared schema (partition columns
+    * included), so building the frame runs no schema-inference job. */
+  def readFinal(s: SparkSession, outDir: String): DataFrame =
+    finalAt(s, outDir, committedSegs(s, outDir))
+
+  /** [[readFinal]] as of the committed-segment snapshot `allowed`. */
+  private def finalAt(s: SparkSession, outDir: String, allowed: Set[Long]): DataFrame = {
+    val base = s.read.schema(FinalSchema).parquet(s"$outDir/final").select(FinalCols.map(col): _*)
     val epoch = foldedEpoch(s, outDir)
-    committedLog(s, s"$outDir/final_log",
-        committedSegs(s, outDir).filter(_ > epoch), FinalLogSchema).fold(base) { log =>
+    committedLog(s, s"$outDir/final_log", allowed.filter(_ > epoch),
+        FinalLogSchema).fold(base) { log =>
       // a dead row's id may also be log-APPENDED-then-removed (not in
       // base) — the anti-join is a no-op for those and the fold drops
       // their live rows, so dead-only stays exact for every history
@@ -421,62 +433,32 @@ object DeltaIngest {
     * ([[DedupQueries.JaccardThreshold]]), found through the same band
     * index, combined-occupancy hot-bucket cap
     * ([[DedupQueries.HotBucketCap]]) and candidates-only verification
-    * the ingest path runs. Matches are against the GATED corpus the
-    * ingest path itself matches — including cluster members later
-    * dropped from the final layout (that is the point: a probe that
-    * collides with a dropped member IS a near-dup), and a probe reusing
-    * a committed doc_id matches itself at jaccard 1. Nothing is written.
+    * the ingest path runs — both call [[bandMatch]]. Matches are against
+    * the GATED corpus the ingest path itself matches — including cluster
+    * members later dropped from the final layout (that is the point: a
+    * probe that collides with a dropped member IS a near-dup), and a
+    * probe reusing a committed doc_id matches itself at jaccard 1.
+    * Nothing is written.
     *
     * The input is query-sized by contract: it is collected to the
     * driver, and the probe runs there in exactly 3 Spark jobs — collect
-    * the probe docs, one column-pruned scan of the committed band rows
-    * in the probe's buckets, one scan of the candidates' texts. Both
-    * scans read ONE committed-segment snapshot, so a concurrent ingest
-    * can never show a batch's bands without its text. Signatures come
-    * from [[DedupQueries.shingleSet]]/[[DedupQueries.minhashKeys]],
-    * the columns the ingest path signs with, evaluated over a local
-    * relation (no job). The result equals the ingest path's
-    * [[baseProbe]] + [[verifiedJaccard]] on the same input (the spec
-    * holds them equal), duplicate input ids included: shared shingles
-    * count as the join does, Σ count_a(s)·count_b(s). Output: a local
-    * (doc_id, base_id, jaccard) frame. */
+    * the probe docs, then [[bandMatch]]'s two snapshot-pinned scans.
+    * The spec holds the result equal to the band-probe + verification
+    * Spark plans on the same input, duplicate input ids included.
+    * Output: a local (doc_id, base_id, jaccard) frame. */
   def probeNearDups(s: SparkSession, docs: DataFrame, outDir: String): DataFrame = {
     require(indexed(s, outDir), s"buildIndex has not completed for $outDir")
-    val probe = signaturesOf(s, docs.select(col("doc_id").cast(LongType), col("text")))
-    val allowed = committedSegs(s, outDir)
-    // probe band rows by bucket, one entry per row (duplicate ids count)
-    val probeBuckets = probe.flatMap(p =>
-      p.bands.zipWithIndex.map { case (k, b) => (b, k) -> p.id }).groupMap(_._1)(_._2)
-    val committed = readLog(s, outDir, "bands", BandsSchema, Some(allowed))
-      .where(col("bkey").isin(probeBuckets.keys.map(_._2).toSeq.distinct: _*))
-      .select("band", "bkey", "doc_id").collect()
-      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).groupMap(_._1)(_._2)
-    val cand = probeBuckets.toSeq.flatMap { case (bucket, ids) =>
-      val base = committed.getOrElse(bucket, Array.empty[Long])
-      if (ids.size + base.length > DedupQueries.HotBucketCap) Nil
-      else for (id <- ids; b <- base) yield id -> b
-    }.distinct
-    val candIds = cand.map(_._2).distinct
-    val texts = gatedCorpus(s, outDir, allowed).select("doc_id", "text")
-      .where(col("doc_id").isin(candIds: _*))
-    val pBag = shingleBags(probe)
-    val bBag = shingleBags(signaturesOf(s, texts))
-    val hits = cand.flatMap { case (a, b) =>
-      val (sa, sb) = (pBag.getOrElse(a, Map.empty[String, Long]),
-        bBag.getOrElse(b, Map.empty[String, Long]))
-      val shared = sa.iterator.map { case (sh, c) => c * sb.getOrElse(sh, 0L) }.sum
-      // the join's arithmetic: a zero denominator is null there, no hit
-      val den = sa.values.sum + sb.values.sum - shared
-      val jaccard = shared.toDouble / den
-      Option.when(den > 0 && jaccard >= DedupQueries.JaccardThreshold)(Row(a, b, jaccard))
-    }
-    s.createDataFrame(hits.asJava, ProbeHitSchema)
+    val in = docs.select(col("doc_id").cast(LongType), col("text"))
+    val hits = bandMatch(s, outDir, committedSegs(s, outDir),
+      signaturesOf(s, in.collect().toSeq, in.schema)).cross
+    s.createDataFrame(hits.map { case (a, b, j) => Row(a, b, j) }.asJava, ProbeHitSchema)
   }
 
   /** The gated corpus every match reads text from, as of the
     * committed-segment snapshot `allowed`: the base run's stage-1 docs
     * plus each committed delta's clean segment, both immutable. */
-  private def gatedCorpus(s: SparkSession, outDir: String, allowed: Set[Long]): DataFrame =
+  private[graft] def gatedCorpus(s: SparkSession, outDir: String,
+      allowed: Set[Long]): DataFrame =
     s.read.schema(CleanSchema).parquet(s"$outDir/stage1_clean/documents.parquet")
       .unionAll(readLog(s, outDir, "clean_delta", CleanSchema, Some(allowed)).drop("seg"))
 
@@ -487,26 +469,80 @@ object DeltaIngest {
   /** One doc row's signatures, as the ingest path computes them. */
   private final case class Signed(id: Long, shingles: Seq[String], bands: Seq[String])
 
-  /** Collects `(doc_id: long, text)` (one job unless `docs` is local) and
-    * signs every row on the driver: the shared signature columns over
-    * a local relation, which the optimizer evaluates in place. */
-  private def signaturesOf(s: SparkSession, docs: DataFrame): Seq[Signed] = {
+  /** A verified near-duplicate pair: (doc_a, doc_b, jaccard). */
+  private type Hit = (Long, Long, Double)
+
+  private def seqOf[A](r: Row, i: Int): Seq[A] = Option(r.getSeq[A](i)).getOrElse(Nil)
+
+  /** Signs collected `(doc_id: long, text, …)` rows on the driver: the
+    * shared signature columns over a local relation, which the
+    * optimizer evaluates in place (no job). */
+  private def signaturesOf(s: SparkSession, rows: Seq[Row], schema: StructType): Seq[Signed] = {
     graft.functions.expr.TextExpressions.register(s)
-    s.createDataFrame(docs.collect().toSeq.asJava, docs.schema)
+    s.createDataFrame(rows.asJava, schema)
       .select(col("doc_id"), DedupQueries.shingleSet(col("text")),
         DedupQueries.minhashKeys(col("text")))
-      .collect().toSeq.map(r => Signed(r.getLong(0),
-        Option(r.getSeq[String](1)).getOrElse(Nil),
-        Option(r.getSeq[String](2)).getOrElse(Nil)))
+      .collect().toSeq.map(r => Signed(r.getLong(0), seqOf(r, 1), seqOf(r, 2)))
   }
 
   /** Per doc id, each shingle's count over that id's rows — the
-    * multiset the [[verifiedJaccard]] join counts (a row's shingles are
+    * multiset the Spark verification join counts (a row's shingles are
     * distinct, so only a duplicate id counts one above 1); its total is
     * the join's per-id shingle count. */
   private def shingleBags(signed: Seq[Signed]): Map[Long, Map[String, Long]] =
     signed.groupMap(_.id)(_.shingles).view
       .mapValues(_.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)).toMap
+
+  /** What [[bandMatch]] found: verified probe-vs-committed hits, verified
+    * pairs a < b within the probe, and the candidates' gated-corpus rows
+    * (doc_id, text, n_chars). */
+  private final case class BandMatch(cross: Seq[Hit], within: Seq[Hit], candRows: Array[Row])
+
+  /** The band match [[probeNearDups]] and [[computeAndStage]] share, run
+    * on the driver against ONE committed-segment snapshot `allowed` (a
+    * concurrent ingest can never show a batch's bands without its text):
+    *   - one column-pruned scan of the committed band rows in the probe
+    *     rows' buckets;
+    *   - the hot-bucket cap over the COMBINED probe + committed
+    *     occupancy, as lshVerifiedPairs caps: a bucket holding more than
+    *     [[DedupQueries.HotBucketCap]] rows pairs nothing;
+    *   - one scan of the candidates' gated-corpus rows;
+    *   - exact shingle-Jaccard >= [[DedupQueries.JaccardThreshold]] on
+    *     the candidate pairs only. Shared shingles count as the join
+    *     does, Σ count_a(s)·count_b(s), so duplicate ids weigh as rows. */
+  private def bandMatch(s: SparkSession, outDir: String, allowed: Set[Long],
+      probe: Seq[Signed]): BandMatch = {
+    // probe band rows by bucket, one entry per row (duplicate ids count)
+    val probeBuckets = probe.flatMap(p =>
+      p.bands.zipWithIndex.map { case (k, b) => (b, k) -> p.id }).groupMap(_._1)(_._2)
+    val committed = readLog(s, outDir, "bands", BandsSchema, Some(allowed))
+      .where(col("bkey").isin(probeBuckets.keys.map(_._2).toSeq.distinct: _*))
+      .select("band", "bkey", "doc_id").collect()
+      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).groupMap(_._1)(_._2)
+    val live = probeBuckets.toSeq.flatMap { case (bucket, ids) =>
+      val base = committed.getOrElse(bucket, Array.empty[Long])
+      Option.when(ids.size + base.length <= DedupQueries.HotBucketCap)(ids -> base)
+    }
+    val cand = live.flatMap { case (ids, base) => for (a <- ids; b <- base) yield a -> b }.distinct
+    val pairs = live.flatMap { case (ids, _) =>
+      for (a <- ids; b <- ids if a < b) yield a -> b }.distinct
+    val candDocs = gatedCorpus(s, outDir, allowed).select("doc_id", "text", "n_chars")
+      .where(col("doc_id").isin(cand.map(_._2).distinct: _*))
+    val candRows = candDocs.collect()
+    val pBag = shingleBags(probe)
+    val bBag = shingleBags(signaturesOf(s, candRows.toSeq, candDocs.schema))
+    def verified(pairs: Seq[(Long, Long)], bagB: Map[Long, Map[String, Long]]): Seq[Hit] =
+      pairs.flatMap { case (a, b) =>
+        val (sa, sb) = (pBag.getOrElse(a, Map.empty[String, Long]),
+          bagB.getOrElse(b, Map.empty[String, Long]))
+        val shared = sa.iterator.map { case (sh, c) => c * sb.getOrElse(sh, 0L) }.sum
+        // the join's arithmetic: a zero denominator is null there, no hit
+        val den = sa.values.sum + sb.values.sum - shared
+        val jaccard = shared.toDouble / den
+        Option.when(den > 0 && jaccard >= DedupQueries.JaccardThreshold)((a, b, jaccard))
+      }
+    BandMatch(verified(cand, bBag), verified(pairs, pBag), candRows)
+  }
 
   /** Per-doc curation audit off the PERSISTED index — "why is doc X in
     * (or out of) the corpus", answered without recomputing anything
@@ -576,81 +612,6 @@ object DeltaIngest {
           col("keeper_id")).as("keeper_id"))
   }
 
-  /** The band-probe pipeline of [[computeAndStage]]'s stage 2a/2b,
-    * and the reference [[probeNearDups]] must equal: the spec holds the
-    * driver-side probe to this plan + [[verifiedJaccard]] case by case.
-    * Both sign with the same [[DedupQueries]] columns and share the
-    * hot-bucket cap and the Jaccard threshold, so query-time screening
-    * and ingest-time dedup cannot drift:
-    *   - the input docs' shingles, counts, and LSH band rows;
-    *   - `dProbe`: band rows after the hot-bucket cap, mirroring
-    *     lshVerifiedPairs (HotBucketCap) over the COMBINED input+base
-    *     occupancy — counted candidate-bounded (the base side is
-    *     semi-joined to the input's bucket keys first). The UNFILTERED
-    *     `dBands` still feeds occupancy and the ingest's index segment;
-    *   - `xCand`: (delta_id, base_id) banded candidates vs the index;
-    *   - `baseCandDocs`/`bShingles`/`bCnt`: base text read ONLY for the
-    *     candidate ids — from the base run's stage-1 table plus every
-    *     committed delta's clean segment (immutable forever). */
-  private[graft] final case class BaseProbe(
-      dShingles: DataFrame, dCnt: DataFrame, dBands: DataFrame,
-      dProbe: DataFrame, xCand: DataFrame, baseCandDocs: DataFrame,
-      bShingles: DataFrame, bCnt: DataFrame)
-
-  private[graft] def baseProbe(s: SparkSession, docs: DataFrame, outDir: String): BaseProbe = {
-    val dShingles = DedupQueries.shinglesOf(s, docs).localCheckpoint(true)
-    val dCnt = dShingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val dBands = DedupQueries.minhashSigOf(s, docs)
-      .select(col("doc_id"), posexplode(
-        array(DedupQueries.MinhashBands.map(b => col(b._1)): _*))
-        .as(Seq("band", "bkey")))
-      .localCheckpoint(true)
-    val allowed = committedSegs(s, outDir)
-    val baseBandsIdx = readLog(s, outDir, "bands", BandsSchema, Some(allowed))
-      .select("doc_id", "band", "bkey")
-    val deltaBuckets = dBands.select("band", "bkey").distinct()
-    val baseOcc = baseBandsIdx.join(deltaBuckets, Seq("band", "bkey"), "left_semi")
-      .groupBy("band", "bkey").agg(count(lit(1)).as("n_base"))
-    val hotBuckets = dBands.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("n_delta"))
-      .join(baseOcc, Seq("band", "bkey"), "left")
-      .where(col("n_delta") + coalesce(col("n_base"), lit(0L)) > DedupQueries.HotBucketCap)
-      .select("band", "bkey")
-    val dProbe = dBands.join(broadcast(hotBuckets), Seq("band", "bkey"), "left_anti")
-      .localCheckpoint(true)
-    val xCand = dProbe
-      .join(baseBandsIdx
-          .select(col("band"), col("bkey"), col("doc_id").as("base_id")),
-        Seq("band", "bkey"))
-      .select(col("doc_id").as("delta_id"), col("base_id")).distinct()
-      .localCheckpoint(true)
-    val baseCandDocs = gatedCorpus(s, outDir, allowed)
-      .join(xCand.select(col("base_id").as("doc_id")).distinct(), Seq("doc_id"),
-        "left_semi")
-      .localCheckpoint(true)
-    val bShingles = DedupQueries.shinglesOf(s, baseCandDocs).localCheckpoint(true)
-    val bCnt = bShingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    BaseProbe(dShingles, dCnt, dBands, dProbe, xCand, baseCandDocs,
-      bShingles, bCnt)
-  }
-
-  /** Exact shingle-Jaccard >= JaccardThreshold on candidates only —
-    * the lshVerifiedPairs predicate, verbatim; the verification rule of
-    * the ingest elections, which probeNearDups computes on the driver.
-    * Output: (doc_a, doc_b, jaccard). */
-  private[graft] def verifiedJaccard(cand: DataFrame, shA: DataFrame, shB: DataFrame,
-      cntA: DataFrame, cntB: DataFrame): DataFrame =
-    cand
-      .join(shA.select(col("doc_id").as("doc_a"), col("s")), "doc_a")
-      .join(shB.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared"))
-      .join(cntA.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(cntB.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
-          .as("jaccard"))
-      .where(col("jaccard") >= DedupQueries.JaccardThreshold)
-
   // ---------------------------------------------------------------
   // streaming composition
   // ---------------------------------------------------------------
@@ -664,7 +625,9 @@ object DeltaIngest {
     * mid-ingest resumes from the sealed staging (same decisions,
     * idempotent apply) or recomputes from clean inputs if staging never
     * sealed — either way the layout converges to the committed state,
-    * with no duplicate window. */
+    * with no duplicate window. Each trigger's batch is collected to the
+    * driver once ([[ingestDelta]]), so `maxFilesPerTrigger` bounds the
+    * driver's share; the index is read in candidate-bounded slices. */
   def streamInto(
       spark: SparkSession,
       inDir: String,
@@ -711,7 +674,16 @@ object DeltaIngest {
   /** Ingest one delta batch (canonical documents schema: doc_id, text,
     * lang, source, n_chars) into a completed + indexed run at outDir.
     * Returns the edit report; final layout, manifest log, and index
-    * are updated through the write-ahead protocol described above. */
+    * are updated through the write-ahead protocol described above.
+    *
+    * The delta is a micro-batch by contract: it is collected to the
+    * driver ONCE and the edit set is computed there. The index is read
+    * in candidate-bounded slices (the delta's band buckets, the
+    * candidates' texts, the matched docs' members and keepers, the
+    * delta's holdout grams, the train postings of new holdout grams,
+    * the touched train_meta rows, the live ids of removal candidates),
+    * all from ONE committed-segment snapshot; each staged table is one
+    * write. */
   def ingestDelta(s: SparkSession, delta: DataFrame, outDir: String): DeltaReport = {
     require(indexed(s, outDir), s"buildIndex has not completed for $outDir")
     // direct calls have no caller-side replay identity (a retry is a
@@ -735,8 +707,8 @@ object DeltaIngest {
       s"batch $key already committed") // single marker OR consolidated map
     if (f.exists(stagedMarker)) {
       // crash happened mid-APPLY: re-apply the sealed decisions
-      val report = readStagedReport(s, outDir, key).get
-      applyStaged(s, outDir, key)
+      val (report, seg) = readStaged(s, outDir, key)
+      applyStaged(s, outDir, key, seg)
       return report
     }
     // finish any OTHER batch that crashed mid-apply (its decisions are
@@ -754,7 +726,7 @@ object DeltaIngest {
       compact(s, outDir)
     val seg = nextSeg(s, outDir)
     val report = computeAndStage(s, delta, outDir, key, seg)
-    applyStaged(s, outDir, key)
+    applyStaged(s, outDir, key, seg)
     report
   }
 
@@ -767,7 +739,7 @@ object DeltaIngest {
       val key = st.getPath.getName.stripPrefix("batch=")
       if (committedSegOf(s, outDir, key).isEmpty &&
           f.exists(new Path(st.getPath, "_STAGED")))
-        applyStaged(s, outDir, key)
+        applyStaged(s, outDir, key, readStaged(s, outDir, key)._2)
     }
   }
 
@@ -791,23 +763,21 @@ object DeltaIngest {
     }
   }
 
-  private def readStagedReport(
-      s: SparkSession, outDir: String, key: String): Option[DeltaReport] = {
-    val p = s"${stagingDir(outDir, key)}/report.parquet"
-    if (!CurationRun.exists(s, s"$p/_SUCCESS")) None
-    else {
-      val r = s.read.parquet(p).collect()(0)
-      def g(n: String) = r.getAs[Long](n)
-      Some(DeltaReport(g("nDelta"), g("nQualityFail"), g("nDupDropped"),
-        g("nReplacedBase"), g("nTrain"), g("nVal"), g("nTest"),
-        g("nContaminatedDelta"), g("nContaminatedBase"), g("nAppended"),
-        g("nRemoved")))
-    }
-  }
+  /** A sealed staging's report row: the batch's [[DeltaReport]] and
+    * segment number, in [[DeltaReport]]'s field order. */
+  private val ReportSchema = StructType(
+    Seq("nDelta", "nQualityFail", "nDupDropped", "nReplacedBase", "nTrain", "nVal",
+      "nTest", "nContaminatedDelta", "nContaminatedBase", "nAppended", "nRemoved", "seg")
+      .map(StructField(_, LongType)))
 
-  private def stagedSeg(s: SparkSession, outDir: String, key: String): Long =
-    s.read.parquet(s"${stagingDir(outDir, key)}/report.parquet")
-      .collect()(0).getAs[Long]("seg")
+  /** The sealed report of a staged batch (crash replay only: a batch
+    * that stages and applies in one call already holds both). */
+  private def readStaged(s: SparkSession, outDir: String, key: String): (DeltaReport, Long) = {
+    val r = s.read.schema(ReportSchema).parquet(s"${stagingDir(outDir, key)}/report.parquet")
+      .collect()(0)
+    def g(i: Int) = r.getLong(i)
+    (DeltaReport(g(0), g(1), g(2), g(3), g(4), g(5), g(6), g(7), g(8), g(9), g(10)), g(11))
+  }
 
   /** The segment number a batch key committed (None if the batch never
     * committed) — the composition hook: a committed batch's manifest
@@ -850,158 +820,108 @@ object DeltaIngest {
     f.delete(stagingP, true) // partial previous attempt
     f.mkdirs(stagingP)
     f.create(new Path(s"$staging/_INTENT"), true).close()
-    def stage(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").parquet(s"$staging/$name")
+    // every staged table is ONE write of a coalesced local frame
+    def stage(rows: Iterable[Row], schema: StructType, name: String): Unit =
+      s.createDataFrame(rows.toSeq.asJava, schema).coalesce(1)
+        .write.mode("overwrite").parquet(s"$staging/$name")
 
-    // ---- stage 1: quality gate (row-local, same rules as the run) ----
-    // Since the final_log conversion, everything this phase reads is
-    // IMMUTABLE for the batch's whole lifetime (committed seg dirs, the
-    // base final/ and manifest; the apply phase only ADDS seg dirs that
-    // no pinned read lists), so the localCheckpoints below are no
-    // longer correctness guards — they remain on the multi-consumer
-    // frames purely as recompute economy: each feeds 2-5 downstream
-    // joins, and materializing once beats re-running the LSH prefix
-    // per consumer. Single-consumer frames stay lazy.
-    val gated = CurationRun.qualityGate(delta, s).localCheckpoint(true)
+    // ---- stage 1: collect the delta ONCE; quality gate (same rules as
+    // the run), signatures, split bucket and 8-gram hashes over a local
+    // relation, which the optimizer evaluates in place (no job) ----
+    val rows = delta.collect()
+    val gated = CurationRun.qualityGate(s.createDataFrame(rows.toSeq.asJava, delta.schema), s)
+      .select(col("doc_id").cast(LongType), col("text"), col("lang"), col("source"),
+        col("n_chars").cast(LongType), DedupQueries.shingleSet(col("text")),
+        DedupQueries.minhashKeys(col("text")), DedupQueries.splitBucket,
+        DedupQueries.gramHashes(8))
+      .collect().toSeq
+    def id(r: Row) = r.getLong(0)
+    def len(r: Row) = r.getLong(4)
+    def grams(r: Row) = seqOf[Long](r, 8)
+    def split(r: Row) = r.getInt(7) match {
+      case b if b < 80 => "train"
+      case b if b < 90 => "val"
+      case _ => "test"
+    }
+    // Everything this phase reads is IMMUTABLE for the batch's lifetime
+    // (committed seg dirs, the base final/ and manifest; the apply phase
+    // only ADDS seg dirs no snapshot lists). Every read below is pinned
+    // to ONE committed-segment snapshot and bounded by the delta's keys.
+    val allowed = committedSegs(s, outDir)
+    def bounded(df: => DataFrame, keyCol: String, keys: Iterable[Long]): Array[Row] =
+      if (keys.isEmpty) Array.empty
+      else df.where(col(keyCol).isin(keys.toSeq.distinct: _*)).collect()
+    def slice(table: String, schema: StructType, keyCol: String, keys: Iterable[Long]) =
+      bounded(readLog(s, outDir, table, schema, Some(allowed)), keyCol, keys)
 
-    // ---- stage 2a: within-delta near-dedup (same LSH + CC plans) ----
-    // the band probe + hot-cap + candidate-bounded base inputs; the
-    // spec holds probeNearDups's driver-side screen equal to this plan
-    val bp = baseProbe(s, gated, outDir)
-    val dShingles = bp.dShingles
-    val dCnt = bp.dCnt
-    val dBands = bp.dBands
-    val dProbe = bp.dProbe
-    val dCand = dProbe.as("a").join(dProbe.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val dPairs = verifiedJaccard(dCand, dShingles, dShingles, dCnt, dCnt)
-      .select("doc_a", "doc_b")
-    val dEdges = dPairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(dPairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // delta cluster id per delta doc; singletons = own id
-    val dCC = DedupQueries.pointerJumpCC(
-        DedupQueries.localUnionFindEdges(dEdges).localCheckpoint(true))
-      .select("doc_id", "cluster_id")
-    val dClusters = gated.select("doc_id", "n_chars")
-      .join(dCC, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_chars"),
-        coalesce(col("cluster_id"), col("doc_id")).as("dcid"))
-      .localCheckpoint(true)
-    val dBest = dClusters.groupBy("dcid")
-      .agg(max(struct(col("n_chars"), (-col("doc_id")).as("nd"))).as("b"))
-      .select(col("dcid"), (-col("b.nd")).as("d_best_id"),
-        col("b.n_chars").as("d_best_len"))
-
-    // ---- stage 2b: delta-vs-base matching (candidate-bounded) ----
-    val xCand = bp.xCand
-    val baseCandDocs = bp.baseCandDocs
-    val xPairs = verifiedJaccard(
-      xCand.select(col("delta_id").as("doc_a"), col("base_id").as("doc_b")),
-      dShingles, bp.bShingles, dCnt, bp.bCnt)
-      .select(col("doc_a").as("delta_id"), col("doc_b").as("base_id"))
+    // ---- stage 2a/2b: within-delta pairs and delta-vs-base matches ----
+    val bm = bandMatch(s, outDir, allowed,
+      gated.map(r => Signed(id(r), seqOf(r, 5), seqOf(r, 6))))
+    // union-find over the within-delta pairs, labels = component min
+    // (pointerJumpCC's labels); singletons keep their own id
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = parent.get(x).fold(x)(find)
+    bm.within.foreach { case (a, b, _) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    // per delta cluster its best row: max(n_chars, ties to smaller id)
+    val dBest = gated.groupBy(r => find(id(r))).view
+      .mapValues(_.maxBy(r => (len(r), -id(r)))).toMap
 
     // ---- stage 2c: merged-cluster election ----
-    // per delta cluster: the distinct base KEEPERS its members match.
-    // A matched base doc resolves cluster through the members log and
-    // keeper through the keepers log — both folded AFTER candidate
-    // bounding (fold commutes with key predicates), so neither probe
-    // shuffles the index. Docs absent from members are singletons →
-    // their own keeper, length from the candidate read.
-    val membersCand = foldLatest(
-      readLog(s, outDir, "members", MembersSchema)
-        .join(xCand.select(col("base_id").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_semi"),
-      Seq("doc_id"), MemberFields).localCheckpoint(true)
-    val keepersCand = foldLatest(
-      readLog(s, outDir, "keepers", KeepersSchema)
-        .join(membersCand.select("cluster_id").distinct(),
-          Seq("cluster_id"), "left_semi"),
-      Seq("cluster_id"), KeeperFields)
-    val matchedKeepers = xPairs
-      .join(dClusters.select(col("doc_id").as("delta_id"), col("dcid")), "delta_id")
-      .join(membersCand.select(col("doc_id").as("base_id"), col("cluster_id")),
-        Seq("base_id"), "left")
-      .join(keepersCand, Seq("cluster_id"), "left")
-      .join(baseCandDocs.select(col("doc_id").as("base_id"),
-        col("n_chars").as("self_len")), "base_id")
-      .select(col("dcid"), col("cluster_id").as("k_cluster"),
-        coalesce(col("keeper_id"), col("base_id")).as("k_id"),
-        coalesce(col("keeper_len"), col("self_len")).as("k_len"))
-      .distinct()
-      .localCheckpoint(true)
+    // per delta cluster: the distinct base KEEPERS its members match. A
+    // matched base doc resolves cluster through the members log and
+    // keeper through the keepers log, both bounded to the match before
+    // the fold. Docs absent from members are singletons → their own
+    // keeper, length from the candidate read.
+    val memberOf = latest(slice("members", MembersSchema, "doc_id", bm.cross.map(_._2)))
+      .view.mapValues(_.getLong(1)).toMap
+    val keeperOf = latest(slice("keepers", KeepersSchema, "cluster_id", memberOf.values))
+      .view.mapValues(r => (r.getLong(1), r.getLong(2))).toMap
+    val candLens = bm.candRows.groupMap(_.getLong(0))(_.getLong(2))
+    // (dcid, k_cluster, k_id, k_len)
+    val matched = bm.cross.flatMap { case (d, b, _) =>
+      val k = memberOf.get(b).flatMap(keeperOf.get)
+      candLens.getOrElse(b, Array.empty[Long]).map(self =>
+        (find(d), memberOf.get(b), k.fold(b)(_._1), k.fold(self)(_._2)))
+    }.distinct
     // election among {matched base keepers} ∪ {delta best}: winner =
     // max(n_chars, ties to smaller id) — the keep_best rule. From-
     // scratch equivalence: base keepers are the maxima of their
     // clusters and the delta best is the max of its cluster, so the
     // max over keepers IS the max over the merged membership.
-    val baseBestPerCluster = matchedKeepers.groupBy("dcid")
-      .agg(max(struct(col("k_len"), (-col("k_id")).as("nd"))).as("b"))
-      .select(col("dcid"), (-col("b.nd")).as("b_best_id"),
-        col("b.k_len").as("b_best_len"))
-    val election = dBest.join(baseBestPerCluster, Seq("dcid"), "left")
-      .select(col("dcid"), col("d_best_id"), col("d_best_len"),
-        col("b_best_id"), col("b_best_len"),
-        (col("b_best_id").isNull ||
-          struct(col("d_best_len"), (-col("d_best_id")).as("nd")) >
-            struct(col("b_best_len"), (-col("b_best_id")).as("nd")))
-          .as("delta_wins"))
-      .localCheckpoint(true)
+    val baseBest = matched.groupMapReduce(_._1)(m => (m._4, -m._3))(Ordering[(Long, Long)].max)
+    val wins = dBest.map { case (c, r) => c -> baseBest.get(c).forall((len(r), -id(r)) > _) }
     // kept delta docs: the cluster best, when the delta wins
-    val keptIds = election.where(col("delta_wins"))
-      .select(col("d_best_id").as("doc_id"))
-    // replaced base keepers: every matched keeper of a winning cluster
-    val replacedBase = matchedKeepers
-      .join(election.where(col("delta_wins")).select("dcid"), "dcid")
-      .select(col("k_id").as("doc_id"), col("k_cluster"), col("dcid"))
-      .distinct()
-      .localCheckpoint(true)
-    // lazy since the final_log conversion: both inputs are checkpointed
-    // and nothing it reads can mutate mid-batch, so its two consumers
-    // (withSplit, the nKept count) just re-run one cheap semi-join
-    val kept = gated.join(keptIds, Seq("doc_id"), "left_semi")
+    val keptIds = dBest.collect { case (c, r) if wins(c) => id(r) }.toSet
+    val kept = gated.filter(r => keptIds(id(r)))
+    // replaced base keepers: every matched keeper of a winning cluster,
+    // as (doc_id, k_cluster, dcid)
+    val replaced = matched.collect { case (c, cl, k, _) if wins(c) => (k, cl, c) }.distinct
 
     // ---- stage 3: split + two-sided decontamination ----
-    val withSplit = kept
-      .withColumn("bucket", DedupQueries.splitBucket)
-      .withColumn("split",
-        when(col("bucket") < 80, "train").when(col("bucket") < 90, "val")
-          .otherwise("test"))
-      .withColumn("gs", DedupQueries.gramHashes(8))
-      .localCheckpoint(true)
-    val holdIdx = readLog(s, outDir, "holdout_grams", HoldSchema).select("gh")
-    val deltaHold = withSplit.where(col("bucket") >= 80)
-      .select(explode(col("gs")).as("gh")).distinct()
-    val newHold = deltaHold.join(holdIdx, Seq("gh"), "left_anti")
-      .localCheckpoint(true)
-    // delta train vs the UNION holdout (old index + new grams)
-    val unionHold = holdIdx.unionAll(newHold)
-    val dTrainGrams = withSplit.where(col("split") === "train")
-      .select(col("doc_id"), size(col("gs")).as("n_grams"),
-        explode(col("gs")).as("gh"))
-    val dContam = dTrainGrams.join(unionHold, "gh")
-      .groupBy("doc_id", "n_grams").agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") * 5 >= col("n_grams"))
-      .select("doc_id").localCheckpoint(true)
+    val (train, hold) = kept.partition(split(_) == "train")
+    // the holdout index bounded to the delta's grams — a multiset: the
+    // join counts each of its rows
+    val holdIdx = slice("holdout_grams", HoldSchema, "gh", kept.flatMap(grams))
+      .groupMapReduce(_.getLong(0))(_ => 1L)(_ + _)
+    val newHold = hold.flatMap(grams).distinct.filterNot(holdIdx.contains)
+    val isNew = newHold.toSet
+    // a gram's rows in the UNION holdout (old index + new grams)
+    def unionHold(g: Long) = holdIdx.getOrElse(g, 0L) + (if (isNew(g)) 1L else 0L)
+    // delta train vs the union holdout, grouped by (doc_id, n_grams)
+    val dContam = train.groupMapReduce(r => (id(r), grams(r).size))(
+      r => grams(r).map(unionHold).sum)(_ + _)
+      .collect { case ((d, n), shared) if shared * 5 >= n => d }.toSeq
     // base train survivors vs the NEW holdout grams only (their shared
     // count against the old holdout is frozen in train_meta)
-    val trainGrams = readLog(s, outDir, "train_grams", GramsSchema)
-      .select("gh", "doc_id")
-    val newShared = trainGrams.join(newHold, "gh")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_new"))
-      .localCheckpoint(true)
-    // candidate-bounded fold of the meta rows the increment touches
-    val metaCand = foldLatest(
-      readLog(s, outDir, "train_meta", MetaSchema)
-        .join(newShared.select("doc_id"), Seq("doc_id"), "left_semi"),
-      Seq("doc_id"), MetaFields).localCheckpoint(true)
-    // lazy (same reason as `kept`): a filter over two checkpointed
-    // frames — its consumers re-run a delta-sized join, not the log read
-    val baseContam = metaCand.join(newShared, "doc_id")
-      .where((col("n_shared") + col("n_new")) * 5 >= col("n_grams"))
-      .select("doc_id")
+    val newShared = slice("train_grams", GramsSchema, "gh", newHold)
+      .groupMapReduce(_.getLong(1))(_ => 1L)(_ + _)
+    // the meta rows the increment touches, folded
+    val metaCand = latest(slice("train_meta", MetaSchema, "doc_id", newShared.keys))
+    val baseContam = metaCand.collect {
+      case (d, m) if (m.getLong(2) + newShared(d)) * 5 >= m.getInt(1) => d }.toSet
 
     // ---- the final-layout edit set ----
     // a replaced keeper may not be IN final (the base run could have
@@ -1009,13 +929,10 @@ object DeltaIngest {
     // what the layout actually holds — the FOLDED view (the base dir
     // alone would re-tombstone docs earlier batches already removed,
     // inflating nRemoved and the manifest's dead rows)
-    val finalIds = readFinal(s, outDir).select("doc_id")
-    val removed = replacedBase.select("doc_id").unionAll(baseContam).distinct()
-      .join(finalIds, Seq("doc_id"), "left_semi").localCheckpoint(true)
-    val appendRows = withSplit
-      .join(dContam, Seq("doc_id"), "left_anti")
-      .select("doc_id", "text", "lang", "n_chars", "split", "source")
-      .localCheckpoint(true)
+    val removed = bounded(finalAt(s, outDir, allowed).select("doc_id"), "doc_id",
+      replaced.map(_._1) ++ baseContam).map(_.getLong(0)).distinct.toSeq
+    val isRemoved = removed.toSet
+    val appendRows = kept.filterNot(r => dContam.contains(id(r)))
 
     // ---- the index edit set (one segment per table) ----
     // EVERY gated delta doc joins the matching corpus (clean text +
@@ -1032,146 +949,87 @@ object DeltaIngest {
     // replaced SINGLETON (no cluster row) instead joins the winning
     // delta cluster through a members row — exactly where from-scratch
     // would put it.
-    val winners = election.where(col("delta_wins"))
-      .join(matchedKeepers, "dcid")
-      .groupBy(col("k_id").as("keeper_id"))
-      .agg(max(struct(col("d_best_len"), (-col("d_best_id")).as("nd"),
-        col("dcid"))).as("b"))
-      .select(col("keeper_id"), (-col("b.nd")).as("new_keeper_id"),
-        col("b.d_best_len").as("new_keeper_len"), col("b.dcid").as("new_dcid"))
-      .localCheckpoint(true)
-    val deltaClusterKeepers = election
-      .join(winners.select(col("keeper_id").as("b_best_id"),
-        col("new_keeper_id"), col("new_keeper_len")), Seq("b_best_id"), "left")
-      .select(
-        col("dcid").as("cluster_id"),
-        when(col("delta_wins"), col("d_best_id"))
-          .otherwise(coalesce(col("new_keeper_id"), col("b_best_id")))
-          .as("keeper_id"),
-        when(col("delta_wins"), col("d_best_len"))
-          .otherwise(coalesce(col("new_keeper_len"), col("b_best_len")))
-          .as("keeper_len"))
-    val replacedClusterKeepers = replacedBase.where(col("k_cluster").isNotNull)
-      .join(winners.select(col("keeper_id").as("doc_id"), col("new_keeper_id"),
-        col("new_keeper_len")), "doc_id")
-      .select(col("k_cluster").as("cluster_id"),
-        col("new_keeper_id").as("keeper_id"),
-        col("new_keeper_len").as("keeper_len"))
-      .distinct()
-    val keepersSeg = deltaClusterKeepers.unionAll(replacedClusterKeepers)
-    val singletonMembers = replacedBase.where(col("k_cluster").isNull)
-      .join(winners.select(col("keeper_id").as("doc_id"), col("new_dcid")), "doc_id")
-      .select(col("doc_id"), col("new_dcid").as("cluster_id"))
-      .distinct() // the same singleton can be matched by several winning clusters
-    val membersSeg = dClusters.select(col("doc_id"), col("dcid").as("cluster_id"))
-      .unionAll(singletonMembers)
-    val newTrainDocs = withSplit.where(col("split") === "train")
-      .join(dContam, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val newTrainShared = newTrainDocs
-      .select(col("doc_id"), explode(col("gs")).as("gh"))
-      .join(unionHold, "gh")
-      .groupBy("doc_id").agg(count(lit(1)).as("ns"))
-    // train_meta increment: cumulative rows for base docs the new
-    // holdout touched, tombstones for removed docs, fresh rows for the
-    // delta's surviving train docs
-    val metaSeg = metaCand.join(newShared, "doc_id")
-      .join(removed, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("n_grams"),
-        (col("n_shared") + col("n_new")).as("n_shared"), lit(false).as("dead"))
-      .unionAll(removed.select(col("doc_id"), lit(0).as("n_grams"),
-        lit(0L).as("n_shared"), lit(true).as("dead")))
-      .unionAll(newTrainDocs
-        .select(col("doc_id"), size(col("gs")).as("n_grams"))
-        .join(newTrainShared, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_grams"),
-          coalesce(col("ns"), lit(0L)).as("n_shared"), lit(false).as("dead")))
+    // per replaced keeper: (new keeper len, -new keeper id, its dcid)
+    val winners = replaced.groupMapReduce(_._1) { case (_, _, c) =>
+      (len(dBest(c)), -id(dBest(c)), c) }(Ordering[(Long, Long, Long)].max)
+    val keepersSeg = dBest.toSeq.map { case (c, r) =>
+      val (kLen, kNegId) =
+        if (wins(c)) (len(r), -id(r))
+        else winners.get(-baseBest(c)._2).fold(baseBest(c))(w => (w._1, w._2))
+      Row(c, -kNegId, kLen)
+    } ++ replaced.collect { case (k, Some(cl), _) =>
+      (cl, -winners(k)._2, winners(k)._1) }.distinct.map(Row.fromTuple)
+    // the same singleton can be matched by several winning clusters
+    val singletonMembers = replaced.collect { case (k, None, _) => (k, winners(k)._3) }.distinct
+    val newTrain = train.filterNot(r => dContam.contains(id(r)))
+    val newTrainShared = newTrain.groupMapReduce(id)(r => grams(r).map(unionHold).sum)(_ + _)
     // the shard modulus is the BASE run's recorded layout (CurationRun
     // `_layout`), never a literal: a delta routed mod 16 into a 64-shard
     // manifest would silently desync loader-side shard pruning
     val manifestShards = CurationRun.layoutShards(s, outDir)
-    val manifestSeg = appendRows.select(col("doc_id"), col("split"), col("source"),
-        col("n_chars"),
-        (col("doc_id") % 1000003L * 2654435761L % manifestShards)
-          .cast("int").as("shard"),
-        lit(false).as("dead"))
-      .unionAll(removed.select(col("doc_id"), lit("").as("split"),
-        lit("").as("source"), lit(0L).as("n_chars"), lit(0).as("shard"),
-        lit(true).as("dead")))
 
     // ---- stage everything, seal, report ----
-    stage(gated.select("doc_id", "text", "lang", "source", "n_chars"), "clean")
-    stage(dBands.select("doc_id", "band", "bkey"), "bands")
-    stage(membersSeg, "members")
-    stage(keepersSeg, "keepers")
-    stage(metaSeg, "train_meta")
-    stage(newTrainDocs.select(col("doc_id"), explode(col("gs")).as("gh"))
-      .select("gh", "doc_id"), "train_grams")
-    stage(newHold.select("gh"), "holdout_grams")
-    stage(appendRows, "append_rows")
-    stage(removed, "removed")
-    stage(manifestSeg, "manifest_inc")
+    stage(gated.map(r => Row(id(r), r(1), r(2), r(3), len(r))), CleanSchema, "clean")
+    stage(gated.flatMap(r => seqOf[String](r, 6).zipWithIndex.map { case (k, b) =>
+      Row(id(r), b, k) }), BandsSchema, "bands")
+    stage(gated.map(r => Row(id(r), find(id(r)))) ++ singletonMembers.map(Row.fromTuple),
+      MembersSchema, "members")
+    stage(keepersSeg, KeepersSchema, "keepers")
+    // train_meta increment: cumulative rows for base docs the new
+    // holdout touched, tombstones for removed docs, fresh rows for the
+    // delta's surviving train docs
+    stage(metaCand.toSeq.collect { case (d, m) if !isRemoved(d) =>
+        Row(d, m.getInt(1), m.getLong(2) + newShared(d), false) } ++
+      removed.map(d => Row(d, 0, 0L, true)) ++
+      newTrain.map(r => Row(id(r), grams(r).size, newTrainShared(id(r)), false)),
+      MetaSchema, "train_meta")
+    stage(newTrain.flatMap(r => grams(r).map(g => Row(g, id(r)))), GramsSchema, "train_grams")
+    stage(newHold.map(Row(_)), HoldSchema, "holdout_grams")
+    stage(appendRows.map(r => Row(id(r), split(r), r(3), len(r),
+        (id(r) % 1000003L * 2654435761L % manifestShards).toInt, false)) ++
+      removed.map(d => Row(d, "", "", 0L, 0, true)), ManifestLogSchema, "manifest_inc")
     // the final-layout edit increment: one O(delta) segment — appends
     // live, removals tombstoned (their payload columns never matter:
     // the fold drops dead rows and the reader's anti-join works on ids)
-    stage(appendRows.withColumn("dead", lit(false))
-      .unionAll(removed.select(col("doc_id"),
-        lit(null).cast(StringType).as("text"),
-        lit(null).cast(StringType).as("lang"), lit(0L).as("n_chars"),
-        lit(null).cast(StringType).as("split"),
-        lit(null).cast(StringType).as("source"), lit(true).as("dead"))),
-      "final_inc")
-    // Report counters: nothing above branches on a count, so every one
-    // of them rides ONE batched job here (a union of single-row
-    // aggregates over the already-checkpointed frames) instead of ~10
-    // driver-synchronous count() round trips — at small deltas that
-    // per-job scheduling overhead was the dominant ingest cost.
-    def cnt(name: String, df: DataFrame): DataFrame =
-      df.groupBy().agg(count(lit(1)).as("n")).select(lit(name).as("k"), col("n"))
-    val m = cnt("nDelta", delta)
-      .unionAll(cnt("nGated", gated))
-      .unionAll(cnt("nKept", kept))
-      .unionAll(cnt("nContamDelta", dContam))
-      .unionAll(cnt("nContamBase", baseContam))
-      .unionAll(cnt("nRemoved", removed))
-      .unionAll(cnt("nReplacedInFinal",
-        removed.join(baseContam, Seq("doc_id"), "left_anti")))
-      .unionAll(cnt("nAppended", appendRows))
-      .unionAll(withSplit.groupBy(concat(lit("split_"), col("split")).as("k"))
-        .agg(count(lit(1)).as("n")))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    stage(appendRows.map(r => Row(id(r), r(1), r(2), len(r), split(r), r(3), false)) ++
+      removed.map(d => Row(d, null, null, 0L, null, null, true)), FinalLogSchema, "final_inc")
+    // the report's counters come from the driver's collections
     val report = DeltaReport(
-      nDelta = m("nDelta"),
-      nQualityFail = m("nDelta") - m("nGated"),
-      nDupDropped = m("nGated") - m("nKept"),
-      nReplacedBase = m("nReplacedInFinal"),
-      nTrain = m.getOrElse("split_train", 0L),
-      nVal = m.getOrElse("split_val", 0L),
-      nTest = m.getOrElse("split_test", 0L),
-      nContaminatedDelta = m("nContamDelta"),
-      nContaminatedBase = m("nContamBase"),
-      nAppended = m("nAppended"),
-      nRemoved = m("nRemoved"))
-    import s.implicits._
-    Seq((report.nDelta, report.nQualityFail, report.nDupDropped,
-      report.nReplacedBase, report.nTrain, report.nVal, report.nTest,
-      report.nContaminatedDelta, report.nContaminatedBase, report.nAppended,
-      report.nRemoved, seg))
-      .toDF("nDelta", "nQualityFail", "nDupDropped", "nReplacedBase",
-        "nTrain", "nVal", "nTest", "nContaminatedDelta", "nContaminatedBase",
-        "nAppended", "nRemoved", "seg")
-      .write.mode("overwrite").parquet(s"$staging/report.parquet")
+      nDelta = rows.length,
+      nQualityFail = rows.length - gated.size,
+      nDupDropped = gated.size - kept.size,
+      nReplacedBase = removed.count(!baseContam(_)),
+      nTrain = train.size,
+      nVal = hold.count(split(_) == "val"),
+      nTest = hold.count(split(_) == "test"),
+      nContaminatedDelta = dContam.size,
+      nContaminatedBase = baseContam.size,
+      nAppended = appendRows.size,
+      nRemoved = removed.size)
+    stage(Seq(Row.fromSeq(report.productIterator.toSeq :+ seg)), ReportSchema, "report.parquet")
     f.create(new Path(s"$staging/_STAGED"), true).close()
     report
+  }
+
+  /** [[SegmentLog.foldLatest]] on the driver, for a key-bounded read of
+    * a log table's `(key, fields…, seg)` rows: per key the max of
+    * (seg, fields…) in column order wins, and a winning tombstone
+    * (`dead`) drops. */
+  private def latest(rows: Array[Row]): Map[Long, Row] = {
+    def cmp(a: Row, b: Row) = ((a.length - 1) +: (1 until a.length - 1)).iterator
+      .map(i => a.getAs[Comparable[Any]](i).compareTo(b.get(i))).find(_ != 0).getOrElse(0)
+    rows.groupBy(_.getLong(0)).view.mapValues(_.reduce((a, b) => if (cmp(a, b) >= 0) a else b))
+      .filterNot { case (_, r) => r.schema.fieldNames.contains("dead") && r.getAs[Boolean]("dead") }
+      .toMap
   }
 
   // ---------------------------------------------------------------
   // phase 2: apply the sealed edit set (idempotent)
   // ---------------------------------------------------------------
 
-  private[graft] def applyStaged(s: SparkSession, outDir: String, key: String): Unit = {
-    applyEdits(s, outDir, key)
-    val seg = stagedSeg(s, outDir, key)
+  private[graft] def applyStaged(s: SparkSession, outDir: String, key: String,
+      seg: Long): Unit = {
+    applyEdits(s, outDir, key, seg)
     commitMarker(s, outDir, key, seg)
     val staging = new Path(stagingDir(outDir, key))
     fs(s, staging).delete(staging, true)
@@ -1180,10 +1038,10 @@ object DeltaIngest {
   /** Everything [[applyStaged]] does EXCEPT the commit marker and the
     * staging cleanup — split out so the crash-replay spec can stop a
     * batch exactly between its last layout edit and its commit. */
-  private[graft] def applyEdits(s: SparkSession, outDir: String, key: String): Unit = {
+  private[graft] def applyEdits(s: SparkSession, outDir: String, key: String,
+      seg: Long): Unit = {
     val staging = stagingDir(outDir, key)
     require(CurationRun.exists(s, s"$staging/_STAGED"), s"staging for $key not sealed")
-    val seg = stagedSeg(s, outDir, key)
     val idx = idxDir(outDir)
 
     // (1) index + manifest segments: move staged tables into seg

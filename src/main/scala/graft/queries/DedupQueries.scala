@@ -111,8 +111,8 @@ object DedupQueries {
 
   /** The signature columns of a doc's text — ONE definition behind
     * [[shinglesOf]], [[minhashSigOf]] and DeltaIngest's driver-side
-    * probe (which evaluates them over a local relation): the distinct
-    * word-3-shingles, and the 4 MinHash band keys ([[MinhashBands]]
+    * probe and edit set (which evaluate them over a local relation):
+    * the distinct word-3-shingles, and the 4 MinHash band keys ([[MinhashBands]]
     * order; null when the text has no shingle). Callers register the
     * expressions first (`TextExpressions.register`). */
   private def shingles3(text: Column): Column =

@@ -1,8 +1,10 @@
 package graft
 
-import graft.operators.{CurationRun, DeltaIngest}
-import org.apache.spark.sql.DataFrame
+import graft.operators.{CurationRun, DeltaIngest, SegmentLog}
+import graft.queries.DedupQueries
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental curation must reproduce the from-scratch run on the
@@ -44,7 +46,13 @@ class DeltaIngestSpec extends AnyFunSuite {
   private val filler = (0 until 150).map { k =>
     Doc(1500 + k, words(100 + k), if (k % 3 == 0) "books" else "web")
   }
-  private val baseDocs = Seq(a1, b1, e1, gHold, tTrain) ++ filler
+  // two 2-member base clusters, keepers p1 and q1 (train: a replaced
+  // holdout keeper's grams would stay indexed, divergence (c))
+  private val p1 = Doc(pickId(1700, _ < 80), words(94), "web")
+  private val p2 = Doc(pickId(p1.id + 1, _ < 80), words(94).dropRight(1), "web")
+  private val q1 = Doc(pickId(p2.id + 1, _ < 80), words(95), "books")
+  private val q2 = Doc(pickId(q1.id + 1, _ < 80), words(95).dropRight(1), "books")
+  private val baseDocs = Seq(a1, b1, e1, gHold, tTrain, p1, p2, q1, q2) ++ filler
 
   // delta
   private val a2 = Doc(pickId(3000, _ => true), a1.ws.dropRight(1), "web") // loses to a1
@@ -63,6 +71,22 @@ class DeltaIngestSpec extends AnyFunSuite {
     words(12, 9) ++ gHold.ws.slice(5, 17) ++ words(13, 9), "web")
   private val deltaDocs = Seq(a2, b2, c1, c2, dNew, e2, hHold, fTrain)
 
+  // a second delta (ingested after the first, on the shared run): a
+  // within-delta chain A~B, B~C with A≁C (3-shingle Jaccard 0.56, 0.56,
+  // 0.27); a doc id twice in one delta, both rows losing to a longer
+  // delta twin; a base SINGLETON keeper beaten by a delta doc; one delta
+  // doc bridging base clusters P and Q and beating both keepers
+  private val chainWs = words(90, 46)
+  private val cA = Doc(pickId(3400, _ < 80), chainWs.slice(0, 30), "web")
+  private val cB = Doc(pickId(cA.id + 1, _ < 80), chainWs.slice(8, 38), "web")
+  private val cC = Doc(pickId(cB.id + 1, _ < 80), chainWs.slice(16, 46), "web")
+  private val xDup = Doc(pickId(cC.id + 1, _ < 80), words(91), "web")
+  private val xTwin = Doc(pickId(xDup.id + 1, _ < 80), words(91) ++ words(92, 3), "web")
+  private val fS = filler.drop(10).find(d => bucket(d.id) < 80).get
+  private val fS2 = Doc(pickId(xTwin.id + 1, _ < 80), fS.ws ++ words(93, 4), fS.source)
+  private val bridge = Doc(pickId(fS2.id + 1, _ < 80), words(94) ++ words(95), "web")
+  private val delta2Docs = Seq(cA, cB, cC, xDup, xDup, xTwin, fS2, bridge)
+
   private def toDF(docs: Seq[Doc]): DataFrame = {
     import spark.implicits._
     docs.map(d => (d.id, d.text, "en", d.source, d.text.length.toLong))
@@ -77,6 +101,13 @@ class DeltaIngestSpec extends AnyFunSuite {
     DeltaIngest.readFinal(spark, dir)
       .select("doc_id", "split", "source").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+
+  // readManifest folds the incremental manifest log; on a plain
+  // from-scratch dir it degrades to the base manifest — one reader
+  private def manifestRows(dir: String): Set[(Long, String, String, Long, Int)] =
+    DeltaIngest.readManifest(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getLong(3), r.getInt(4))).toSet
 
   // shared across tests: base run + index + one delta ingest
   private lazy val run = {
@@ -123,12 +154,43 @@ class DeltaIngestSpec extends AnyFunSuite {
     CurationRun.run(spark, in2, out2)
     assert(finalRows(out) == finalRows(out2),
       "incremental final layout diverged from the from-scratch union run")
-    // readManifest folds the incremental manifest log; on the plain
-    // from-scratch dir it degrades to the base manifest — one reader
-    def manifest(d: String) = DeltaIngest.readManifest(spark, d)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3), r.getInt(4))).toSet
-    assert(manifest(out) == manifest(out2), "manifest diverged")
+    assert(manifestRows(out) == manifestRows(out2), "manifest diverged")
+  }
+
+  test("a second delta — chain, duplicate ids, replaced singleton, bridged clusters — equals from-scratch, in <= 30 Spark jobs") {
+    val (out, _, _) = run
+    def shingles(d: Doc) = d.ws.sliding(3).map(_.mkString(" ")).toSet
+    def jac(a: Doc, b: Doc) =
+      (shingles(a) & shingles(b)).size.toDouble / (shingles(a) | shingles(b)).size
+    assert(jac(cA, cB) >= 0.3 && jac(cB, cC) >= 0.3 && jac(cA, cC) < 0.3,
+      "the chain's ends must not be near-duplicates of each other")
+    val (report, jobs) = TestSpark.jobsOf(
+      DeltaIngest.ingestDelta(spark, toDF(delta2Docs), out))
+    assert(jobs <= 30, s"one ingestDelta ran $jobs Spark jobs")
+    // kept: the chain's best, xTwin, fS2, bridge; replaced: fS, p1, q1
+    assert(report.nDupDropped == 4 && report.nReplacedBase == 3 &&
+      report.nAppended == 4 && report.consistent, s"$report")
+    val in2 = tmp("union2_in"); val out2 = tmp("union2_out")
+    writeInput(baseDocs ++ deltaDocs ++ delta2Docs, in2)
+    CurationRun.run(spark, in2, out2)
+    assert(finalRows(out) == finalRows(out2),
+      "incremental final layout diverged from the from-scratch union run")
+    assert(manifestRows(out) == manifestRows(out2), "manifest diverged")
+    // the chain is ONE cluster labelled by its smallest id
+    val chain = Seq(cA, cB, cC).map(_.id)
+    val members = SegmentLog.foldLatest(DeltaIngest.readLog(spark, out, "members",
+        StructType.fromDDL("doc_id long, cluster_id long")), Seq("doc_id"), Seq("cluster_id"))
+      .where(col("doc_id").isin(chain: _*)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(members == chain.map(_ -> chain.min).toMap, s"chain labels: $members")
+    // the replaced singleton joins its winner's cluster (a members row);
+    // both bridged clusters re-point their keeper at the bridge
+    import spark.implicits._
+    val keeperOf = DeltaIngest.explainDocs(spark,
+        Seq(fS.id, p1.id, p2.id, q1.id, q2.id).toDF("doc_id"), out)
+      .collect().map(r => r.getLong(0) -> (r.getString(1), r.get(3))).toMap
+    assert(keeperOf == Map(fS.id -> ("dup_dropped", fS2.id)) ++
+      Seq(p1, p2, q1, q2).map(_.id -> ("dup_dropped", bridge.id)), s"$keeperOf")
   }
 
   test("base TEXT is read candidate-bounded: non-candidate texts are never consulted") {
@@ -264,7 +326,7 @@ class DeltaIngestSpec extends AnyFunSuite {
     val cleanReport = DeltaIngest.ingestDelta(spark, toDF(deltaDocs), ref)
     val key = "batch-7"
     DeltaIngest.computeAndStage(spark, toDF(deltaDocs), out, key, seg = 1L)
-    DeltaIngest.applyEdits(spark, out, key) // ...crash here, marker never lands
+    DeltaIngest.applyEdits(spark, out, key, seg = 1L) // ...crash here, marker never lands
     // the appended rows are on disk but UNCOMMITTED: readers must not
     // see them (snapshot isolation via the marker set)
     assert(DeltaIngest.readManifest(spark, out)
@@ -292,7 +354,7 @@ class DeltaIngestSpec extends AnyFunSuite {
     DeltaIngest.buildIndex(spark, out)
     val key = "batch-3"
     DeltaIngest.computeAndStage(spark, toDF(deltaDocs), out, key, seg = 1L)
-    DeltaIngest.applyEdits(spark, out, key) // crash before commit
+    DeltaIngest.applyEdits(spark, out, key, seg = 1L) // crash before commit
     // a later DIRECT ingest must first converge the crashed batch, then
     // compose on top of it
     val z = Doc(pickId(4500, _ => true), dNew.ws.dropRight(2), "web") // loses to dNew
@@ -332,10 +394,10 @@ class DeltaIngestSpec extends AnyFunSuite {
     def hits(df: DataFrame): Seq[Hit] =
       df.select("doc_id", "base_id", "jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
-    // the reference: stage 2a/2b's plan over the same docs
+    // the reference: the ingest's former stage 2a/2b plans over the same docs
     def reference(docs: DataFrame): (Seq[Hit], Long) = {
-      val bp = DeltaIngest.baseProbe(spark, docs, out)
-      (hits(DeltaIngest.verifiedJaccard(
+      val bp = DeltaIngestSpec.baseProbe(spark, docs, out)
+      (hits(DeltaIngestSpec.verifiedJaccard(
         bp.xCand.select(col("delta_id").as("doc_a"), col("base_id").as("doc_b")),
         bp.dShingles, bp.bShingles, bp.dCnt, bp.bCnt)
         .select(col("doc_a").as("doc_id"), col("doc_b").as("base_id"), col("jaccard"))),
@@ -639,4 +701,79 @@ class DeltaIngestSpec extends AnyFunSuite {
     assert(idWidthLogScan,
       s"the edited-id anti-join side must scan the log id-width:\n${p.take(3000)}")
   }
+}
+
+/** The reference [[DeltaIngest.probeNearDups]] must equal: the band
+  * probe + verification as Spark plans, which the ingest ran as its
+  * stage 2a/2b before it computed its edit set on the driver. Both sign
+  * with the same [[DedupQueries]] columns and share the hot-bucket cap
+  * and the Jaccard threshold:
+  *   - the input docs' shingles, counts, and LSH band rows;
+  *   - `dProbe`: band rows after the hot-bucket cap, mirroring
+  *     lshVerifiedPairs (HotBucketCap) over the COMBINED input+base
+  *     occupancy — counted candidate-bounded (the base side is
+  *     semi-joined to the input's bucket keys first). The UNFILTERED
+  *     `dBands` still feeds occupancy;
+  *   - `xCand`: (delta_id, base_id) banded candidates vs the index;
+  *   - `baseCandDocs`/`bShingles`/`bCnt`: base text read ONLY for the
+  *     candidate ids — from the base run's stage-1 table plus every
+  *     committed delta's clean segment (immutable forever). */
+object DeltaIngestSpec {
+  final case class BaseProbe(
+      dShingles: DataFrame, dCnt: DataFrame, dBands: DataFrame,
+      dProbe: DataFrame, xCand: DataFrame, baseCandDocs: DataFrame,
+      bShingles: DataFrame, bCnt: DataFrame)
+
+  def baseProbe(s: SparkSession, docs: DataFrame, outDir: String): BaseProbe = {
+    val dShingles = DedupQueries.shinglesOf(s, docs).localCheckpoint(true)
+    val dCnt = dShingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val dBands = DedupQueries.minhashSigOf(s, docs)
+      .select(col("doc_id"), posexplode(
+        array(DedupQueries.MinhashBands.map(b => col(b._1)): _*))
+        .as(Seq("band", "bkey")))
+      .localCheckpoint(true)
+    val allowed = DeltaIngest.committedSegs(s, outDir)
+    val baseBandsIdx = DeltaIngest.readLog(s, outDir, "bands", DeltaIngest.BandsSchema, Some(allowed))
+      .select("doc_id", "band", "bkey")
+    val deltaBuckets = dBands.select("band", "bkey").distinct()
+    val baseOcc = baseBandsIdx.join(deltaBuckets, Seq("band", "bkey"), "left_semi")
+      .groupBy("band", "bkey").agg(count(lit(1)).as("n_base"))
+    val hotBuckets = dBands.groupBy("band", "bkey")
+      .agg(count(lit(1)).as("n_delta"))
+      .join(baseOcc, Seq("band", "bkey"), "left")
+      .where(col("n_delta") + coalesce(col("n_base"), lit(0L)) > DedupQueries.HotBucketCap)
+      .select("band", "bkey")
+    val dProbe = dBands.join(broadcast(hotBuckets), Seq("band", "bkey"), "left_anti")
+      .localCheckpoint(true)
+    val xCand = dProbe
+      .join(baseBandsIdx
+          .select(col("band"), col("bkey"), col("doc_id").as("base_id")),
+        Seq("band", "bkey"))
+      .select(col("doc_id").as("delta_id"), col("base_id")).distinct()
+      .localCheckpoint(true)
+    val baseCandDocs = DeltaIngest.gatedCorpus(s, outDir, allowed)
+      .join(xCand.select(col("base_id").as("doc_id")).distinct(), Seq("doc_id"),
+        "left_semi")
+      .localCheckpoint(true)
+    val bShingles = DedupQueries.shinglesOf(s, baseCandDocs).localCheckpoint(true)
+    val bCnt = bShingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    BaseProbe(dShingles, dCnt, dBands, dProbe, xCand, baseCandDocs,
+      bShingles, bCnt)
+  }
+
+  /** Exact shingle-Jaccard >= JaccardThreshold on candidates only —
+    * the lshVerifiedPairs predicate, verbatim. Output: (doc_a, doc_b,
+    * jaccard). */
+  def verifiedJaccard(cand: DataFrame, shA: DataFrame, shB: DataFrame,
+      cntA: DataFrame, cntB: DataFrame): DataFrame =
+    cand
+      .join(shA.select(col("doc_id").as("doc_a"), col("s")), "doc_a")
+      .join(shB.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared"))
+      .join(cntA.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+      .join(cntB.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        (col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
+          .as("jaccard"))
+      .where(col("jaccard") >= DedupQueries.JaccardThreshold)
 }

@@ -5,9 +5,10 @@
 // so file paths match), then writes to $PLAN_OUT the explain("formatted")
 // of readFinal, readManifest, assignments, knnQuery and adcKnn (flat and
 // sprobe) and TextSearchIndex.query, the served rows (probeNearDups's too),
-// and each dir's listing after an ingest and after a compaction (uuids
-// and time-stamped batch keys masked). Two builds' outputs diff clean
-// once plan_id, RDD ids and source line numbers are normalized.
+// the sorted rows of every segment DeltaIngest's ingests placed, and each
+// dir's listing after an ingest and after a compaction (uuids and
+// time-stamped batch keys masked). Two builds' outputs diff clean once
+// plan_id, RDD ids and source line numbers are normalized.
 import graft.operators._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -53,6 +54,22 @@ CurationRun.run(spark, s"$root/in", run)
 DeltaIngest.buildIndex(spark, run)
 DeltaIngest.ingestDelta(spark, docs(1000L to 1040L, id => if (id % 5 == 0) Some(id - 990) else None), run)
 DeltaIngest.ingestDelta(spark, docs(2000L to 2030L, id => if (id % 4 == 0) Some(id - 1990) else None), run)
+// a third delta with the edit shapes the first two lack: docs beating a
+// base keeper, a within-delta pair, and a doc id twice
+def frame(rows: Seq[(Long, Seq[String])]) = rows.map { case (id, ws) =>
+  (id, ws.mkString(" "), "en", if (id % 3 == 0) "books" else "web", ws.mkString(" ").length.toLong)
+}.toDF("doc_id", "text", "lang", "source", "n_chars")
+DeltaIngest.ingestDelta(spark, frame((0 until 6).map(k => (4000L + k, words(20 + k) ++ words(4000 + k, 2))) ++
+  Seq((4100L, words(4100)), (4101L, words(4100) ++ words(4101, 2)), (4102L, words(4102)),
+    (4102L, words(4102)))), run)
+// the rows of every segment the ingests placed
+for (t <- Seq("bands", "members", "keepers", "train_meta", "train_grams", "holdout_grams",
+    "clean_delta").map(t => s"index/$t") ++ Seq("manifest_log", "final_log");
+    seg <- new File(s"$run/$t").list.filter(_.startsWith("seg=")).sorted
+    if seg != "seg=0") {
+  pw.println(s"===== ROWS $t/$seg")
+  spark.read.parquet(s"$run/$t/$seg").collect().map(_.toString).sorted.foreach(pw.println)
+}
 plan("readFinal", DeltaIngest.readFinal(spark, run))
 plan("readManifest", DeltaIngest.readManifest(spark, run))
 // probeNearDups answers from the driver (its plan is a LocalTableScan of
